@@ -212,10 +212,12 @@ object Pretrain {
       clean.withColumn("toks", TextFunctions.tokenCount(col("text"))),
       "doc_id", "toks", "source", cfg.budgetTokens,
       salt = cfg.mixSalt, hashFn = Dedup.md5Lower60))
+    // fingerprints fold ids with xor, never a sum: 60-bit md5-derived ids
+    // (a warc-ingest crawl's) overflow a long sum from 8 docs on
     val r09 = budgeted.agg(
       count(lit(1)).as("n"),
       coalesce(sum(col("toks")), lit(0L)).as("mass"),
-      coalesce(sum(col("doc_id")), lit(0L)).as("fp"))
+      coalesce(expr("bit_xor(doc_id)"), lit(0L)).as("fp"))
       .select(lit("09_budget").as("stage"), col("n"), col("mass"), col("fp"))
 
     // 10 sequence packing (FIFO-by-id bins per source)
@@ -224,7 +226,7 @@ object Pretrain {
     val r10 = packed.agg(
       countDistinct(concat_ws(":", col("source"), col("bin"))).as("n"),
       coalesce(sum(col("bin")), lit(0L)).as("mass"),
-      coalesce(sum(col("doc_id") * (col("bin") + 1)), lit(0L)).as("fp"))
+      coalesce(expr("bit_xor(doc_id + bin)"), lit(0L)).as("fp"))
       .select(lit("10_pack").as("stage"), col("n"), col("mass"), col("fp"))
 
     // 11 deterministic epoch shards: (shard, order_key) is the permutation

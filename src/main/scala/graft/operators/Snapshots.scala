@@ -326,9 +326,12 @@ object Snapshots {
     *
     * `preserved` rows keep their recorded `version` (carried references +
     * re-referenced MOR entries); `entries` are fresh files retagged to the
-    * committing version. Returns None iff `txn` was already committed by a
-    * concurrent writer (re-checked INSIDE the lock — the exactly-once
-    * guard under concurrency).
+    * committing version. `conflicts` is a predicate over manifest file
+    * rows, true for an appended file that might hold a row the op should
+    * have seen ([[boxPred]] of its predicate/key bounds); None for a
+    * row-preserving replace, which commutes with any append. Returns None
+    * iff `txn` was already committed by a concurrent writer (re-checked
+    * INSIDE the lock — the exactly-once guard under concurrency).
     */
   private def commitRebase(
       spark: SparkSession,
@@ -337,9 +340,7 @@ object Snapshots {
       op: String,
       preserved: DataFrame,
       entries: DataFrame,
-      box: Map[String, (Double, Double)],
-      strBox: Map[String, (Option[String], Option[String])],
-      allowOverlap: Boolean,
+      conflicts: Option[Column],
       txn: Option[(String, Long)],
       schemaJson: Option[String],
       clusterBy: Option[String] = None): Option[Long] = {
@@ -361,7 +362,7 @@ object Snapshots {
         val extra = fileRows(spark, table, cur)
           .filter(col("version") > plannedParent)
           .select(fileColNames.head, fileColNames.tail: _*)
-        if (!allowOverlap && pruned(extra, box, strBox).limit(1).count() > 0)
+        if (conflicts.exists(c => extra.filter(c).limit(1).count() > 0))
           throw new java.util.ConcurrentModificationException(
             s"snapshot $op at $table planned against v$plannedParent but a " +
               s"concurrent append through v$cur wrote files its predicate/key " +
@@ -751,11 +752,12 @@ object Snapshots {
   }
 
   /** Write a fully-assembled manifest (one JSON line per row, commit row
-    * first) as `v`'s single part file — the driver-local twin of
-    * [[writeManifest]]'s Spark write, with the same leftover-attempt
-    * cleanup and create-if-absent discipline. Only an append's commit
-    * section uses this (its manifest is parent's lines + a handful of
-    * entries); every rewriting op keeps the distributed path.
+    * first) as `v`'s single part file, with the leftover-attempt cleanup
+    * and create-if-absent discipline of a Spark write. Every commit lands
+    * its manifest here: an append from the parent's raw lines plus its
+    * entries ([[commitStagedOpt]]), every other op from the lines
+    * [[writeManifest]] collects; only a manifest past
+    * [[MaxLocalManifestBytes]] takes the distributed JSON write instead.
     */
   private def writeManifestLinesLocal(
       spark: SparkSession, table: String, v: Long, lines: Iterator[String]): Unit = {
@@ -1180,11 +1182,12 @@ object Snapshots {
       c: Column): Map[String, (Option[String], Option[String])] =
     org.apache.spark.sql.graft.PredicateBox.extractStr(c)
 
-  /** File entries of `v` that survive stats pruning for `box` (numeric)
-    * and `strBox` (string): a file is skipped iff for SOME constrained
-    * column its recorded [min,max] misses the box (missing stats keep the
-    * file — conservative; string bounds are write-truncated, which only
-    * widens the recorded interval, so skipping stays sound).
+  /** Stats pruning as a predicate over manifest file rows, true iff the
+    * file may hold a row inside `box` (numeric) and `strBox` (string): a
+    * file is skipped iff for SOME constrained column its recorded
+    * [min,max] misses the box (missing stats keep the file — conservative;
+    * string bounds are write-truncated, which only widens the recorded
+    * interval, so skipping stays sound). An empty box keeps every file.
     *
     * The comparison widens the box by ~2 double ulps each side: both the
     * per-file stats (cast to Double at write) and the box endpoints
@@ -1200,22 +1203,20 @@ object Snapshots {
   private def widenHi(hi: Double): Double =
     hi + math.max(math.abs(hi) * 5e-16, java.lang.Double.MIN_NORMAL)
 
-  private def pruned(
-      files: DataFrame,
+  private def boxPred(
       box: Map[String, (Double, Double)],
-      strBox: Map[String, (Option[String], Option[String])] = Map.empty): DataFrame = {
-    val afterNum = box.foldLeft(files) { case (df, (c, (lo, hi))) =>
-      df.filter(
-        element_at(col("stats_min"), c).isNull ||
-          (element_at(col("stats_max"), c) >= lit(widenLo(lo)) &&
-            element_at(col("stats_min"), c) <= lit(widenHi(hi))))
+      strBox: Map[String, (Option[String], Option[String])]): Column = {
+    val num = box.toSeq.map { case (c, (lo, hi)) =>
+      element_at(col("stats_min"), c).isNull ||
+        (element_at(col("stats_max"), c) >= lit(widenLo(lo)) &&
+          element_at(col("stats_min"), c) <= lit(widenHi(hi)))
     }
-    strBox.foldLeft(afterNum) { case (df, (c, (lo, hi))) =>
-      df.filter(
-        element_at(col("stats_min_str"), c).isNull ||
-          (lo.map(l => element_at(col("stats_max_str"), c) >= lit(l)).getOrElse(lit(true)) &&
-            hi.map(h => element_at(col("stats_min_str"), c) <= lit(h)).getOrElse(lit(true))))
+    val str = strBox.toSeq.map { case (c, (lo, hi)) =>
+      element_at(col("stats_min_str"), c).isNull ||
+        (lo.map(l => element_at(col("stats_max_str"), c) >= lit(l)).getOrElse(lit(true)) &&
+          hi.map(h => element_at(col("stats_min_str"), c) <= lit(h)).getOrElse(lit(true)))
     }
+    (num ++ str).reduceOption(_ && _).getOrElse(lit(true))
   }
 
   /** Read a manifest file set WITH provenance columns `__file` (parquet
@@ -1231,12 +1232,19 @@ object Snapshots {
     */
   private def readFilesMeta(
       spark: SparkSession, table: String, files: DataFrame,
-      schema: Option[StructType] = None): DataFrame = {
+      schema: Option[StructType] = None): DataFrame =
     // paths-only collect of the post-pruning survivors — the same driver
     // cost Spark's own file index pays at plan time
-    val rows = files.select("path", "dv_path").collect()
-    val paths = rows.map(r => absPath(table, r.getString(0)))
-    val dvPaths = rows.flatMap(r => Option(r.getString(1))).distinct.map(p => absPath(table, p))
+    readPathsMeta(spark, table,
+      files.select("path", "dv_path").collect().map(r => (r.getString(0), r.getString(1))),
+      schema)
+
+  /** [[readFilesMeta]] over already-collected `(path, dv_path)` rows. */
+  private def readPathsMeta(
+      spark: SparkSession, table: String, rows: Seq[(String, String)],
+      schema: Option[StructType]): DataFrame = {
+    val paths = rows.map(r => absPath(table, r._1))
+    val dvPaths = rows.flatMap(r => Option(r._2)).distinct.map(p => absPath(table, p))
     if (paths.isEmpty)
       schema.map(s => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1314,7 +1322,7 @@ object Snapshots {
     val base = org.apache.spark.sql.graft.SnapshotRelation.frame(
       spark, tablePath, schema, totalBytes,
       () => collectFiles(files),
-      (box, strBox) => collectFiles(pruned(files, box, strBox)))
+      (box, strBox) => collectFiles(files.filter(boxPred(box, strBox))))
     if (dvPaths.isEmpty) base
     else {
       val dv = spark.read.parquet(dvPaths.toIndexedSeq: _*)
@@ -1338,7 +1346,7 @@ object Snapshots {
     val files = fileRows(spark, table, v).cache()
     try {
       val box = predicateBox(cond)
-      val keep = pruned(files, box, predicateStrBox(cond))
+      val keep = files.filter(boxPred(box, predicateStrBox(cond)))
       val total = files.count()
       val kept = keep.count()
       ScanPlan(total, kept,
@@ -1365,7 +1373,7 @@ object Snapshots {
     try {
       val box = predicateBox(cond)
       val strBox = predicateStrBox(cond)
-      val candidates = pruned(files, box, strBox).cache()
+      val candidates = files.filter(boxPred(box, strBox)).cache()
       val untouchedCount = files.count() - candidates.count()
       val untouched = files.join(candidates.select("path"), Seq("path"), "left_anti")
       val survivors = {
@@ -1387,7 +1395,7 @@ object Snapshots {
             .select(fileColNames.head, fileColNames.tail: _*)
       val vc = commitRebase(spark, table, parent, "delete",
         untouched.select(fileColNames.head, fileColNames.tail: _*), entries,
-        box, strBox, allowOverlap = false, txn = None,
+        Some(boxPred(box, strBox)), txn = None,
         schemaJson = schema.map(_.json)).get
       val rewritten = candidates.count()
       candidates.unpersist()
@@ -1442,24 +1450,27 @@ object Snapshots {
     val files = fileRows(spark, table, parent).cache()
     val schema = tableSchema(spark, table, Some(parent))
     try {
-      val box = predicateBox(cond)
-      val strBox = predicateStrBox(cond)
-      val candidates = pruned(files, box, strBox)
-      val cand = readFilesMeta(spark, table, candidates, schema)
+      val mayMatch = boxPred(predicateBox(cond), predicateStrBox(cond))
+      val (nFiles, cands) = candidateFiles(files, mayMatch)
+      val cand = readPathsMeta(spark, table, cands, schema)
       val newPos =
-        if (cand.columns.isEmpty) null
-        else cand.filter(cond)
-          .select(col("__file").as("file"), col("__pos").as("pos"))
-      commitMorDelete(spark, table, parent, files, newPos, schema, box, strBox)
+        if (cands.isEmpty || cand.columns.isEmpty) null
+        else cand.filter(cond).select(col("__file").as("file"), col("__pos").as("pos"),
+          lit(null).cast(StringType).as("__mkey"))
+      val m = commitMorDelete(spark, table, parent, "delete", files, nFiles, cands, newPos,
+        files.limit(0).select(fileColNames.head, fileColNames.tail: _*),
+        schema.map(_.json), mayMatch, txn = None).get
+      MorDeleteStats(m.version, m.filesWithDv, m.filesUntouched, m.rowsDeleted)
     } finally { files.unpersist(); () }
   }
 
   /** Keyed merge-on-read delete — the CDC-delete face of
-    * [[deleteWhereMor]]: rows whose key columns match a row of `keys`
-    * mark as deleted positions; no data file rewrites. Candidates are
-    * dismissed from the manifest by the key set's numeric/string bounds
-    * (exactly [[merge]]'s step 1), scanned once on a DV-applied read, and
-    * semi-joined against the distinct key set (broadcast when small).
+    * [[deleteWhereMor]], and [[mergeMor]] with no upserts: rows whose key
+    * columns match a row of `keys` mark as deleted positions; no data file
+    * rewrites. Candidates are dismissed from the manifest by the key set's
+    * numeric/string bounds (exactly [[merge]]'s step 1), scanned once on a
+    * DV-applied read, and semi-joined against the key set (broadcast when
+    * small).
     */
   def deleteKeysMor(
       spark: SparkSession,
@@ -1467,127 +1478,287 @@ object Snapshots {
       keys: DataFrame,
       keyCols: Seq[String]): MorDeleteStats = {
     require(keyCols.nonEmpty, "deleteKeysMor needs at least one key column")
-    val parent = requireVersion(table)
-    val files = fileRows(spark, table, parent).cache()
-    val schema = tableSchema(spark, table, Some(parent))
-    val keySet = keys.select(keyCols.map(col): _*).distinct().cache()
-    try {
-      val (box, strBox) = keyBounds(keySet, keyCols)
-      val candidates = pruned(files, box, strBox)
-      val cand = readFilesMeta(spark, table, candidates, schema)
-      val newPos =
-        if (cand.columns.isEmpty) null
-        else cand.join(keySet, keyCols, "left_semi")
-          .select(col("__file").as("file"), col("__pos").as("pos"))
-      commitMorDelete(spark, table, parent, files, newPos, schema, box, strBox)
-    } finally { files.unpersist(); keySet.unpersist(); () }
+    val m = mergeMor(spark, table, None, Nil, Some(keys), keyCols).get
+    MorDeleteStats(m.version, m.filesWithDv, m.filesUntouched, m.rowsDeleted)
   }
 
-  /** Shared commit half of the merge-on-read deletes: write the merged
-    * position-delete dataset for `newPos` (null = no candidate files) and
-    * commit the re-referenced manifest.
+  /** Outcome of a [[mergeMor]]: the new version, the files that gained a
+    * (new or re-merged) deletion vector vs carried untouched, and the row
+    * split: live rows deleted (their retire key matched, or the upsert
+    * matching their key is itself retired), live rows replaced by a landing
+    * upsert row, and landing upsert rows less the distinct keys of the
+    * replaced rows (the inserts).
+    */
+  final case class MergeMorStats(
+      version: Long, filesWithDv: Long, filesUntouched: Long,
+      rowsDeleted: Long, rowsUpdated: Long, rowsInserted: Long)
+
+  /** Keyed MERGE plus keyed delete as ONE merge-on-read commit — a
+    * batch's upserts and retirements under one manifest and one pointer
+    * swap, with no data file rewritten:
+    *
+    *  - every live row whose `keyCols` match an `upserts` row, or whose
+    *    `retireCols` match a `retire` row, gains a deletion-vector
+    *    position (one DV-applied scan of the stats-pruned candidates,
+    *    semi-joined against both key sets);
+    *  - the `upserts` rows, minus those whose `retireCols` are retired,
+    *    land as one fresh file group.
+    *
+    * The table that results is exactly [[merge]] by `keyCols` followed by
+    * [[deleteKeysMor]] by `retireCols`, but the write is ∝ the batch, not
+    * the files holding its keys, and it is one atomic commit instead of
+    * two. Source keys must be unique (the MERGE precondition). Recorded as
+    * op `merge`, or `delete` when `upserts` is None ([[deleteKeysMor]]).
+    * `txn` tags the commit exactly-once as in [[mergeOpt]]: None iff the
+    * transaction was already committed by a concurrent writer. A
+    * concurrent append conflicts iff its stats box may hold an upsert key
+    * or a retired key.
+    */
+  def mergeMor(
+      spark: SparkSession,
+      table: String,
+      upserts: Option[DataFrame],
+      keyCols: Seq[String],
+      retire: Option[DataFrame],
+      retireCols: Seq[String],
+      statsCols: Seq[String] = null,
+      txn: Option[(String, Long)] = None): Option[MergeMorStats] = {
+    require(upserts.isEmpty || keyCols.nonEmpty, "mergeMor upserts need a key column")
+    require(retire.isEmpty || retireCols.nonEmpty, "mergeMor retirement needs a key column")
+    val parent = requireVersion(table)
+    val files = fileRows(spark, table, parent).cache()
+    val tblSchema = tableSchema(spark, table, Some(parent))
+    // the source feeds the key bounds, the position join and the appended
+    // group: computed once
+    val src = upserts.map(_.cache())
+    try {
+      // ONE aggregate bounds both key sets (bounds need no distinct); an
+      // empty set matches no file
+      val Seq(uBox, rBox) = keyBoxes(Seq(src -> keyCols, retire -> retireCols))
+      val uKeys = src.filter(_ => uBox.isDefined).map(_.select(keyCols.map(col): _*))
+      val rKeys = retire.filter(_ => rBox.isDefined).map(_.select(retireCols.map(col): _*))
+      // the upserts that land: those whose own retire key is not retired
+      val landing = src.map(s => rKeys.fold(s)(rk => s.join(rk, retireCols, "left_anti")))
+      val mayMatch = Seq(uBox, rBox).flatten.map(_.pred).reduceOption(_ || _)
+        .getOrElse(lit(false))
+      val (nFiles, cands) = candidateFiles(files, mayMatch)
+      val entries = (landing, uBox) match {
+        case (Some(l), Some(b)) =>
+          // files sized by rows like a clustered append's (the append
+          // default of 1M rows a file), not by the cached source's
+          // partition count
+          val maxRows = 1000000L
+          writeFileGroup(spark, table, parent + 1,
+            l.coalesce(((b.rows + maxRows - 1) / maxRows).toInt),
+            Option(statsCols).getOrElse(defaultStatsCols(l)), maxRows)
+            .select(fileColNames.head, fileColNames.tail: _*)
+        case _ => files.limit(0).select(fileColNames.head, fileColNames.tail: _*)
+      }
+      // an upsert was retired iff fewer rows landed than the source holds
+      // (footer-built entries are a local relation: this collect runs no job)
+      val someRetired = uBox.exists(_.rows > entries.select("rows").collect().map(_.getLong(0)).sum)
+      val cand = readPathsMeta(spark, table, cands, tblSchema)
+      val newPos =
+        if (cands.isEmpty || cand.columns.isEmpty) null
+        else {
+          val mkey = struct(keyCols.map(col): _*)
+          val noKey = lit(null).cast(
+            if (uKeys.isEmpty) StringType else cand.select(mkey).schema.head.dataType)
+          def pos(df: DataFrame, k: Column) =
+            df.select(col("__file").as("file"), col("__pos").as("pos"), k.as("__mkey"))
+          // disjoint semi/anti-join branches (no distinct, no dedup): rows
+          // whose retire key matches; rows an upsert key matches that are
+          // not retired — replaced when that upsert lands, deleted when it
+          // was itself retired (merge-then-delete drops both rows); that
+          // split costs two more joins, so it runs only when some upsert
+          // was retired
+          val retired = rKeys.map(rk => pos(cand.join(rk, retireCols, "left_semi"), noKey))
+          val hit = uKeys.map { uk =>
+            val h = cand.join(uk, keyCols, "left_semi")
+            rKeys.fold(h)(rk => h.join(rk, retireCols, "left_anti"))
+          }
+          val (replaced, dropped) = (hit, landing) match {
+            case (Some(h), Some(l)) if someRetired =>
+              val lk = l.select(keyCols.map(col): _*)
+              (Some(pos(h.join(lk, keyCols, "left_semi"), mkey)),
+                Some(pos(h.join(lk, keyCols, "left_anti"), noKey)))
+            case _ => (hit.map(pos(_, mkey)), None)
+          }
+          (retired ++ replaced ++ dropped).reduce(_ unionByName _)
+        }
+      val schema = upserts.fold(tblSchema)(u => Some(evolveSchema(tblSchema, u.schema)))
+      commitMorDelete(spark, table, parent, if (upserts.isDefined) "merge" else "delete",
+        files, nFiles, cands, newPos, entries, schema.map(_.json), mayMatch, txn)
+    } finally {
+      files.unpersist(); src.foreach(_.unpersist())
+    }
+  }
+
+  /** One collect over a version's cached file rows: the file count and the
+    * `(path, dv_path)` of the files `mayMatch` keeps — a merge-on-read
+    * op's candidate scan list and its stats' file total in one job.
+    */
+  private def candidateFiles(
+      files: DataFrame, mayMatch: Column): (Long, Seq[(String, String)]) = {
+    val rows = files.select(col("path"), col("dv_path"),
+      coalesce(mayMatch, lit(false)).as("__cand")).collect()
+    (rows.length.toLong,
+      rows.toSeq.filter(_.getBoolean(2)).map(r => (r.getString(0), r.getString(1))))
+  }
+
+  /** Shared commit half of the merge-on-read ops: write the merged
+    * position-delete dataset for `newPos` — `(file, pos, __mkey)` rows,
+    * null when no file is a candidate; `__mkey` is the matched upsert key
+    * of a replaced row, null for a retired or predicate-deleted one — and
+    * commit the re-referenced manifest plus the appended `entries` (the
+    * upsert file group; empty for a pure delete). The stats come from one
+    * aggregate over the cached positions (its per-file counts, broadcast
+    * as a small relation, also set each hit file's `dv_rows` in the
+    * manifest) and the entries' recorded row counts; nothing re-counts the
+    * files or the rows kept.
     */
   private def commitMorDelete(
       spark: SparkSession,
       table: String,
       parent: Long,
+      op: String,
       files: DataFrame,
+      nFiles: Long,
+      cands: Seq[(String, String)],
       newPos0: DataFrame,
-      schema: Option[StructType],
-      box: Map[String, (Double, Double)],
-      strBox: Map[String, (Option[String], Option[String])]): MorDeleteStats = {
+      entries: DataFrame,
+      schemaJson: Option[String],
+      conflicts: Column,
+      txn: Option[(String, Long)]): Option[MergeMorStats] = {
     val v = parent + 1
-    val noEntries = files.limit(0).select(fileColNames.head, fileColNames.tail: _*)
+    // footer-built entries are a local relation: this collect runs no job
+    val appended = entries.select("rows").collect().map(_.getLong(0)).sum
     val newPos = if (newPos0 == null) null else newPos0.cache()
-    val deleted = if (newPos == null) 0L else newPos.count()
-      if (deleted == 0L) {
-        // no matches: an empty delete still commits (history records it);
-        // a concurrent append whose files might match is still a conflict
-        // (those rows should have died in this delete)
-        val vc = commitRebase(spark, table, parent, "delete",
-          files.select(fileColNames.head, fileColNames.tail: _*), noEntries,
-          box, strBox, allowOverlap = false, txn = None,
-          schemaJson = schema.map(_.json)).get
-        if (newPos != null) newPos.unpersist(): Unit
-        return MorDeleteStats(vc, 0L, files.count(), 0L)
-      }
-      val hitFiles = newPos.select("file").distinct()
-      val bn = element_at(split(col("path"), "/"), -1)
-      // files gaining a vector, matched relationally by basename (never an
-      // isin — the hit set is unbounded at scale)
-      val touched = files.withColumn("__bn", bn)
-        .join(hitFiles.withColumnRenamed("file", "__bn"), Seq("__bn"), "inner").cache()
-      // old vectors of the touched files fold into the merged dataset;
-      // distinct dv dirs are bounded by the table's delete-commit count
-      val oldDvPaths = touched.filter(col("dv_path").isNotNull)
-        .select("dv_path").distinct().collect().map(r => absPath(table, r.getString(0)))
-      val oldPos =
-        if (oldDvPaths.isEmpty) newPos.limit(0)
-        else spark.read.parquet(oldDvPaths.toIndexedSeq: _*)
-          .select(col("file"), col("pos"))
-          .join(hitFiles, Seq("file"), "left_semi")
-      // disjoint by construction: newPos was computed on a DV-applied read
-      val allPos = newPos.unionByName(oldPos)
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val rel = f"data/c$v%08d-$token.dv"
-      val nDvFiles = math.max(1L, (deleted + 9999999L) / 10000000L).toInt
-      allPos.coalesce(nDvFiles).write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$rel")
-      // per-file merged counts from the SAME plan the write ran (newPos is
-      // cached; oldPos is a bounded dv scan) — re-reading the just-written
-      // dataset paid an extra listing + scan job per delete for identical
-      // numbers
-      val counts = allPos
-        .groupBy(col("file")).agg(count(lit(1)).as("__n"))
-      val touchedNew = touched
-        .join(counts.withColumnRenamed("file", "__bn"), Seq("__bn"))
-        .withColumn("dv_path", lit(rel))
-        .withColumn("dv_rows", col("__n"))
-        .select(fileColNames.head, fileColNames.tail: _*)
-      val untouched = files.join(touched.select("path"), Seq("path"), "left_anti")
-      // touchedNew rows keep their recorded added_v (only the dv reference
-      // changed), so they ride `preserved`, not `entries`
-      val vc = commitRebase(spark, table, parent, "delete",
-        untouched.select(fileColNames.head, fileColNames.tail: _*)
-          .unionByName(touchedNew), noEntries,
-        box, strBox, allowOverlap = false, txn = None,
-        schemaJson = schema.map(_.json)).get
-    val nTouched = touched.count()
-    touched.unpersist()
-    newPos.unpersist()
-    MorDeleteStats(vc, nTouched, files.count() - nTouched, deleted)
+    try {
+      // ONE aggregate over the cached positions: a row per hit file (its
+      // new positions) plus the rollup's grand-total row (all positions, the
+      // replaced ones, and their distinct keys — fewer than the replaced
+      // rows only if the table holds duplicate keys)
+      val agg = if (newPos == null) Array.empty[org.apache.spark.sql.Row]
+        else newPos.rollup(col("file"))
+          .agg(count(lit(1)), count(col("__mkey")), countDistinct(col("__mkey")),
+            grouping_id().as("__g"))
+          .collect()
+      def isTotal(r: org.apache.spark.sql.Row) = r.getAs[Number](4).longValue != 0L
+      val perFile: Map[String, Long] =
+        agg.filterNot(isTotal).map(r => r.getString(0) -> r.getLong(1)).toMap
+      val (deleted, updated, matchedKeys) = agg.find(isTotal)
+        .fold((0L, 0L, 0L))(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+      // no matches: the commit still lands (history records it, appended
+      // entries ride it); a concurrent append whose files might match is
+      // still a conflict (those rows should have died in this commit)
+      val preserved =
+        if (deleted == 0L) files.select(fileColNames.head, fileColNames.tail: _*)
+        else {
+          def baseName(p: String) = p.substring(p.lastIndexOf('/') + 1)
+          val dvOf: Map[String, String] =
+            cands.collect { case (p, dv) if dv != null => baseName(p) -> dv }.toMap
+          // the hit files as a small relation broadcast once, never a plan
+          // literal (the hit set is bounded by the collected candidates, but
+          // not small at scale): basename, new positions, and the dir of its
+          // own old vector dataset (dir names are unique: each carries its
+          // commit's token)
+          val hits = broadcast(spark.createDataFrame(perFile.toSeq.map { case (f, n) =>
+            (f, n, dvOf.get(f).map(baseName).orNull)
+          }).toDF("__bn", "__hitN", "__dvDir"))
+          val pos = newPos.select("file", "pos")
+          // each hit file's old vector folds into the merged dataset, read
+          // from THAT file's own dataset only (another candidate's dataset
+          // may hold an older subset of the same file's positions)
+          val oldDirs = perFile.keys.flatMap(dvOf.get).toSeq.distinct
+          val oldPos =
+            if (oldDirs.isEmpty) pos.limit(0)
+            else spark.read.parquet(oldDirs.map(absPath(table, _)): _*)
+              .select(col("file"), col("pos"),
+                element_at(split(col("_metadata.file_path"), "/"), -2).as("__dir"))
+              .join(hits, col("file") === col("__bn") && col("__dir") === col("__dvDir"),
+                "left_semi")
+              .select("file", "pos")
+          // disjoint by construction: newPos was computed on a DV-applied read
+          val token = java.util.UUID.randomUUID().toString.take(8)
+          val rel = f"data/c$v%08d-$token.dv"
+          val nDvFiles = math.max(1L, (deleted + 9999999L) / 10000000L).toInt
+          pos.unionByName(oldPos).coalesce(nDvFiles)
+            .write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$rel")
+          // a hit file's merged count is its old vector's plus its new
+          // positions; its rows keep their recorded added_v (only the dv
+          // reference changed), so they ride `preserved`, not `entries`
+          val hitN = col("__hitN")
+          files.withColumn("__bn", element_at(split(col("path"), "/"), -1))
+            .join(hits.select("__bn", "__hitN"), Seq("__bn"), "left")
+            .select(fileColNames.map {
+              case "dv_path" =>
+                when(hitN.isNotNull, lit(rel)).otherwise(col("dv_path")).as("dv_path")
+              case "dv_rows" =>
+                when(hitN.isNotNull, coalesce(col("dv_rows"), lit(0L)) + hitN)
+                  .otherwise(col("dv_rows")).as("dv_rows")
+              case c => col(c)
+            }: _*)
+        }
+      commitRebase(spark, table, parent, op, preserved, entries, Some(conflicts), txn,
+        schemaJson)
+        .map(vc => MergeMorStats(vc, perFile.size.toLong, nFiles - perFile.size,
+          deleted - updated, updated, appended - matchedKeys))
+    } finally if (newPos != null) newPos.unpersist(): Unit
   }
 
-  /** Per-key-column numeric + string min/max of a key set — the
-    * manifest-side dismissal boxes [[merge]] and [[deleteKeysMor]] prune
-    * candidate files with (two tiny aggregates over the distinct keys).
+  /** A key set's row count and per-key-column bounds: numeric min/max
+    * and string min/max — the manifest-side dismissal box of the files
+    * that may hold one of its keys ([[pred]]).
     */
-  private def keyBounds(srcKeys: DataFrame, keyCols: Seq[String])
-      : (Map[String, (Double, Double)], Map[String, (Option[String], Option[String])]) = {
-    val numKeys = keyCols.filter(k =>
-      srcKeys.schema.fields.exists(f => f.name == k && f.dataType.isInstanceOf[NumericType]))
-    val strKeys = keyCols.filter(k =>
-      srcKeys.schema.fields.exists(f => f.name == k && f.dataType == StringType))
-    if (numKeys.isEmpty && strKeys.isEmpty) return (Map.empty, Map.empty)
-    // ONE aggregate job for both families — numeric and string boxes used
-    // to run as two separate heads, two jobs per merge/delete (guide §1.2:
-    // don't pay two passes where one answers both)
-    val aggs =
-      numKeys.flatMap(k =>
-        Seq(min(col(k)).cast(DoubleType), max(col(k)).cast(DoubleType))) ++
-        strKeys.flatMap(k => Seq(min(col(k)), max(col(k))))
-    val r = srcKeys.agg(aggs.head, aggs.tail: _*).head()
-    val box: Map[String, (Double, Double)] =
-      numKeys.zipWithIndex.collect {
-        case (k, i) if !r.isNullAt(2 * i) && !r.isNullAt(2 * i + 1) =>
-          k -> ((r.getDouble(2 * i), r.getDouble(2 * i + 1)))
+  private final case class KeyBox(
+      rows: Long,
+      num: Map[String, (Double, Double)],
+      str: Map[String, (Option[String], Option[String])]) {
+    def pred: Column = boxPred(num, str)
+  }
+
+  /** The [[KeyBox]] of each key set that [[merge]] and [[mergeMor]] prune
+    * candidate files with, in ONE aggregate job over every set (a union
+    * with each set's columns renamed apart). None for an absent or empty
+    * set: it matches no file. A set whose keys have no bounds (all null,
+    * or a type without stats) gets empty maps, which keep every file.
+    */
+  private def keyBoxes(sets: Seq[(Option[DataFrame], Seq[String])]): Seq[Option[KeyBox]] = {
+    val present = sets.zipWithIndex.collect { case ((Some(df), ks), i) =>
+      val num = ks.filter(k => df.schema(k).dataType.isInstanceOf[NumericType])
+      val str = ks.filter(k => df.schema(k).dataType == StringType)
+      (df, i, num, str)
+    }
+    if (present.isEmpty) return sets.map(_ => None)
+    def kc(i: Int, k: String) = col(s"__k${i}_$k")
+    val tagged = present.map { case (df, i, num, str) =>
+      df.select(((num ++ str).map(k => col(k).as(s"__k${i}_$k")) :+ lit(i).as("__set")): _*)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    // per set: its row count, then min/max per numeric key (as double) and
+    // per string key
+    val aggs = present.flatMap { case (_, i, num, str) =>
+      count(when(col("__set") === i, 1)) +:
+        (num.flatMap(k => Seq(min(kc(i, k)).cast(DoubleType), max(kc(i, k)).cast(DoubleType))) ++
+          str.flatMap(k => Seq(min(kc(i, k)), max(kc(i, k)))))
+    }
+    val r = tagged.agg(aggs.head, aggs.tail: _*).head()
+    var at = 0
+    val boxes = present.map { case (_, i, num, str) =>
+      val n = r.getLong(at)
+      val numBox = num.zipWithIndex.collect {
+        case (k, j) if !r.isNullAt(at + 1 + 2 * j) && !r.isNullAt(at + 2 + 2 * j) =>
+          k -> ((r.getDouble(at + 1 + 2 * j), r.getDouble(at + 2 + 2 * j)))
       }.toMap
-    val off = 2 * numKeys.size
-    val strBox: Map[String, (Option[String], Option[String])] =
-      strKeys.zipWithIndex.collect {
-        case (k, i) if !r.isNullAt(off + 2 * i) && !r.isNullAt(off + 2 * i + 1) =>
-          k -> ((Option(r.getString(off + 2 * i)), Option(r.getString(off + 2 * i + 1))))
+      val off = at + 1 + 2 * num.size
+      val strBox = str.zipWithIndex.collect {
+        case (k, j) if !r.isNullAt(off + 2 * j) && !r.isNullAt(off + 2 * j + 1) =>
+          k -> ((Option(r.getString(off + 2 * j)), Option(r.getString(off + 2 * j + 1))))
       }.toMap
-    (box, strBox)
+      at = off + 2 * str.size
+      i -> (if (n == 0L) None else Some(KeyBox(n, numBox, strBox)))
+    }.toMap
+    sets.indices.map(i => boxes.getOrElse(i, None))
   }
 
   /** Outcome of a [[merge]]: the new version, the copy-on-write file
@@ -1654,10 +1825,12 @@ object Snapshots {
     val tblSchema = tableSchema(spark, table, Some(parent))
     val newSchema = evolveSchema(tblSchema, source.schema)
     val srcKeys = source.select(keyCols.map(col): _*).distinct().cache()
+    var candidates: DataFrame = null
     try {
-      // (1) manifest-side dismissal by the source's key bounds
-      val (box, strBox) = keyBounds(srcKeys, keyCols)
-      val candidates = pruned(files, box, strBox).cache()
+      // (1) manifest-side dismissal by the source's key bounds (an empty
+      // source matches no file)
+      val mayMatch = keyBoxes(Seq(Some(srcKeys) -> keyCols)).head.fold(lit(false))(_.pred)
+      candidates = files.filter(mayMatch).cache()
       // (2) key-only scan of the candidates: which files hold a matched key?
       // (files are matched by part-file basename — globally unique, each
       // carries its write job's UUID — so no path-prefix arithmetic; the
@@ -1705,11 +1878,14 @@ object Snapshots {
           .select(fileColNames.head, fileColNames.tail: _*)
       commitRebase(spark, table, parent, "merge",
         untouched.select(fileColNames.head, fileColNames.tail: _*), entries,
-        box, strBox, allowOverlap = false, txn,
+        Some(mayMatch), txn,
         schemaJson = Some(newSchema.json))
         .map(vc => MergeStats(vc, touchedNames.size.toLong,
           files.count() - touchedNames.size, rowsUpdated, rowsInserted))
-    } finally { files.unpersist(); srcKeys.unpersist(); () }
+    } finally {
+      files.unpersist(); srcKeys.unpersist()
+      if (candidates != null) candidates.unpersist(): Unit
+    }
   }
 
   /** Conform `df` to `schema`: schema's columns in order, missing ones
@@ -1829,17 +2005,25 @@ object Snapshots {
               val dvDelta: Seq[DataFrame] =
                 if (changed.isEmpty) Nil
                 else {
-                  val bns = changed
-                    .select(element_at(split(col("path"), "/"), -1).as("file"))
+                  def lastPart(c: Column) = element_at(split(c, "/"), -1)
+                  // each file's positions from ITS OWN dataset only: an older
+                  // dataset another file still references may hold a subset
+                  // of them (dataset dir names are unique per commit); the
+                  // distinct drops repeats an older writer folded into one
+                  // dataset
                   def posOf(c: String): DataFrame = {
-                    val dirs = changed.filter(col(c).isNotNull).select(c).distinct()
+                    val refs = changed.filter(col(c).isNotNull)
+                    val dirs = refs.select(c).distinct()
                       .collect().map(r => absPath(table, r.getString(0)))
                     if (dirs.isEmpty) {
                       import spark.implicits._
                       spark.emptyDataset[(String, Long)].toDF("file", "pos")
                     } else spark.read.parquet(dirs.toIndexedSeq: _*)
-                      .select(col("file"), col("pos"))
-                      .join(bns, Seq("file"), "left_semi")
+                      .select(col("file"), col("pos"),
+                        element_at(split(col("_metadata.file_path"), "/"), -2).as("__dir"))
+                      .join(refs.select(lastPart(col("path")).as("file"),
+                        lastPart(col(c)).as("__dir")), Seq("file", "__dir"), "left_semi")
+                      .select("file", "pos").distinct()
                   }
                   val newPos = posOf("dv_path")
                   val oldPos = posOf("__old_dv")
@@ -1904,20 +2088,18 @@ object Snapshots {
   final case class CdcStats(
       version: Long, rowsDeleted: Long, rowsUpdated: Long, rowsInserted: Long)
 
-  /** Apply one CDC batch — keyed upserts AND deletes — exactly once: rows
-    * whose `opCol` value is `delete` retire by key (merge-on-read: zero
-    * file rewrites, [[deleteKeysMor]]); every other row MERGEs by key.
-    * One state per key per batch (the standard CDC-apply precondition —
-    * reduce a multi-event stream to latest-per-key upstream).
+  /** Apply one CDC batch — keyed upserts AND deletes — exactly once, as
+    * ONE merge-on-read commit ([[mergeMor]]): rows whose `opCol` value is
+    * `delete` retire by key, every other row upserts by key; no data file
+    * rewrites. One state per key per batch (the standard CDC-apply
+    * precondition — reduce a multi-event stream to latest-per-key
+    * upstream).
     *
-    * Exactly-once discipline: the MERGE (the batch's LAST commit)
-    * carries the `(appId, txnV)` transaction marker, so a replayed batch
-    * is detected and skipped ENTIRELY (returns None). A crash BETWEEN
-    * the delete and the merge replays both: the delete re-runs
-    * idempotently (its keys are already gone — a DV-applied scan finds
-    * no positions, committing an empty delete), then the merge lands.
-    * A delete-only batch merges an empty upsert set purely to carry the
-    * marker.
+    * Exactly-once discipline: the commit carries the `(appId, txnV)`
+    * transaction marker, so a replayed batch is detected and skipped
+    * ENTIRELY (returns None) — there is no half-applied batch to replay,
+    * the deletes and upserts land under one pointer swap. A delete-only
+    * batch commits its retirements with the marker the same way.
     */
   def applyCdcIdempotent(
       spark: SparkSession,
@@ -1929,16 +2111,13 @@ object Snapshots {
       txnV: Long): Option[CdcStats] = {
     require(batch.columns.contains(opCol), s"batch lacks op column '$opCol'")
     if (lastTxn(spark, table, appId).exists(_ >= txnV)) return None
-    val dels = batch.filter(col(opCol) === "delete").select(keyCols.map(col): _*)
-    val d =
-      if (dels.isEmpty) MorDeleteStats(requireVersion(table), 0L, 0L, 0L)
-      else deleteKeysMor(spark, table, dels, keyCols)
-    val ups = batch.filter(col(opCol) =!= "delete").drop(opCol)
     // None here means a concurrent same-appId writer landed this txn while
-    // we ran: our delete half re-ran idempotently (keys already gone) and
-    // the winner's merge carried the marker — the batch is applied once
-    mergeOpt(spark, table, ups, keyCols, txn = Some((appId, txnV)))
-      .map(m => CdcStats(m.version, d.rowsDeleted, m.rowsUpdated, m.rowsInserted))
+    // we ran (re-checked inside the commit lock): the batch is applied once
+    mergeMor(spark, table,
+      Some(batch.filter(col(opCol) =!= "delete").drop(opCol)), keyCols,
+      Some(batch.filter(col(opCol) === "delete").select(keyCols.map(col): _*)), keyCols,
+      txn = Some((appId, txnV)))
+      .map(m => CdcStats(m.version, m.rowsDeleted, m.rowsUpdated, m.rowsInserted))
   }
 
   /** Rows added by APPEND commits in `(fromV, toV]` — the incremental read:
@@ -2122,11 +2301,10 @@ object Snapshots {
       spark, table, v, laidOut, stats, targetRecordsPerFile)
       .select(fileColNames.head, fileColNames.tail: _*)
     // a replace is row-preserving on the files it planned against, so it
-    // commutes with ANY concurrent append (allowOverlap): the appended
-    // files carry forward and every commit lands
+    // commutes with ANY concurrent append (no conflict predicate): the
+    // appended files carry forward and every commit lands
     commitRebase(spark, table, parent, "replace",
-      entries.limit(0), entries,
-      Map.empty, Map.empty, allowOverlap = true, txn = None,
+      entries.limit(0), entries, conflicts = None, txn = None,
       schemaJson = tableSchema(spark, table, Some(parent)).map(_.json),
       clusterBy = Option(clusterBySpec).filter(_.nonEmpty)).get
   }
@@ -2316,7 +2494,7 @@ object Snapshots {
       // small files just wait for the next maintenance round)
       val vc = commitRebase(spark, table, parent, "replace",
         carried.select(fileColNames.head, fileColNames.tail: _*), entries,
-        Map.empty, Map.empty, allowOverlap = true, txn = None,
+        conflicts = None, txn = None,
         schemaJson = schema.map(_.json)).get
       val nCarried = files.count() - nFold
       foldable.unpersist()

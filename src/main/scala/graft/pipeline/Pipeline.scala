@@ -14,8 +14,9 @@ import graft.state.PipelineState
   * `orchestration/pipeline_orchestrator.py:116-373`, traced in SURVEY §3.1):
   *
   *   identify (J1 anti-join vs ledger) → chunk (per-document flatMap) →
-  *   embed (mapPartitions batches) → upsert (partition-scoped overwrite) →
-  *   cleanup removed (K3 anti-join) → commit ledger (K4).
+  *   embed (mapPartitions batches) → store delta (upsert + K3 cleanup of
+  *   failed and removed docs, one [[KeyedChunkStore.applyDelta]] call) →
+  *   commit ledger (K4).
   *
   * The reference commits state after every file; our unit of durability is
   * the batch — the observable invariant (state ⟺ store consistency, failed
@@ -125,41 +126,46 @@ object Pipeline {
     val nToProcess = toProcess.count()
 
     // Stage 3: chunk (with per-doc failure quarantine) → positional ids →
-    // embed → upsert. A failed doc writes no chunks at all — the reference's
-    // no-partial-chunks invariant holds because the upsert happens after the
-    // whole document chunked successfully.
+    // embed. A failed doc writes no chunks at all — the reference's
+    // no-partial-chunks invariant holds because a document's chunks enter
+    // the delta only after the whole document chunked successfully.
     var chunksWritten = 0L
+    var attempts: org.apache.spark.sql.Dataset[ChunkAttempt] = null
     var failures: DataFrame = null
     var nFailed = 0L
+    var enriched: DataFrame = null
     if (nToProcess > 0) {
       import spark.implicits._
-      val attempts = chunkAttempts(spark, toProcess, chunker).cache()
+      attempts = chunkAttempts(spark, toProcess, chunker).cache()
+      // ONE action over the cached attempts answers both batch counts — the
+      // chunk count comes from the pre-upsert attempts, never a store re-read
+      val counts = attempts.agg(
+        count(when(col("error").isNotNull, 1)), count(col("chunk"))).head()
+      nFailed = counts.getLong(0)
+      chunksWritten = counts.getLong(1)
       failures = attempts.filter(_.error.isDefined)
         .map(a => (a.docId, a.hash, a.error.get)).toDF("docId", "hash", "error")
-        .cache()
-      nFailed = failures.count()
       val chunks = positionalIds(attempts.filter(_.chunk.isDefined).map(_.chunk.get).toDF())
-      val enriched = Embedding.embed(chunks, "content", provider)
-        .withColumn("parentChunkId", lit(null).cast("string"))
-        .cache()
-      // batch chunk count comes from the (cached) pre-upsert frame — a
-      // post-upsert store re-read would cost a full extra scan at scale
-      chunksWritten = enriched.count()
-      store.upsert(spark, enriched)
-      enriched.unpersist()
-      // failed docs keep zero store rows (reference
-      // `file_processing_service.py:118-125` deletes ALL of a failed doc's
-      // chunks): a modified doc that fails re-chunking must not leave its
-      // stale prior-version chunks behind for consumers or Ops.validate.
-      if (nFailed > 0) store.deleteByDocuments(spark, failures.select("docId"))
-      attempts.unpersist()
+      if (chunksWritten > 0)
+        enriched = Embedding.embed(chunks, "content", provider)
+          .withColumn("parentChunkId", lit(null).cast("string"))
+          .cache()
     }
 
-    // Stage 4: cleanup removed docs from store + ledger (K3) — the tombstone
-    // set stays distributed; only bucket ids reach the driver
+    // Stage 4: the store delta — upserts, failed-doc cleanup and removed-doc
+    // cleanup (K3) land through ONE store call. Failed docs keep zero store
+    // rows (reference `file_processing_service.py:118-125` deletes ALL of a
+    // failed doc's chunks): a modified doc that fails re-chunking must not
+    // leave its stale prior-version chunks behind for consumers or
+    // Ops.validate. The tombstone set stays distributed.
     val removedDistinct = removed.select(col("docId")).distinct().cache()
     val nRemoved = removedDistinct.count()
-    if (nRemoved > 0) store.deleteByDocuments(spark, removedDistinct)
+    val retire = Seq(
+      Option(failures).filter(_ => nFailed > 0).map(_.select("docId")),
+      Some(removedDistinct).filter(_ => nRemoved > 0)).flatten.reduceOption(_ unionByName _)
+    if (enriched != null || retire.isDefined)
+      store.applyDelta(spark, Option(enriched), retire)
+    if (enriched != null) enriched.unpersist()
 
     // Commit the ledger once the store writes are durable (K4): successes →
     // processed, failures → failed (never processed, so J1 retries them).
@@ -174,7 +180,7 @@ object Pipeline {
     val afterRemoved = ledger.remove(afterFailed, removedDistinct)
     ledger.save(spark, afterRemoved)
 
-    if (failures != null) failures.unpersist()
+    if (attempts != null) attempts.unpersist()
     removedDistinct.unpersist()
     toProcess.unpersist()
     RunSummary(nToProcess - nFailed, nFailed, nRemoved, chunksWritten)

@@ -200,12 +200,15 @@ object PipelineQueries {
     ),
 
     // The SAME keyed-store protocol over the snapshot-table backend
-    // (SnapshotChunkStore): upsert = MERGE by chunkId (COW rewrite of only
-    // the files holding matched keys), delete-by-document = keyed
-    // merge-on-read delete (zero rewrites), and — free on this backend —
-    // TIME TRAVEL: n_v1 pins the store's exact pre-overlay contents. The
-    // final rollup must equal k1_k3's oracle arithmetic identically, which
-    // is the interchangeability proof for the two backends.
+    // (SnapshotChunkStore): every store call is one merge-on-read commit
+    // (Snapshots.mergeMor) — an upsert marks the replaced chunkIds'
+    // positions and appends the new chunks, a delete-by-document marks the
+    // documents' positions; zero data files rewrite, and a pipeline delta
+    // lands its upserts and deletes as ONE such commit. Free on this
+    // backend — TIME TRAVEL: n_v1 pins the store's exact pre-overlay
+    // contents. The final rollup must equal k1_k3's oracle arithmetic
+    // identically, which is the interchangeability proof for the two
+    // backends.
     "k_snapshot_store_roundtrip" -> Q(
       (s, d) => {
         val storePath = tmpDir(d, "snap_store")

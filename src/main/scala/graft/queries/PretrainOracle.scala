@@ -327,13 +327,13 @@ private[queries] object PretrainOracle {
        |UNION ALL
        |SELECT '09_budget' AS stage, CAST(count(*) AS BIGINT) AS n,
        |       CAST(coalesce(sum(toks), 0) AS BIGINT) AS mass,
-       |       CAST(coalesce(sum(doc_id), 0) AS BIGINT) AS fp
+       |       CAST(coalesce(bit_xor(doc_id), 0) AS BIGINT) AS fp
        |FROM budgeted
        |UNION ALL
        |SELECT '10_pack' AS stage,
        |       CAST(count(DISTINCT source || ':' || CAST(bin AS VARCHAR)) AS BIGINT) AS n,
        |       CAST(coalesce(sum(bin), 0) AS BIGINT) AS mass,
-       |       CAST(coalesce(sum(doc_id * (bin + 1)), 0) AS BIGINT) AS fp
+       |       CAST(coalesce(bit_xor(doc_id + bin), 0) AS BIGINT) AS fp
        |FROM packed
        |UNION ALL
        |SELECT '11_shard_' || CAST(shard AS VARCHAR) AS stage,

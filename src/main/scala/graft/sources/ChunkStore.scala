@@ -10,8 +10,11 @@ import graft.operators.Overlay
   * upsert by chunkId, delete by documentId, full scan, counts — the surface
   * every pipeline stage programs against, with two interchangeable backends:
   * the bucket-swap [[ChunkStore]] (parquet/JSONL, reference-shaped) and the
-  * snapshot-table [[SnapshotChunkStore]] (MERGE + keyed merge-on-read
-  * deletes, with time travel and a changelog for free).
+  * snapshot-table [[SnapshotChunkStore]] (each delta one merge-on-read
+  * commit, with time travel and a changelog for free). A pipeline delta
+  * lands through [[applyDelta]]: upsert by chunkId, then delete by
+  * document — as the two calls in turn on the bucket store, as one atomic
+  * commit on the snapshot store.
   */
 trait KeyedChunkStore extends Serializable {
   def path: String
@@ -24,6 +27,17 @@ trait KeyedChunkStore extends Serializable {
     * returns the number of chunks deleted.
     */
   def deleteByDocuments(spark: SparkSession, docs: DataFrame): Long
+  /** One incremental delta: upsert `upserts` by chunkId, then delete every
+    * chunk of the documents in `retireDocs` (a `docId` column) — retirement
+    * wins over a same-delta upsert. This default makes the two protocol
+    * calls in that order; a backend that can land both as one atomic
+    * commit overrides it.
+    */
+  def applyDelta(
+      spark: SparkSession, upserts: Option[DataFrame], retireDocs: Option[DataFrame]): Unit = {
+    upserts.foreach(upsert(spark, _))
+    retireDocs.foreach(deleteByDocuments(spark, _))
+  }
   /** K3 convenience for small id lists. */
   def deleteByDocumentIds(spark: SparkSession, docIds: Seq[String]): Long = {
     if (docIds.isEmpty) return 0L

@@ -11,16 +11,16 @@ import graft.operators.Snapshots
   * (reference `domain/vector_store.py:11-63`), re-expressed on the
   * engine's own table format so one discipline serves both keyed stores:
   *
-  *  - **upsert = MERGE** ([[Snapshots.merge]]): stats-pruned candidate
-  *    dismissal + key-only scan + COW rewrite of exactly the files
-  *    holding a matched chunkId — the bucket store's touch-only-your-
-  *    buckets economics, now with per-file min/max key stats instead of a
-  *    fixed hash-bucket layout, plus optimistic concurrency that REBASES
-  *    over disjoint concurrent appends instead of a store-wide lock.
-  *  - **delete-by-document = keyed merge-on-read delete**
-  *    ([[Snapshots.deleteKeysMor]]): ZERO data files rewritten; matching
-  *    positions land in a deletion vector and `maintain()` absorbs them —
-  *    where the bucket store rewrites every touched bucket.
+  *  - **a delta = ONE merge-on-read commit** ([[Snapshots.mergeMor]]):
+  *    live chunks whose chunkId an upsert carries, or whose document is
+  *    retired, gain deletion-vector positions, and the upserted chunks
+  *    land as one fresh file group — ZERO data files rewritten, one
+  *    manifest, one pointer swap per [[applyDelta]]; `maintain()` absorbs
+  *    the vectors. Candidates are dismissed by per-file min/max key stats
+  *    instead of a fixed hash-bucket layout, and optimistic concurrency
+  *    REBASES over disjoint concurrent appends instead of a store-wide
+  *    lock. `upsert` and `deleteByDocuments` are the delta's one-sided
+  *    cases — where the bucket store rewrites every touched bucket.
   *  - **Free on this backend**: time travel ([[readAt]]), the row-level
   *    changelog, exactly-once txn markers, snapshot-isolated readers, and
   *    [[SnapshotStream]] streaming consumption — none of which the
@@ -56,21 +56,30 @@ final class SnapshotChunkStore(val path: String) extends KeyedChunkStore {
   def readAt(spark: SparkSession, version: Long): DataFrame =
     Snapshots.read(spark, path, Some(version)).select(chunkCols.map(col): _*)
 
-  override def upsert(spark: SparkSession, chunks: DataFrame): Unit = {
+  override def upsert(spark: SparkSession, chunks: DataFrame): Unit =
+    applyDelta(spark, Some(chunks), None)
+
+  override def deleteByDocuments(spark: SparkSession, docs: DataFrame): Long =
+    if (!exists(spark)) 0L else commitDelta(spark, None, Some(docs)).rowsDeleted
+
+  override def applyDelta(
+      spark: SparkSession, upserts: Option[DataFrame], retireDocs: Option[DataFrame]): Unit =
+    if (upserts.isDefined || (retireDocs.isDefined && exists(spark)))
+      commitDelta(spark, upserts, retireDocs): Unit
+
+  private def commitDelta(
+      spark: SparkSession, upserts: Option[DataFrame], retireDocs: Option[DataFrame]
+  ): Snapshots.MergeMorStats = {
     ensure(spark)
     // MERGE requires unique source keys; resolve within-batch duplicates
     // exactly like Overlay's tie-break (chunkIndex descending)
     val w = Window.partitionBy(col("chunkId")).orderBy(col("chunkIndex").desc)
-    val deduped = chunks.select(chunkCols.map(col): _*)
+    val deduped = upserts.map(_.select(chunkCols.map(col): _*)
       .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-    Snapshots.merge(spark, path, deduped, Seq("chunkId"), statsCols): Unit
-  }
-
-  override def deleteByDocuments(spark: SparkSession, docs: DataFrame): Long = {
-    if (!exists(spark)) return 0L
-    val keys = docs.select(col("docId").as("documentId")).distinct()
-    Snapshots.deleteKeysMor(spark, path, keys, Seq("documentId")).rowsDeleted
+      .filter(col("_rn") === 1).drop("_rn"))
+    Snapshots.mergeMor(spark, path, deduped, Seq("chunkId"),
+      retireDocs.map(_.select(col("docId").as("documentId"))), Seq("documentId"),
+      statsCols).get
   }
 
   /** Absorb deletion-vector debt + small-file debt, expire old versions —

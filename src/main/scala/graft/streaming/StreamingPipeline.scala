@@ -545,12 +545,11 @@ object StreamingPipeline {
     */
   /** Exactly-once streaming CDC APPLY into a snapshot table — the full
     * Debezium-shaped sink: each microbatch carries per-key latest states
-    * with an op column (`delete` retires the key via merge-on-read
-    * deletion vectors — zero file rewrites; anything else MERGEs by
-    * key), applied by [[graft.operators.Snapshots.applyCdcIdempotent]]
-    * under the txn-marker discipline, so a crash-restart replays the
-    * whole batch exactly once (the delete half replays as a no-op, the
-    * merge half is skipped from the commit log).
+    * with an op column (`delete` retires the key, anything else upserts
+    * it), applied by [[graft.operators.Snapshots.applyCdcIdempotent]] as
+    * ONE merge-on-read commit — zero file rewrites — carrying the batch's
+    * txn marker, so a crash-restart replay of the batch is detected from
+    * the commit log and skipped: it lands exactly once.
     */
   def snapshotCdcWriter(
       source: DataFrame,

@@ -429,16 +429,94 @@ class GraftCliSpec extends SparkSpec {
     assert(st.processed == 2 && st.storeDocs == 2)
   }
 
+  test("process delta over the snapshot store: one merge-on-read commit per run, parquet-equal") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = tmpDir("clidelta")
+    def writeState(name: String, files: (String, String, String)*): String = {
+      val p = s"$root/$name.json"
+      Files.write(Paths.get(p), files.map { case (f, st, h) =>
+        s""""$f":{"status":"$st","sha256":"$h"}"""
+      }.mkString("""{"raw_datasets":{"ds1.tar.bz2":{"files":{""", ",", "}}}}")
+        .getBytes("UTF-8"))
+      p
+    }
+    // run 1 adds three documents; run 2 modifies one, adds one, removes one
+    def runBoth(storageType: String) = {
+      val extracted = s"$root/extracted-$storageType"
+      Files.createDirectories(Paths.get(extracted, "ds1"))
+      writeXml(s"$extracted/ds1", "doc_a.xml", "Alpha beta gamma delta.")
+      writeXml(s"$extracted/ds1", "doc_b.xml", "Epsilon zeta eta theta.")
+      writeXml(s"$extracted/ds1", "doc_c.xml", "Iota kappa lambda mu.")
+      val settings = Settings(storageType = storageType, embeddingDimensions = 8)
+      val store = s"$root/store-$storageType"
+      val ledger = s"$root/ledger-$storageType"
+      val r1 = GraftCli.processConfigured(spark, writeState("s1",
+        ("doc_a.xml", "added", "ha"), ("doc_b.xml", "added", "hb"), ("doc_c.xml", "added", "hc")),
+        extracted, store, ledger, settings)
+      writeXml(s"$extracted/ds1", "doc_a.xml", "Alpha beta gamma delta revised epsilon.")
+      writeXml(s"$extracted/ds1", "doc_d.xml", "Nu xi omicron pi.")
+      val s2 = writeState("s2", ("doc_a.xml", "modified", "ha2"), ("doc_b.xml", "unchanged", "hb"),
+        ("doc_c.xml", "removed", "hc"), ("doc_d.xml", "added", "hd"))
+      (r1, () => GraftCli.processConfigured(spark, s2, extracted, store, ledger, settings),
+        () => GraftCli.mkStore(store, settings).read(spark), store)
+    }
+    val (p1, p2, pRead, _) = runBoth("parquet")
+    assert(p1.exitCode == 0 && p1.summary.processed == 3)
+    val pr2 = p2()
+
+    val (r1, run2, read, store) = runBoth("snapshot")
+    assert(r1.exitCode == 0 && r1.summary.processed == 3)
+    val snaps = graft.operators.Snapshots
+    def referenced(v: Long): Set[String] =
+      spark.read.json(f"$store/_log/v$v%08d").filter(col("kind") === "file")
+        .select("path").as[String].collect().toSet
+    def dataDirs(): Set[String] =
+      Files.list(Paths.get(s"$store/data")).iterator().asScala.map(_.getFileName.toString).toSet
+    // run 1 on an empty store: the create commit plus one delta commit
+    assert(snaps.history(spark, store).count() == 2)
+    val v1 = snaps.currentVersion(store).get
+    val dirs1 = dataDirs()
+
+    val r2 = run2()
+    // exactly one commit for the whole delta (upserts + removed-doc deletes)
+    assert(snaps.history(spark, store).count() == 3)
+    val v2 = snaps.currentVersion(store).get
+    assert(v2 == v1 + 1 && snaps.commitInfo(spark, store, v2).op == "merge")
+    // no data file rewritten: every file v1 referenced is still referenced,
+    // and the delta added one appended group plus one deletion-vector dataset
+    assert(referenced(v1).subsetOf(referenced(v2)))
+    val newDirs = dataDirs() -- dirs1
+    assert(newDirs.size == 2 && newDirs.count(_.endsWith(".dv")) == 1, s"new dirs: $newDirs")
+    val group = newDirs.find(!_.endsWith(".dv")).get
+    assert((referenced(v2) -- referenced(v1)).forall(_.startsWith(s"data/$group/")))
+    // store contents equal the parquet backend's after the same delta
+    def contents(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+      df.select("chunkId", "content").as[(String, String)].collect().toMap
+    assert(contents(read()) == contents(pRead()) && contents(read()).nonEmpty)
+    assert(!contents(read()).values.exists(_.contains("Iota")), "removed document's chunks must go")
+    // ProcessResult counts match the delta: modified + added processed, one removed
+    assert(r2.exitCode == 0 && r2.summary.processed == 2 && r2.summary.failed == 0 &&
+      r2.summary.removed == 1, s"$r2")
+    assert(r2.summary.chunksWritten ==
+      read().filter(col("sourceHash").isin("ha2", "hd")).count() && r2.summary.chunksWritten > 0)
+    assert(r2.summary == pr2.summary, s"snapshot $r2 vs parquet $pr2")
+  }
+
   test("prepare: warc-ingest output feeds the crawl→shards pipeline into a snapshot table") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val root = tmpDir("cliprep")
-    // a crawl: 8 quality pages + 1 junk page, served as WARC conversion records
+    // a crawl: 24 quality pages + 1 junk page, served as WARC conversion
+    // records. Enough pages survive (>= 8) that a fingerprint summing the
+    // 60-bit url-derived doc ids would overflow a long
+    val nPages = 24
     def page(i: Int): String =
       s"<html><body><p>The data of crawl $i holds " +
         (0 until 50).map(j => s"w${(j * 11 + i * 3) % 89}t").mkString(" ") +
         ".</p><p>click here</p></body></html>"
-    val crawl = ((0 until 8).map(i => (s"https://site$i.test/p", page(i))) :+
+    val crawl = ((0 until nPages).map(i => (s"https://site$i.test/p", page(i))) :+
       ("https://junk.test/p" -> "<html><body><p>too short.</p></body></html>"))
       .toDF("url", "text")
       .withColumn("date", lit("2024-01-01T00:00:00Z"))
@@ -451,10 +529,10 @@ class GraftCliSpec extends SparkSpec {
     val outTbl = s"$root/corpus"
     assert(GraftCli.prepareCmd(spark, rawTbl, outTbl, None) == 0)
     val kept = graft.operators.Snapshots.read(spark, outTbl)
-    assert(kept.count() >= 1 && kept.count() <= 8)
+    assert(kept.count() >= 8 && kept.count() <= nPages, s"kept ${kept.count()}")
     // warc shape derives source from the url domain; junk page dropped
     val sources = kept.select("source").as[String].collect().toSet
-    assert(sources.subsetOf((0 until 8).map(i => s"site$i.test").toSet))
+    assert(sources.subsetOf((0 until nPages).map(i => s"site$i.test").toSet))
     assert(kept.columns.toSet.intersect(Set("shard", "order_key", "toks")).size == 3)
   }
 }

@@ -816,6 +816,127 @@ class SnapshotSpec extends SparkSpec {
       .head().getAs[Long]("n_chars") == 8888L)
   }
 
+  test("mergeMor is merge-then-deleteKeysMor in one commit; no rewrite; changelog nets the same") {
+    // a table of two files with a prior vector (key 7), keyed by doc_id,
+    // retired by source; upserts carry explicit sources so 32 is retired,
+    // and 13's upsert is retired while its live row (src1) is not
+    def base(t: String): Unit = {
+      Snapshots.create(spark, t)
+      Snapshots.append(spark, t, docs(10).coalesce(1))
+      Snapshots.append(spark, t, docs(10, idFrom = 10).coalesce(1))
+      Snapshots.deleteKeysMor(spark, t, Seq(7L).toDF("doc_id"), Seq("doc_id")): Unit
+    }
+    val ups = Seq((5L, "src0", 5555L), (7L, "src1", 5555L), (12L, "src0", 5555L),
+      (13L, "src2", 5555L), (30L, "src0", 5555L), (32L, "src2", 5555L))
+      .toDF("doc_id", "source", "n_chars")
+    val retire = Seq("src2").toDF("source")
+    val one = tmpDir("snap-mor-merge")
+    val two = tmpDir("snap-mor-merge-ref")
+    base(one); base(two)
+    val m = Snapshots.mergeMor(spark, one, Some(ups), Seq("doc_id"),
+      Some(retire), Seq("source")).get
+    Snapshots.merge(spark, two, ups, Seq("doc_id")): Unit
+    Snapshots.deleteKeysMor(spark, two, retire, Seq("source")): Unit
+    // one commit, op merge, and the only new data file is the appended group
+    assert(m.version == 4L && Snapshots.currentVersion(one).contains(4L))
+    assert(Snapshots.commitInfo(spark, one, 4L).op == "merge")
+    def referenced(v: Long): Set[String] =
+      spark.read.json(f"$one/_log/v$v%08d").filter(col("kind") === "file")
+        .select("path").as[String].collect().toSet
+    assert(referenced(3L).subsetOf(referenced(4L)) &&
+      (referenced(4L) -- referenced(3L)).map(_.split("/")(1)).size == 1,
+      "mergeMor rewrites no data file; its upserts land as one file group")
+    // live src2 rows 2, 5, 8, 11, 14, 17 retire, and live 13 dies with its
+    // retired upsert (merge replaces it, the delete drops the replacement);
+    // 12 is replaced; the upsert rows less the retired 13 and 32 (5, 7, 12,
+    // 30) append; 5's key also matched a retired row, so only 12 counts as
+    // an update
+    assert((m.rowsDeleted, m.rowsUpdated, m.rowsInserted) == ((7L, 1L, 3L)), s"$m")
+    assert(m.filesWithDv == 2L && m.filesUntouched == 0L, s"$m")
+    // the table equals the two-commit sequence's
+    val cols = Seq("doc_id", "source", "n_chars").map(col)
+    val a = Snapshots.read(spark, one).select(cols: _*)
+    val b = Snapshots.read(spark, two).select(cols: _*)
+    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+    assert(ids(a) == (0L until 20L).toSet -- Set(2L, 8L, 11L, 13L, 14L, 17L) + 30L)
+    assert(Snapshots.fastCount(spark, one) == a.count(), "dv_rows stay exact through the merge")
+    // the changelog over the one commit nets to the same signed multiset
+    def net(t: String, from: Long, to: Long): Set[(Long, String, Long, Long)] =
+      Snapshots.rowChanges(spark, t, from, to)
+        .withColumn("s", when(col("_change_type") === "insert", 1L).otherwise(-1L))
+        .groupBy("doc_id", "source", "n_chars").agg(sum("s").as("s"))
+        .filter(col("s") =!= 0L)
+        .as[(Long, String, Long, Long)].collect().toSet
+    assert(net(one, 3L, 4L) == net(two, 3L, 5L) && net(one, 3L, 4L).nonEmpty)
+    // a later keyed delete folds this commit's vectors (no double count)
+    val d = Snapshots.deleteKeysMor(spark, one, Seq(0L, 12L).toDF("doc_id"), Seq("doc_id"))
+    assert(d.rowsDeleted == 2L)
+    assert(Snapshots.fastCount(spark, one) == Snapshots.read(spark, one).count())
+  }
+
+  test("a vector folds from its own dataset when an older dataset also names its positions") {
+    val t = tmpDir("snap-dv-fold")
+    Snapshots.create(spark, t)
+    Snapshots.append(spark, t, docs(10).coalesce(1))
+    Snapshots.append(spark, t, docs(10, idFrom = 10).coalesce(1))
+    def del(keys: Long*) = Snapshots.deleteKeysMor(spark, t, keys.toDF("doc_id"), Seq("doc_id"))
+    del(1L, 11L) // v3: one dataset for both files
+    del(2L) // v4: the first file's merged vector; the second still points at v3's
+    val st = del(3L, 12L) // v5: reads both datasets; v3's repeats position 1
+    assert(st.rowsDeleted == 2L && st.filesWithDv == 2L, s"$st")
+    assert(Snapshots.fastCount(spark, t) == 15L && Snapshots.read(spark, t).count() == 15L)
+    val ch = Snapshots.rowChanges(spark, t, 4L, 5L)
+    assert(ch.filter(col("_change_type") === "delete").select("doc_id").as[Long]
+      .collect().sorted.toSeq == Seq(3L, 12L), "the changelog must hold only the new deletes")
+    assert(ch.filter(col("_change_type") === "insert").count() == 0L)
+  }
+
+  test("merge, deleteKeysMor and mergeMor release every RDD they persist") {
+    val t = tmpDir("snap-leak")
+    Snapshots.create(spark, t)
+    Snapshots.append(spark, t, docs(20).coalesce(1))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    Snapshots.merge(spark, t, docs(3).withColumn("n_chars", lit(1L)), Seq("doc_id")): Unit
+    assert(sc.getPersistentRDDs.size == before, "merge leaked a persisted RDD")
+    Snapshots.deleteKeysMor(spark, t, Seq(4L).toDF("doc_id"), Seq("doc_id")): Unit
+    assert(sc.getPersistentRDDs.size == before, "deleteKeysMor leaked a persisted RDD")
+    Snapshots.mergeMor(spark, t, Some(docs(2, idFrom = 5)), Seq("doc_id"),
+      Some(Seq("src1").toDF("source")), Seq("source")): Unit
+    assert(sc.getPersistentRDDs.size == before, "mergeMor leaked a persisted RDD")
+  }
+
+  test("mergeMor conflicts with a concurrent append that may hold an upsert or retired key") {
+    val ups = Seq((5L, "src0", 1L)).toDF("doc_id", "source", "n_chars")
+    def attempt(t: String, retired: String, appended: DataFrame) = {
+      val once = new java.util.concurrent.atomic.AtomicBoolean(false)
+      Snapshots.preCommitHook = () =>
+        if (once.compareAndSet(false, true)) Snapshots.append(spark, t, appended.coalesce(1)): Unit
+      try Snapshots.mergeMor(spark, t, Some(ups), Seq("doc_id"),
+        Some(Seq(retired).toDF("source")), Seq("source"))
+      finally Snapshots.preCommitHook = () => ()
+    }
+    def fresh(name: String): String = {
+      val t = tmpDir(name)
+      Snapshots.create(spark, t)
+      Snapshots.append(spark, t, docs(10).coalesce(1))
+      t
+    }
+    // the appended ids 3..7 may hold the upsert key 5 (retired "zzz" cannot match)
+    val t1 = fresh("snap-mor-conflict-key")
+    intercept[java.util.ConcurrentModificationException](attempt(t1, "zzz", docs(5, idFrom = 3)))
+    assert(Snapshots.currentVersion(t1).contains(2L), "the conflicting commit must not land")
+    // the appended sources may hold the retired "src1" (ids far from 5)
+    val t2 = fresh("snap-mor-conflict-retire")
+    intercept[java.util.ConcurrentModificationException](attempt(t2, "src1", docs(5, idFrom = 1000)))
+    // disjoint on both: the commit rebases over the append and every row lands
+    val t3 = fresh("snap-mor-rebase")
+    val m = attempt(t3, "src1", docs(5, idFrom = 1000).withColumn("source", lit("aaa"))).get
+    assert(m.version == 3L)
+    assert(ids(Snapshots.read(spark, t3)) ==
+      (0L until 10L).filter(_ % 3 != 1).toSet ++ (1000L until 1005L) + 5L)
+  }
+
   test("concurrent committers serialize on the commit lock; no append is lost") {
     val t = tmpDir("snap-race")
     Snapshots.create(spark, t)

@@ -219,21 +219,26 @@ class ChunkStoreSpec extends SparkSpec {
 
   test("snapshot-backed store adds time travel and zero-rewrite deletes") {
     val store = new SnapshotChunkStore(tmpDir("kstore-tt") + "/t")
-    store.upsert(spark, chunks(("d1_c0", "d1", "v1", 0), ("d2_c0", "d2", "y", 0)))
-    store.upsert(spark, chunks(("d1_c0", "d1", "v2", 0)))
-    val dataFilesBefore = graft.operators.Lake.dataFileCount(spark, s"${store.path}/data")
-    assert(store.deleteByDocumentIds(spark, Seq("d2")) == 1)
-    // MOR delete: the .dv dataset is new, but no DATA file rewrote
-    val nonDv = {
+    // data files outside deletion-vector datasets
+    def nonDv(): Set[String] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(s"${store.path}/data"))
-        .iterator().asScala.count { p =>
+        .iterator().asScala.filter { p =>
           val n = p.getFileName.toString
           java.nio.file.Files.isRegularFile(p) && !n.startsWith("_") &&
             !n.startsWith(".") && !p.getParent.getFileName.toString.endsWith(".dv")
-        }
+        }.map(_.toString).toSet
     }
-    assert(nonDv == dataFilesBefore, "delete-by-document must rewrite zero data files")
+    store.upsert(spark, chunks(("d1_c0", "d1", "v1", 0), ("d2_c0", "d2", "y", 0)))
+    val afterInsert = nonDv()
+    store.upsert(spark, chunks(("d1_c0", "d1", "v2", 0)))
+    // merge-on-read upsert: the old data file stays, the upsert lands beside it
+    val dataFilesBefore = nonDv()
+    assert(afterInsert.subsetOf(dataFilesBefore) &&
+      dataFilesBefore.size == afterInsert.size + 1, "an upsert must rewrite zero data files")
+    assert(store.deleteByDocumentIds(spark, Seq("d2")) == 1)
+    // MOR delete: the .dv dataset is new, but no DATA file rewrote
+    assert(nonDv() == dataFilesBefore, "delete-by-document must rewrite zero data files")
     // time travel: v1 still shows the pre-overlay content and both docs
     val v1 = store.readAt(spark, 1L).select("chunkId", "content").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap

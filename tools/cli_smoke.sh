@@ -2,7 +2,8 @@
 # End-to-end smoke of the snapshot-table CLI surface against real testdata:
 # create -> append -> merge-on-read delete -> manifest count -> changelog ->
 # shallow clone -> maintain -> SQL over the planner-integrated view ->
-# WARC ingest (externally-written gzip WARC). Exercises the command paths
+# WARC ingest (externally-written gzip WARC) -> prepare over the ingested
+# crawl. Exercises the command paths
 # the ScalaTest specs reach only as library calls.
 #
 # Usage: bash tools/cli_smoke.sh   (after `sbt compile`; ~1 min)
@@ -18,10 +19,13 @@ python3 - << 'PY'
 import duckdb, gzip
 duckdb.sql("COPY (SELECT * FROM '/root/testdata/sf0.001/documents.parquet') TO '/tmp/graft/cli_smoke/docs.parquet'")
 rows = duckdb.sql("SELECT doc_id, text FROM '/root/testdata/sf0.001/documents.parquet' LIMIT 50").fetchall()
+# crawl pages over ten sites: a repeated boilerplate paragraph, the body as
+# one sentence, a junk paragraph, so pages survive prepare's quality stages
 with gzip.open('/tmp/graft/cli_smoke/crawl.warc.gz', 'wb') as f:
     for doc_id, text in rows:
-        body = text.encode()
-        f.write((f"WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: https://t/{doc_id}\r\n"
+        body = ("<html><body><p>Free hosting provided by Example Corp new terms apply today.</p>"
+                f"<p>{text}.</p><p>click here</p></body></html>").encode()
+        f.write((f"WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: https://s{doc_id % 10}.test/{doc_id}\r\n"
                  f"WARC-Date: 2024-01-01T00:00:00Z\r\nContent-Type: text/plain\r\n"
                  f"Content-Length: {len(body)}\r\n\r\n").encode())
         f.write(body); f.write(b"\r\n\r\n")
@@ -36,6 +40,12 @@ G snapshot-clone "$T" "$W/clone"
 G snapshot-maintain "$T" 1000000 1
 G snapshot-sql "$T" docs "SELECT count(*) AS n FROM docs WHERE n_chars >= 150" | tail -4
 G warc-ingest "$W/*.warc.gz" "$W/crawl_tbl"
+# crawl -> training shards straight from the warc-ingest table: url-derived
+# 60-bit ids through every stage fingerprint (a long sum of a dozen such ids
+# overflows), landing a snapshot table of >= 8 rows
+P=$(G prepare "$W/crawl_tbl" "$W/corpus_tbl")
+[[ "$P" =~ (^|$'\n')version=[0-9]+\ rows=([0-9]+)($|$'\n') ]] && (( BASH_REMATCH[2] >= 8 )) \
+  || { echo "prepare over the warc-ingest table: no version line with >= 8 rows: $P"; exit 1; }
 # crawl -> search: keep a BM25 index current with the WARC table's commits
 M1=$(G text-index-refresh "$W/crawl_tbl" "$W/crawl_idx" "$W/crawl_idx_cur")
 M2=$(G text-index-refresh "$W/crawl_tbl" "$W/crawl_idx" "$W/crawl_idx_cur")
