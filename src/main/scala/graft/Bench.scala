@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.StatusBridge
+
+import graft.ops.JobCosts
 
 /** Benchmark main: runs every battery query on SPARK_GRAFT_SF_DIR and prints
   * one JSON line of per-query wall-clock seconds. Failures are surfaced per
@@ -23,44 +25,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Spark 4.1's checkpoint-file checksums serialize every state-store
-      // commit through a tiny per-manager thread pool: thread dumps showed
-      // 32-partition stream-stream joins spending ~2.4 s/task parked in
-      // ChecksumCheckpointFileManager.awaitResult (~80 ms of actual CPU) —
-      // the blocking grows with state-partition count, so it hurts any
-      // many-partition deployment, not just local mode. The checksums are
-      // an integrity guard for unreliable checkpoint storage and change no
-      // query result; keep them ON in production on object stores, OFF
-      // where the checkpoint FS is trusted (OPTIMIZATION_r14.md §3).
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
-      // FileOutputCommitter v2: tasks publish their files directly instead
-      // of the v1 job-commit loop that renames EVERY output file serially
-      // on the driver — a fragmented partitionBy write (24 tasks × 20
-      // partition dirs ≈ 480 files) spent 3 s of its 4 s in that loop
-      // (ProfileOne, k_lake_compact). The serial-rename cost grows with
-      // file count and rename latency, so v2 matters MORE on real
-      // clusters/object stores than locally (it is the long-standing EMR
-      // default). Tradeoff documented in OPTIMIZATION_r15.md: v2 task
-      // commits are not atomic under task-commit failure; keep v1 where
-      // that atomicity is load-bearing.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_COMMITTER_ALGO", "2"))
-      .config("spark.ui.enabled", "false")
-      // the battery runs thousands of stages; default stage retention (1000)
-      // evicts mid-run and makes shuffle-byte deltas go NEGATIVE
-      .config("spark.ui.retainedStages", "100000")
-      .config("spark.ui.retainedJobs", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+    val costs = new JobCosts()
+    spark.sparkContext.addSparkListener(costs)
     // untimed warmup: JIT + whole-stage-codegen compiler + parquet reader
     // init otherwise land on whichever query happens to run first
     try {
@@ -77,10 +44,9 @@ object Bench {
     // measured data movement per query (shuffle write MB on the FIRST run):
     // at scale the shuffle-byte count is the cost model, so the artifact
     // carries it alongside wall-clock
-    val sc = spark.sparkContext
     def shuffleWritten(): Long = {
-      org.apache.spark.graft.StatusBridge.quiesce(sc)
-      org.apache.spark.graft.StatusBridge.shuffleTotals(sc)._1
+      StatusBridge.quiesce(spark.sparkContext)
+      costs.shuffleWriteBytes
     }
     val results = selected.map { case (name, fn) =>
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -102,8 +68,7 @@ object Bench {
             failed = true
         }
         times += (System.nanoTime() - t0) / 1e9
-        // clamp: any residual eviction reads as a small negative delta
-        if (i == 0 && !failed) shuffleMb = math.max(0.0, (shuffleWritten() - sw0) / 1e6)
+        if (i == 0 && !failed) shuffleMb = (shuffleWritten() - sw0) / 1e6
         i += 1
       }
       // min-of-2 under the MAXSEC retry path (the second run is the

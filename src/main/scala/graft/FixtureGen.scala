@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generates the checked-in golden fixtures that back battery oracles whose
@@ -20,14 +19,7 @@ object FixtureGen {
     val sfDirs =
       if (args.length > 1) args.tail.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(16)
     spark.sparkContext.setLogLevel("ERROR")
 
     // Toy BPE rank table FIRST: the s2_chunker_bpe_stats battery fn loads it

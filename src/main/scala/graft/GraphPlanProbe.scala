@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build-parameter sweep for the graph-ANN planner: replicates the sf0.1
@@ -13,6 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.GraphPlanProbe [replicas] [configs]
   *   configs = comma-separated b:r:d triples, e.g. "10:1:8,10:2:8,10:2:12"
+  *
+  * Large replica counts need a large driver heap. It comes from the JVM's
+  * `-Xmx` (`SPARK_DRIVER_MEM` under `sbt run`, `--driver-memory` under
+  * `spark-submit`): `spark.driver.memory` set in the session has no effect
+  * once the driver JVM is running.
   */
 object GraphPlanProbe {
   def main(args: Array[String]): Unit = {
@@ -22,14 +26,7 @@ object GraphPlanProbe {
     // GraphAnn.buildPlan(n, 64, 0.75) with hub-seeded search (the
     // ScaleProbe leg's stack), for extrapolation checks at other sizes
     val rawConfigs = args.lift(1).getOrElse("10:1:8,10:2:8,10:2:12,12:2:8").split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.driver.memory", "48g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = Tables.embeddings(spark, "/root/testdata/sf0.1")

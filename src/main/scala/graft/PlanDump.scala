@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round deliverable helper: writes `explain("formatted")` of
   * named battery queries to `$SPARK_GRAFT_PLANS_DIR/<name>_<tag>.txt`
   * (default `plans/r15`) so optimization claims can be checked against
@@ -14,16 +12,7 @@ object PlanDump {
     val tag = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("ERROR")
     val plansDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r15")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(plansDir))

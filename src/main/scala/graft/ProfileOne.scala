@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.StatusBridge
+
+import graft.ops.JobCosts
 
 /** Measurement harness (guide §1): runs ONE battery entry and prints every
   * Spark job's callsite + wall-clock, so a slow entry's time can be charged
@@ -15,69 +16,20 @@ object ProfileOne {
     val name = args.headOption.getOrElse("q1_pricing_summary")
     val runs = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config(
-        // ad-hoc conf experiments: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"
-        sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-          .flatMap(_.split(";")).map(_.split("=", 2))
-          .collect { case Array(k, v) => (k, v) }
-          .foldLeft(new org.apache.spark.SparkConf()) { case (c, (k, v)) => c.set(k, v) })
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Double)]()
-    val execDesc = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onOtherEvent(event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        event match {
-          case e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            execDesc.put(e.executionId, e.description)
-          case _ => ()
-        }
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val byExec = Option(js.properties.getProperty("spark.sql.execution.id"))
-          .flatMap(id => Option(execDesc.get(id.toLong)))
-        val infos = js.stageInfos.sortBy(_.stageId)
-        val graftFrame = infos.reverseIterator
-          .flatMap(_.details.linesIterator)
-          .find(l => l.contains("graft.") && !l.contains("ProfileOne"))
-          .map(_.trim.stripPrefix("at ").takeWhile(_ != ')') + ")")
-        val site = byExec.orElse(graftFrame)
-          .orElse(infos.lastOption.map(_.name))
-          .getOrElse("?")
-        jobs.put(js.jobId, (site, js.time))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(jobs.remove(je.jobId)).foreach { case (site, t0) =>
-          done.add((je.jobId, site, (je.time - t0) / 1000.0))
-        }
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val dur = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(0L)
-        if (dur > 400) {
-          val frame = si.details.linesIterator
-            .find(l => l.contains("graft.") && !l.contains("ProfileOne"))
-            .map(_.trim.stripPrefix("at ")).getOrElse(si.name)
-          val m = si.taskMetrics
-          println(f"    [stage ${si.stageId}%4d ${dur / 1000.0}%7.3f s  tasks=${si.numTasks}%-4d " +
-            f"sr=${m.shuffleReadMetrics.recordsRead}%,d sw=${m.shuffleWriteMetrics.recordsWritten}%,d " +
-            f"in=${m.inputMetrics.recordsRead}%,d run=${m.executorRunTime / 1000.0}%.2f " +
-            f"cpu=${m.executorCpuTime / 1e9}%.2f gc=${m.jvmGCTime / 1000.0}%.2f " +
-            f"deser=${m.executorDeserializeTime / 1000.0}%.2f  $frame]")
-        }
+    val spark = Session()
+    val costs = new JobCosts(si => {
+      val dur = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(0L)
+      if (dur > 400) {
+        val m = si.taskMetrics
+        println(f"    [stage ${si.stageId}%4d ${dur / 1000.0}%7.3f s  tasks=${si.numTasks}%-4d " +
+          f"sr=${m.shuffleReadMetrics.recordsRead}%,d sw=${m.shuffleWriteMetrics.recordsWritten}%,d " +
+          f"in=${m.inputMetrics.recordsRead}%,d run=${m.executorRunTime / 1000.0}%.2f " +
+          f"cpu=${m.executorCpuTime / 1e9}%.2f gc=${m.jvmGCTime / 1000.0}%.2f " +
+          f"deser=${m.executorDeserializeTime / 1000.0}%.2f  " +
+          JobCosts.graftFrame(si).getOrElse(si.name) + "]")
       }
     })
+    spark.sparkContext.addSparkListener(costs)
 
     // warmup identical to Bench
     try {
@@ -87,14 +39,13 @@ object ProfileOne {
 
     val fn = SparkEntry.queries(name)
     (1 to runs).foreach { r =>
-      done.clear()
+      costs.clearJobs()
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val total = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let listener drain
-      println(f"\n===== $name run $r: $total%.2f s, ${done.size} jobs =====")
-      import scala.jdk.CollectionConverters._
-      val rows = done.asScala.toSeq.sortBy(_._1)
+      StatusBridge.quiesce(spark.sparkContext)
+      val rows = costs.jobs
+      println(f"\n===== $name run $r: $total%.2f s, ${rows.size} jobs =====")
       rows.foreach { case (id, site, sec) => println(f"  job $id%4d  $sec%7.3f s  $site") }
       val bySite = rows.groupBy(_._2).map { case (s, xs) => (s, xs.map(_._3).sum, xs.size) }
         .toSeq.sortBy(-_._2)

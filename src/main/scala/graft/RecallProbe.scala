@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
@@ -19,14 +18,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     for (d <- dirs) {
       val vecs = embeddings(spark, d)
       val corpus = vecs.filter(col("vec_id") % 20 =!= 0)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.chunker.LovdataChunker
@@ -23,16 +23,8 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val prefixLen = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+    val cpus = spark.sparkContext.defaultParallelism
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
@@ -48,7 +40,7 @@ object ScaleProbe {
         sha2(concat(col("text"), col("doc_id")), 256).as("hash"),
         PipelineQueries.synthXmlUdf(col("doc_id"), col("text")).as("xml")
       )
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .cache()
     val nDocs = corpus.count() // materialize input (excluded from stage timings)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IncrementalAgg, Snapshots}
@@ -25,16 +24,8 @@ object SnapshotScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+    val cpus = spark.sparkContext.defaultParallelism
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
@@ -53,7 +44,7 @@ object SnapshotScaleProbe {
     val corpus = (0 until mult)
       .map(i => base.withColumn("doc_id", col("doc_id") + lit(i.toLong * 10_000_000L)))
       .reduce(_.unionByName(_))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .cache()
     val nRows = corpus.count()
     // ~0.1% of rows, hash-scattered across every file
@@ -108,7 +99,7 @@ object SnapshotScaleProbe {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
       Snapshots.create(spark, t)
       Snapshots.append(spark, t,
-        corpus.repartitionByRange(cpus.toInt, col("doc_id")))
+        corpus.repartitionByRange(cpus, col("doc_id")))
       t
     }
     val aggClu = "/tmp/graft/snapprobe/agg_clu"
@@ -298,7 +289,7 @@ object SnapshotScaleProbe {
       f"changelog_s=$tChangelog%.1f full_recompute_s=$tFull%.1f " +
       f"(worst case: every file vector-bearing - maintenance reads ~table bytes)")
     println(f"[snapshot-probe] clustered: agg_refresh_mode=${rClu.mode} " +
-      f"files_with_dv=${cluStats.filesWithDv}/${cpus.toInt} deleted=${cluStats.rowsDeleted} " +
+      f"files_with_dv=${cluStats.filesWithDv}/${cpus} deleted=${cluStats.rowsDeleted} " +
       f"changelog_s=$tChangelogClu%.1f full_recompute_s=$tFullClu%.1f " +
       f"(design case: maintenance reads only the touched file)")
     spark.stop()

@@ -1,31 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench: checkpoint checksums off (integrity-only, no result
-      // effect; see Bench.scala + OPTIMIZATION_r14.md §3)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
-      // match Bench: committer v2 (task-side publish; see Bench.scala) —
-      // Verify must validate results under the same engine config Bench
-      // times
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_COMMITTER_ALGO", "2"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     // Local-iteration subset: SPARK_GRAFT_ONLY=q1,q2 runs just those queries
     // (the external driver never sets it, so the contract is unchanged).

@@ -409,16 +409,7 @@ object GraftCli {
     else spark.read.parquet(path).select(col("text"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS",
-          Runtime.getRuntime.availableProcessors().toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val code = args.toList match {
       case "process" :: rest =>
         val (settings, positional) = Settings.fromArgs(rest)

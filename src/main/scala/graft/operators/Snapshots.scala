@@ -2581,6 +2581,9 @@ object Snapshots {
     }
     val now = System.currentTimeMillis()
     var deletedFiles = 0L
+    // dirs this sweep deleted files from: an empty one was emptied by the
+    // sweep itself, not freshly created by another writer
+    val sweptDirs = scala.collection.mutable.Set.empty[String]
     val dataRoot = new Path(s"$table/data")
     def isMeta(name: String) = name.startsWith("_") || name.startsWith(".")
     if (fs.exists(dataRoot)) {
@@ -2614,6 +2617,7 @@ object Snapshots {
             now - st.getModificationTime < orphanGraceMs
           if (!live.contains(rel) && !liveDvDirs.contains(parentRel) && !youngOrphan) {
             if (!dryRun) fs.delete(st.getPath, false): Unit
+            sweptDirs += st.getPath.getParent.toUri.getPath
             deletedFiles += 1
           }
         }
@@ -2625,13 +2629,16 @@ object Snapshots {
       // destroy that writer's task output (the appendIdempotent-vs-maintain
       // race this entry exists to exercise), so only all-file meta dirs
       // qualify, and only outside the same grace window that protects
-      // staged orphan FILES.
+      // staged orphan FILES. An EMPTY dir has no child to date it, so its
+      // own mtime does — a writer may have just created it and not yet
+      // staged a file — unless this sweep emptied it.
       if (!dryRun) listOrEmpty(dataRoot).foreach { d =>
         if (d.isDirectory) {
           val children = listOrEmpty(d.getPath)
           val allMetaFiles = children.forall(s => s.isFile && isMeta(s.getPath.getName))
-          val graced = orphanGraceMs > 0L &&
-            children.exists(s => now - s.getModificationTime < orphanGraceMs)
+          def young(s: org.apache.hadoop.fs.FileStatus) = now - s.getModificationTime < orphanGraceMs
+          val graced = orphanGraceMs > 0L && (children.exists(young) ||
+            children.isEmpty && young(d) && !sweptDirs.contains(d.getPath.toUri.getPath))
           if (allMetaFiles && !graced) fs.delete(d.getPath, true): Unit
         }
       }

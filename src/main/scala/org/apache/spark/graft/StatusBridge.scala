@@ -2,36 +2,17 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Narrow accessor for `SparkContext.statusStore` (which is
+/** Narrow accessor for `SparkContext.listenerBus` (which is
   * `private[spark]`) — same pattern as `org.apache.spark.sql.graft
-  * .ColumnBridge`. Used by `graft.Bench` to report MEASURED per-query data
-  * movement (shuffle read/write, spill) instead of guessing from plans:
-  * at 100 TB the shuffle-byte count is the cost model, so the benchmark
-  * artifact should carry it.
+  * .ColumnBridge`. `graft.Bench` and `graft.ProfileOne` drain the bus
+  * before reading their `graft.ops.JobCosts` listener.
   */
 object StatusBridge {
 
-  /** (shuffleWriteBytes, shuffleReadBytes, memorySpill + diskSpill) summed
-    * across every stage the application has run so far. Snapshot before
-    * and after a query and subtract — stages are append-only within a
-    * session, so deltas are exact per query (modulo the status-store's
-    * small async lag; callers should quiesce first).
-    */
-  /** Drain the async listener bus so `shuffleTotals` sees every completed
-    * stage (best-effort: a stuck queue stops waiting after `timeoutMs`).
+  /** Drain the async listener bus so listeners have seen every event posted
+    * so far (best-effort: a stuck queue stops waiting after `timeoutMs`).
     */
   def quiesce(sc: SparkContext, timeoutMs: Long = 5000L): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMs)
     catch { case _: java.util.concurrent.TimeoutException => () }
-
-  def shuffleTotals(sc: SparkContext): (Long, Long, Long) = {
-    val stages = sc.statusStore.stageList(null)
-    var w = 0L; var r = 0L; var sp = 0L
-    stages.foreach { s =>
-      w += s.shuffleWriteBytes
-      r += s.shuffleReadBytes
-      sp += s.memoryBytesSpilled + s.diskBytesSpilled
-    }
-    (w, r, sp)
-  }
 }

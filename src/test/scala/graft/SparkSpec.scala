@@ -4,19 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for the Spark-backed suites (one per forked
-  * test JVM; ScalaTest runs suites sequentially within it).
+  * test JVM; ScalaTest runs suites sequentially within it): the engine's own
+  * [[Session]] configuration at a fixed width of 4.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

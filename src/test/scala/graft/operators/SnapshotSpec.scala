@@ -998,6 +998,28 @@ class SnapshotSpec extends SparkSpec {
     assert(ids(Snapshots.read(spark, t)) == ((0L until 20L) ++ (100L until 105L)).toSet)
   }
 
+  test("expire's grace window spares a young empty commit dir, not one its sweep emptied") {
+    val t = tmpDir("snap-grace-empty")
+    Snapshots.create(spark, t)
+    Snapshots.append(spark, t, docs(10))
+    // another writer has just created its commit dir and staged nothing yet
+    val fresh = JPaths.get(s"$t/data/c00000099-fresh")
+    JFiles.createDirectories(fresh)
+    // crash garbage past the window: the sweep deletes the file, which
+    // leaves its dir empty with a fresh mtime
+    val stale = JPaths.get(s"$t/data/c00000098-stale")
+    JFiles.createDirectories(stale)
+    val orphan = JFiles.write(stale.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    orphan.toFile.setLastModified(System.currentTimeMillis() - 7200000L)
+    val (_, reaped) = Snapshots.expire(spark, t, keepLast = 1, orphanGraceMs = 3600000L)
+    assert(reaped == 1L, s"the stale orphan reclaims, reaped=$reaped")
+    assert(JFiles.isDirectory(fresh), "a young empty commit dir must survive a graced expire")
+    assert(!JFiles.exists(stale), "a dir the sweep itself emptied is still removed")
+    Snapshots.expire(spark, t, keepLast = 1)
+    assert(!JFiles.exists(fresh), "without a grace window the empty dir is debris")
+    assert(ids(Snapshots.read(spark, t)) == (0L until 10L).toSet)
+  }
+
   test("shallow clone: zero data copied; the clone evolves independently of the source") {
     val src = tmpDir("snap-clone-src")
     val dst = tmpDir("snap-clone-dst") + "/t"

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.graft.StatusBridge
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -109,6 +110,24 @@ class OpsSpec extends SparkSpec {
     val pcts = snapshot.filter(_.contains("%"))
       .map(l => l.substring(l.indexOf("] ") + 2, l.indexOf("%")).toInt)
     assert(pcts == pcts.sorted, "progress must only move forward")
+  }
+
+  test("job costs charge jobs to their callsite and total completed stages' shuffle bytes") {
+    val costs = new JobCosts()
+    val sc = spark.sparkContext
+    sc.addSparkListener(costs)
+    try {
+      spark.range(0, 100, 1, 2).collect()
+      StatusBridge.quiesce(sc)
+      assert(costs.shuffleWriteBytes == 0L, "a shuffle-free job writes no shuffle bytes")
+      spark.range(0, 10000, 1, 4).repartition(3).count()
+      StatusBridge.quiesce(sc)
+      assert(costs.shuffleWriteBytes > 0L)
+      assert(costs.jobs.exists { case (_, site, sec) =>
+        site.startsWith("count at OpsSpec.scala") && sec >= 0.0 }, costs.jobs.toString)
+      costs.clearJobs()
+      assert(costs.jobs.isEmpty)
+    } finally sc.removeSparkListener(costs)
   }
 
   test("enrichment chain applies in order with failure isolation") {

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # End-to-end smoke of the snapshot-table CLI surface against real testdata:
 # create -> append -> merge-on-read delete -> manifest count -> changelog ->
-# shallow clone -> maintain -> SQL over the planner-integrated view ->
+# shallow clone -> maintain -> SQL over the planner-integrated view (and a
+# -D conf override reaching the CLI session) ->
 # WARC ingest (externally-written gzip WARC) -> prepare over the ingested
 # crawl. Exercises the command paths
 # the ScalaTest specs reach only as library calls.
@@ -39,6 +40,12 @@ G snapshot-changes "$T" 0 2
 G snapshot-clone "$T" "$W/clone"
 G snapshot-maintain "$T" 1000000 1
 G snapshot-sql "$T" docs "SELECT count(*) AS n FROM docs WHERE n_chars >= 150" | tail -4
+# Spark's own settings win over the session defaults: a -D conf must reach
+# the CLI's session unchanged
+S=$(java -Dspark.sql.shuffle.partitions=3 -cp "$CP" -Xmx4g graft.cli.GraftCli \
+  snapshot-sql "$T" docs "SET spark.sql.shuffle.partitions" 2>/dev/null)
+[[ "$S" =~ \|spark\.sql\.shuffle\.partitions\|3\ *\| ]] \
+  || { echo "-Dspark.sql.shuffle.partitions=3 did not reach the CLI session: $S"; exit 1; }
 G warc-ingest "$W/*.warc.gz" "$W/crawl_tbl"
 # crawl -> training shards straight from the warc-ingest table: url-derived
 # 60-bit ids through every stage fingerprint (a long sum of a dozen such ids
