@@ -698,11 +698,14 @@ object ScaleProbe {
       .groupBy(col("k")).agg(sum(col("n")).as("dn"), sum(col("sum_n_chars")).as("ds"))
       .filter(col("dn") =!= 0 || col("ds") =!= 0).count()
     require(aggDrift == 0, s"incremental rollup must equal recompute: $aggDrift keys differ")
-    // (5) COW merge: updates confined to a narrow key slice touch only the
-    // file(s) covering that slice — the other ~4×32 files carry by
-    // reference, so upsert cost is ∝ touched-files + source, not table.
-    // (spark.range slices are contiguous, so the slice lands in one file,
-    // two if it straddles a boundary.)
+    // (5) keyed merge (merge-on-read): updates confined to a narrow key
+    // slice mark vector positions only in the file(s) covering that slice,
+    // no data file rewrites, and the source lands as one file group — so
+    // upsert cost is ∝ touched-files + source, not table. (spark.range
+    // slices are contiguous, so the slice lands in one file, two if it
+    // straddles a boundary.)
+    val preMerge = graft.operators.Snapshots.dataFiles(spark, snapTable,
+      graft.operators.Snapshots.currentVersion(snapTable).get)
     val mergeN = math.max(1L, snapWidth / 100)
     val mergeSrc = spark.range(0L, mergeN)
       .select(col("id").as("doc_id"), (col("id") % 64).as("k"), lit(-5L).as("n_chars"))
@@ -711,8 +714,11 @@ object ScaleProbe {
     }
     require(snapMerge.rowsUpdated == mergeN && snapMerge.rowsInserted == 0,
       s"slice-confined merge must update exactly its keys: $snapMerge")
-    require(snapMerge.filesRewritten <= 2,
-      s"merge must rewrite only the file(s) covering the slice: $snapMerge")
+    require(snapMerge.filesWithDv <= 2,
+      s"merge must mark vectors only in the file(s) covering the slice: $snapMerge")
+    require(preMerge.subsetOf(
+      graft.operators.Snapshots.dataFiles(spark, snapTable, snapMerge.version)),
+      "merge must rewrite no data file: every pre-merge file stays referenced")
     require(graft.operators.Snapshots.read(spark, snapTable)
       .filter(col("n_chars") === -5L).count() == mergeN,
       "merged rows must carry the source values")
@@ -755,7 +761,7 @@ object ScaleProbe {
         s""""sess_keys":$nSessKeys,"sess_closed":$nSessClosed,"sess_state_rows":$sessStateRows,"sess_sec":${f"$tSession%.1f"},""" +
         s""""snap_rows":${4 * snapWidth},"snap_append_first_sec":${f"$tSnapAppendFirst%.1f"},"snap_append_last_sec":${f"$tSnapAppendLast%.1f"},""" +
         s""""snap_diff_sec":${f"$tSnapDiff%.1f"},"snap_scan_sec":${f"$tSnapScan%.1f"},"snap_files_scanned":${snapPlan.filesScanned},"snap_files_total":${snapPlan.filesTotal},""" +
-        s""""snap_agg_inc_sec":${f"$tSnapAggInc%.1f"},"snap_merge_files_rewritten":${snapMerge.filesRewritten},""" +
+        s""""snap_agg_inc_sec":${f"$tSnapAggInc%.1f"},"snap_merge_files_with_dv":${snapMerge.filesWithDv},""" +
         s""""snap_merge_sec":${f"$tSnapMerge%.1f"},"snap_gc_sec":${f"$tSnapExpire%.1f"},""" +
         s""""docs_per_sec_chunk":${(nDocs / tChunk).toLong},"chunks_per_sec_store":${(stored / tStore).toLong}}"""
     )

@@ -912,13 +912,14 @@ object GraftCli {
         println(s"version=$v files_folded=$folded files_carried=$carried")
         0
       // snapshot-merge <table> <parquetDir> <keyCols,comma-sep> — keyed
-      // COW upsert: only files holding a matched key rewrite
+      // merge-on-read upsert: matched rows gain vector positions, the source
+      // lands as one file group; no data file rewrites
       case "snapshot-merge" :: table :: parquetDir :: keys :: Nil =>
         val m = graft.operators.Snapshots.merge(
           spark, table, spark.read.parquet(parquetDir), keys.split(",").toSeq)
-        println(s"version=${m.version} files_rewritten=${m.filesRewritten} " +
-          s"files_untouched=${m.filesUntouched} rows_updated=${m.rowsUpdated} " +
-          s"rows_inserted=${m.rowsInserted}")
+        println(s"version=${m.version} rows_deleted=${m.rowsDeleted} " +
+          s"files_with_dv=${m.filesWithDv} files_untouched=${m.filesUntouched} " +
+          s"rows_updated=${m.rowsUpdated} rows_inserted=${m.rowsInserted}")
         0
       case "snapshot-compact" :: rest0 =>
         val (settings, positional) = Settings.fromArgs(rest0)

@@ -167,6 +167,10 @@ object Snapshots {
   private def fileRows(spark: SparkSession, table: String, v: Long): DataFrame =
     manifest(spark, table, v).filter(col("kind") === "file")
 
+  /** The table-relative paths of the data files a version references. */
+  def dataFiles(spark: SparkSession, table: String, v: Long): Set[String] =
+    fileRows(spark, table, v).select("path").collect().map(_.getString(0)).toSet
+
   private lazy val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Driver-side fast path for a manifest's COMMIT row: the manifest is
@@ -308,7 +312,7 @@ object Snapshots {
   private def swapCurrent(table: String, expectedParent: Long, v: Long): Unit =
     store(table).swapPointer(table, expectedParent, v)
 
-  /** Commit a non-append (COW delete/merge, MOR delete, replace) whose base
+  /** Commit a non-append (COW delete, MOR delete/merge, replace) whose base
     * may have MOVED since the op planned its rewrite — the conflict rule
     * that lets a nightly `maintain()` coexist with a streaming append sink:
     *
@@ -1403,12 +1407,19 @@ object Snapshots {
     } finally { files.unpersist(); () }
   }
 
-  /** Outcome of a [[deleteWhereMor]]: the new version, how many files
-    * gained a (new or re-merged) deletion vector vs carried forward
-    * untouched, and the rows newly marked deleted.
+  /** Outcome of a keyed or merge-on-read op ([[deleteWhereMor]],
+    * [[deleteKeysMor]], [[mergeMor]], [[merge]], [[mergeIdempotent]],
+    * [[applyCdcIdempotent]]): the new version, the files that gained a (new
+    * or re-merged) deletion vector vs carried untouched, and the row split:
+    * live rows deleted (their retire key or predicate matched, or the upsert
+    * matching their key is itself retired), live rows replaced by a landing
+    * upsert row, and landing upsert rows less the distinct keys of the
+    * replaced rows (the inserts). No data file is rewritten, so there is no
+    * rewritten-file count.
     */
-  final case class MorDeleteStats(
-      version: Long, filesWithDv: Long, filesUntouched: Long, rowsDeleted: Long)
+  final case class MergeStats(
+      version: Long, filesWithDv: Long, filesUntouched: Long,
+      rowsDeleted: Long, rowsUpdated: Long, rowsInserted: Long)
 
   /** Merge-on-read delete: NO data file is rewritten — matching rows are
     * recorded as (file basename, row position) in a position-delete
@@ -1445,7 +1456,7 @@ object Snapshots {
   def deleteWhereMor(
       spark: SparkSession,
       table: String,
-      cond: Column): MorDeleteStats = {
+      cond: Column): MergeStats = {
     val parent = requireVersion(table)
     val files = fileRows(spark, table, parent).cache()
     val schema = tableSchema(spark, table, Some(parent))
@@ -1457,10 +1468,9 @@ object Snapshots {
         if (cands.isEmpty || cand.columns.isEmpty) null
         else cand.filter(cond).select(col("__file").as("file"), col("__pos").as("pos"),
           lit(null).cast(StringType).as("__mkey"))
-      val m = commitMorDelete(spark, table, parent, "delete", files, nFiles, cands, newPos,
+      commitMorDelete(spark, table, parent, "delete", files, nFiles, cands, newPos,
         files.limit(0).select(fileColNames.head, fileColNames.tail: _*),
         schema.map(_.json), mayMatch, txn = None).get
-      MorDeleteStats(m.version, m.filesWithDv, m.filesUntouched, m.rowsDeleted)
     } finally { files.unpersist(); () }
   }
 
@@ -1468,30 +1478,18 @@ object Snapshots {
     * [[deleteWhereMor]], and [[mergeMor]] with no upserts: rows whose key
     * columns match a row of `keys` mark as deleted positions; no data file
     * rewrites. Candidates are dismissed from the manifest by the key set's
-    * numeric/string bounds (exactly [[merge]]'s step 1), scanned once on a
-    * DV-applied read, and semi-joined against the key set (broadcast when
-    * small).
+    * numeric/string bounds (the same dismissal [[merge]]'s upsert keys get),
+    * scanned once on a DV-applied read, and semi-joined against the key set
+    * (broadcast when small).
     */
   def deleteKeysMor(
       spark: SparkSession,
       table: String,
       keys: DataFrame,
-      keyCols: Seq[String]): MorDeleteStats = {
+      keyCols: Seq[String]): MergeStats = {
     require(keyCols.nonEmpty, "deleteKeysMor needs at least one key column")
-    val m = mergeMor(spark, table, None, Nil, Some(keys), keyCols).get
-    MorDeleteStats(m.version, m.filesWithDv, m.filesUntouched, m.rowsDeleted)
+    mergeMor(spark, table, None, Nil, Some(keys), keyCols).get
   }
-
-  /** Outcome of a [[mergeMor]]: the new version, the files that gained a
-    * (new or re-merged) deletion vector vs carried untouched, and the row
-    * split: live rows deleted (their retire key matched, or the upsert
-    * matching their key is itself retired), live rows replaced by a landing
-    * upsert row, and landing upsert rows less the distinct keys of the
-    * replaced rows (the inserts).
-    */
-  final case class MergeMorStats(
-      version: Long, filesWithDv: Long, filesUntouched: Long,
-      rowsDeleted: Long, rowsUpdated: Long, rowsInserted: Long)
 
   /** Keyed MERGE plus keyed delete as ONE merge-on-read commit — a
     * batch's upserts and retirements under one manifest and one pointer
@@ -1504,15 +1502,17 @@ object Snapshots {
     *  - the `upserts` rows, minus those whose `retireCols` are retired,
     *    land as one fresh file group.
     *
-    * The table that results is exactly [[merge]] by `keyCols` followed by
-    * [[deleteKeysMor]] by `retireCols`, but the write is ∝ the batch, not
+    * The table that results is exactly a keyed upsert by `keyCols`
+    * followed by a delete by `retireCols`, but the write is ∝ the batch, not
     * the files holding its keys, and it is one atomic commit instead of
     * two. Source keys must be unique (the MERGE precondition). Recorded as
     * op `merge`, or `delete` when `upserts` is None ([[deleteKeysMor]]).
-    * `txn` tags the commit exactly-once as in [[mergeOpt]]: None iff the
-    * transaction was already committed by a concurrent writer. A
-    * concurrent append conflicts iff its stats box may hold an upsert key
-    * or a retired key.
+    * `txn` tags the commit exactly-once: None iff the transaction was
+    * already committed by a concurrent writer (re-checked inside the commit
+    * lock). A concurrent append conflicts iff its stats box may hold an
+    * upsert key or a retired key. The schema evolves and is validated
+    * before anything is written: a type-conflicting upsert throws with no
+    * file left behind.
     */
   def mergeMor(
       spark: SparkSession,
@@ -1522,12 +1522,14 @@ object Snapshots {
       retire: Option[DataFrame],
       retireCols: Seq[String],
       statsCols: Seq[String] = null,
-      txn: Option[(String, Long)] = None): Option[MergeMorStats] = {
+      txn: Option[(String, Long)] = None): Option[MergeStats] = {
     require(upserts.isEmpty || keyCols.nonEmpty, "mergeMor upserts need a key column")
     require(retire.isEmpty || retireCols.nonEmpty, "mergeMor retirement needs a key column")
     val parent = requireVersion(table)
-    val files = fileRows(spark, table, parent).cache()
     val tblSchema = tableSchema(spark, table, Some(parent))
+    // a type conflict throws here, before any file is written
+    val schema = upserts.fold(tblSchema)(u => Some(evolveSchema(tblSchema, u.schema)))
+    val files = fileRows(spark, table, parent).cache()
     // the source feeds the key bounds, the position join and the appended
     // group: computed once
     val src = upserts.map(_.cache())
@@ -1586,7 +1588,6 @@ object Snapshots {
           }
           (retired ++ replaced ++ dropped).reduce(_ unionByName _)
         }
-      val schema = upserts.fold(tblSchema)(u => Some(evolveSchema(tblSchema, u.schema)))
       commitMorDelete(spark, table, parent, if (upserts.isDefined) "merge" else "delete",
         files, nFiles, cands, newPos, entries, schema.map(_.json), mayMatch, txn)
     } finally {
@@ -1629,7 +1630,7 @@ object Snapshots {
       entries: DataFrame,
       schemaJson: Option[String],
       conflicts: Column,
-      txn: Option[(String, Long)]): Option[MergeMorStats] = {
+      txn: Option[(String, Long)]): Option[MergeStats] = {
     val v = parent + 1
     // footer-built entries are a local relation: this collect runs no job
     val appended = entries.select("rows").collect().map(_.getLong(0)).sum
@@ -1702,7 +1703,7 @@ object Snapshots {
         }
       commitRebase(spark, table, parent, op, preserved, entries, Some(conflicts), txn,
         schemaJson)
-        .map(vc => MergeMorStats(vc, perFile.size.toLong, nFiles - perFile.size,
+        .map(vc => MergeStats(vc, perFile.size.toLong, nFiles - perFile.size,
           deleted - updated, updated, appended - matchedKeys))
     } finally if (newPos != null) newPos.unpersist(): Unit
   }
@@ -1718,7 +1719,7 @@ object Snapshots {
     def pred: Column = boxPred(num, str)
   }
 
-  /** The [[KeyBox]] of each key set that [[merge]] and [[mergeMor]] prune
+  /** The [[KeyBox]] of each key set that [[mergeMor]] prunes
     * candidate files with, in ONE aggregate job over every set (a union
     * with each set's columns renamed apart). None for an absent or empty
     * set: it matches no file. A set whose keys have no bounds (all null,
@@ -1761,37 +1762,17 @@ object Snapshots {
     sets.indices.map(i => boxes.getOrElse(i, None))
   }
 
-  /** Outcome of a [[merge]]: the new version, the copy-on-write file
-    * economics (rewritten vs carried-by-reference), and the row split
-    * (table rows replaced by a source row vs fresh inserts).
-    */
-  final case class MergeStats(
-      version: Long,
-      filesRewritten: Long,
-      filesUntouched: Long,
-      rowsUpdated: Long,
-      rowsInserted: Long)
-
-  /** Keyed MERGE (upsert) as a copy-on-write commit — the Delta/Iceberg
-    * `MERGE INTO` discipline on this table format: every table row whose
-    * key matches a source row is REPLACED by that source row, and source
-    * rows with no match are inserted. Source keys must be unique (the
-    * standard MERGE precondition; duplicate source keys make the result
-    * order-dependent).
-    *
-    * Scale shape (the reason this isn't read-all/rewrite-all):
-    *  1. **Stats prune.** Files whose numeric-key stats box can't intersect
-    *     the source's key bounds are dismissed from the MANIFEST alone.
-    *  2. **Key-column scan.** Surviving candidates are scanned on the key
-    *     columns ONLY (columnar projection) and semi-joined against the
-    *     source's key set — Spark broadcasts the small side unhinted — to
-    *     find the files that actually hold a matched key.
-    *  3. **COW rewrite.** Only those files rewrite (matched rows dropped,
-    *     source rows unioned in); everything else carries forward BY
-    *     REFERENCE, exactly like [[deleteWhere]].
-    * The commit is recorded as op `merge` — a non-append — so
-    * [[diffAppended]] signals fallback and [[IncrementalAgg]] recomputes,
-    * keeping the insert-only-lineage contract honest.
+  /** Keyed MERGE (upsert) — the Delta/Iceberg `MERGE INTO` discipline:
+    * every live row whose key matches a `source` row is REPLACED by that
+    * row, and source rows with no match are inserted. Source keys must be
+    * unique (the standard MERGE precondition; duplicate source keys make the
+    * result order-dependent). This is [[mergeMor]] with nothing retired:
+    * ONE merge-on-read commit recorded as op `merge` (a non-append, so
+    * [[diffAppended]] signals fallback and [[IncrementalAgg]] recomputes);
+    * matched rows gain deletion-vector positions, the source lands as one
+    * fresh file group, and no data file is rewritten. Throws
+    * ConcurrentModificationException iff `txn` was already committed by a
+    * concurrent writer.
     */
   def merge(
       spark: SparkSession,
@@ -1799,94 +1780,10 @@ object Snapshots {
       source: DataFrame,
       keyCols: Seq[String],
       statsCols: Seq[String] = null,
-      maxRecordsPerFile: Long = 1000000L,
       txn: Option[(String, Long)] = None): MergeStats =
-    mergeOpt(spark, table, source, keyCols, statsCols, maxRecordsPerFile, txn).getOrElse(
+    mergeMor(spark, table, Some(source), keyCols, None, Nil, statsCols, txn).getOrElse(
       throw new java.util.ConcurrentModificationException(
         s"transaction ${txn.get} already committed at $table by a concurrent writer"))
-
-  /** [[merge]] returning None iff `txn` was already committed by a
-    * concurrent writer (re-checked inside the commit lock, like
-    * [[commitStagedOpt]]) — the path [[mergeIdempotent]] and
-    * [[applyCdcIdempotent]] ride.
-    */
-  def mergeOpt(
-      spark: SparkSession,
-      table: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      statsCols: Seq[String] = null,
-      maxRecordsPerFile: Long = 1000000L,
-      txn: Option[(String, Long)] = None): Option[MergeStats] = {
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val parent = requireVersion(table)
-    val v = parent + 1
-    val files = fileRows(spark, table, parent).cache()
-    val tblSchema = tableSchema(spark, table, Some(parent))
-    val newSchema = evolveSchema(tblSchema, source.schema)
-    val srcKeys = source.select(keyCols.map(col): _*).distinct().cache()
-    var candidates: DataFrame = null
-    try {
-      // (1) manifest-side dismissal by the source's key bounds (an empty
-      // source matches no file)
-      val mayMatch = keyBoxes(Seq(Some(srcKeys) -> keyCols)).head.fold(lit(false))(_.pred)
-      candidates = files.filter(mayMatch).cache()
-      // (2) key-only scan of the candidates: which files hold a matched key?
-      // (files are matched by part-file basename — globally unique, each
-      // carries its write job's UUID — so no path-prefix arithmetic; the
-      // metadata-sourced __file is join-stable, where input_file_name()
-      // would blank after the deletion-vector anti-join's shuffle)
-      val candScan = readFilesMeta(spark, table, candidates, tblSchema)
-      val matchedKeys =
-        if (candScan.columns.isEmpty) srcKeys.limit(0)
-        else candScan.select((keyCols.map(col) :+ col("__file")): _*)
-          .join(srcKeys, keyCols, "left_semi")
-      // ONE job answers both "which files hold a matched key" and "how many
-      // distinct source keys matched" — they used to be two actions over a
-      // cached intermediate, and at this protocol's cadence every action's
-      // planning round-trip counts (ProfileOne: ~half of a merge-heavy
-      // entry's wall is driver planning)
-      val (touchedNames: Set[String], matchedSrc: Long) =
-        if (candScan.columns.isEmpty) (Set.empty[String], 0L)
-        else {
-          val r = matchedKeys.agg(
-            collect_set(col("__file")), countDistinct(keyCols.head, keyCols.tail: _*)).head()
-          (r.getSeq[String](0).toSet, r.getLong(1))
-        }
-      val baseName = element_at(split(col("path"), "/"), -1)
-      val touched = candidates.filter(baseName.isin(touchedNames.toSeq: _*))
-      val untouched = files.join(touched.select("path"), Seq("path"), "left_anti")
-      // (3) rewrite only the touched files: matched rows out, source in
-      val kept =
-        if (touchedNames.isEmpty) source.limit(0)
-        else readFiles(spark, table, touched, tblSchema).join(srcKeys, keyCols, "left_anti")
-      // table rows replaced (≥ matched source keys if the table held
-      // duplicate keys) vs source rows landing with no prior match;
-      // LIVE rows = physical minus deletion-vector-marked
-      val rowsUpdated =
-        if (touchedNames.isEmpty) 0L
-        else touched.agg(coalesce(
-          sum(col("rows") - coalesce(col("dv_rows"), lit(0L))), lit(0L)))
-          .head().getLong(0) - kept.count()
-      val rowsInserted = source.count() - matchedSrc
-      // allowMissingColumns: the source may evolve the schema (new columns
-      // null out in kept rows) or omit evolved columns (null in its rows)
-      val newContent = kept.unionByName(source, allowMissingColumns = true)
-      val stats = Option(statsCols).getOrElse(defaultStatsCols(newContent))
-      val entries =
-        writeFileGroup(spark, table, v, newContent, stats, maxRecordsPerFile)
-          .select(fileColNames.head, fileColNames.tail: _*)
-      commitRebase(spark, table, parent, "merge",
-        untouched.select(fileColNames.head, fileColNames.tail: _*), entries,
-        Some(mayMatch), txn,
-        schemaJson = Some(newSchema.json))
-        .map(vc => MergeStats(vc, touchedNames.size.toLong,
-          files.count() - touchedNames.size, rowsUpdated, rowsInserted))
-    } finally {
-      files.unpersist(); srcKeys.unpersist()
-      if (candidates != null) candidates.unpersist(): Unit
-    }
-  }
 
   /** Conform `df` to `schema`: schema's columns in order, missing ones
     * null-filled, extra ones dropped, types cast (a no-op unless an
@@ -1911,10 +1808,11 @@ object Snapshots {
     *    [[diffAppended]]).
     *  - `delete`/`merge`/`overwrite`: the file-set diff vs the parent —
     *    removed files' live rows `exceptAll` added files' rows are the
-    *    deletes, the reverse are the inserts (COW bounds removed+added to
-    *    the touched files; a merge-on-read delete changes no files at
-    *    all and is read as its DELTA of deletion-vector positions joined
-    *    back to the rows they name).
+    *    deletes, the reverse are the inserts (a COW delete bounds
+    *    removed+added to the touched files; a merge-on-read delete or merge
+    *    removes no file, so its deletes are read as its DELTA of
+    *    deletion-vector positions joined back to the rows they name, and a
+    *    merge's inserts are its appended file group).
     *  - `replace` (compaction) is row-preserving by contract and emits
     *    nothing — a layout change is not a data change.
     *
@@ -2058,10 +1956,10 @@ object Snapshots {
     }
   }
 
-  /** Exactly-once keyed MERGE for replayable sources — [[merge]] tagged
-    * `(appId, txnV)`, with a replay of an already-committed transaction
-    * detected from the commit log and skipped (returns None), exactly
-    * like [[appendIdempotent]]. This is what makes a restart-after-crash
+  /** Exactly-once keyed MERGE for replayable sources — [[merge]]'s one
+    * merge-on-read commit tagged `(appId, txnV)`, with a replay of an
+    * already-committed transaction detected from the commit log and skipped
+    * (returns None), exactly like [[appendIdempotent]]. This is what makes a restart-after-crash
     * streaming CDC-upsert microbatch land exactly once
     * ([[graft.streaming.StreamingPipeline.snapshotUpsertWriter]] calls it
     * per batch with the checkpoint's batchId).
@@ -2073,20 +1971,12 @@ object Snapshots {
       keyCols: Seq[String],
       appId: String,
       txnV: Long,
-      statsCols: Seq[String] = null,
-      maxRecordsPerFile: Long = 1000000L): Option[MergeStats] = {
-    // unlocked pre-check skips the rewrite on a plain replay; the in-lock
-    // re-check inside mergeOpt closes the concurrent-same-appId window
+      statsCols: Seq[String] = null): Option[MergeStats] =
+    // unlocked pre-check skips the write on a plain replay; the in-lock
+    // re-check inside mergeMor closes the concurrent-same-appId window
     if (lastTxn(spark, table, appId).exists(_ >= txnV)) None
-    else mergeOpt(spark, table, source, keyCols, statsCols, maxRecordsPerFile,
+    else mergeMor(spark, table, Some(source), keyCols, None, Nil, statsCols,
       Some((appId, txnV)))
-  }
-
-  /** Outcome of an [[applyCdcIdempotent]]: the final table version, rows
-    * marked deleted, and the merge's row split.
-    */
-  final case class CdcStats(
-      version: Long, rowsDeleted: Long, rowsUpdated: Long, rowsInserted: Long)
 
   /** Apply one CDC batch — keyed upserts AND deletes — exactly once, as
     * ONE merge-on-read commit ([[mergeMor]]): rows whose `opCol` value is
@@ -2108,7 +1998,7 @@ object Snapshots {
       keyCols: Seq[String],
       opCol: String,
       appId: String,
-      txnV: Long): Option[CdcStats] = {
+      txnV: Long): Option[MergeStats] = {
     require(batch.columns.contains(opCol), s"batch lacks op column '$opCol'")
     if (lastTxn(spark, table, appId).exists(_ >= txnV)) return None
     // None here means a concurrent same-appId writer landed this txn while
@@ -2117,7 +2007,6 @@ object Snapshots {
       Some(batch.filter(col(opCol) =!= "delete").drop(opCol)), keyCols,
       Some(batch.filter(col(opCol) === "delete").select(keyCols.map(col): _*)), keyCols,
       txn = Some((appId, txnV)))
-      .map(m => CdcStats(m.version, m.rowsDeleted, m.rowsUpdated, m.rowsInserted))
   }
 
   /** Rows added by APPEND commits in `(fromV, toV]` — the incremental read:

@@ -264,12 +264,13 @@ object SnapshotQueries {
       Seq("K1", "C16")
     ),
 
-    // Copy-on-write MERGE (keyed upsert): target = even docs in 4 range
+    // Keyed MERGE (upsert, merge-on-read): target = even docs in 4 range
     // stripes (4 files); source = updates for the stripe-0 multiples of 10
     // (+1,000,000 n_chars) plus inserts (doc_id % 10 = 5, all odd = no
-    // match). Only stripe 0 holds a matched key, so exactly 1 file
-    // rewrites and 3 carry by reference - the structural pins - and the
-    // oracle replays the upsert arithmetic for the content pins.
+    // match). Only stripe 0 holds a matched key, so exactly 1 file gains a
+    // deletion vector, 3 carry untouched and no pre-merge file leaves the
+    // manifest - the structural pins - and the oracle replays the upsert
+    // arithmetic for the content pins.
     "k_snapshot_merge" -> Q(
       (s, d) => {
         val t = fresh(d, "snap_merge")
@@ -285,11 +286,14 @@ object SnapshotQueries {
         val source = docs.filter(col("doc_id") % 10 === 0 && col("doc_id") < w)
           .withColumn("n_chars", col("n_chars") + 1000000L)
           .unionByName(docs.filter(col("doc_id") % 10 === 5))
+        val before = Snapshots.dataFiles(s, t, Snapshots.currentVersion(t).get)
         val m = Snapshots.merge(s, t, source, Seq("doc_id"))
+        val rewritten = (before -- Snapshots.dataFiles(s, t, m.version)).size.toLong
         Snapshots.read(s, t).agg(
           count(lit(1)).as("n_rows"),
           sum(col("n_chars")).as("sum_chars"),
-          lit(m.filesRewritten).as("files_rewritten"),
+          lit(m.filesWithDv).as("files_with_dv"),
+          lit(rewritten).as("files_rewritten"),
           lit(m.filesUntouched).as("files_untouched"),
           lit(m.rowsUpdated).as("rows_updated"),
           lit(m.rowsInserted).as("rows_inserted"))
@@ -302,7 +306,8 @@ object SnapshotQueries {
              |       CAST((SELECT sum(n_chars) FROM documents WHERE doc_id % 2 = 0)
              |     + 1000000 * (SELECT count(*) FROM documents, p WHERE doc_id % 10 = 0 AND doc_id < w)
              |     + (SELECT sum(n_chars) FROM documents WHERE doc_id % 10 = 5) AS BIGINT) AS sum_chars,
-             |       CAST(1 AS BIGINT) AS files_rewritten,
+             |       CAST(1 AS BIGINT) AS files_with_dv,
+             |       CAST(0 AS BIGINT) AS files_rewritten,
              |       CAST(3 AS BIGINT) AS files_untouched,
              |       (SELECT count(*) FROM documents, p
              |        WHERE doc_id % 10 = 0 AND doc_id < w) AS rows_updated,

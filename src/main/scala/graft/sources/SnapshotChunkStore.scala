@@ -69,7 +69,7 @@ final class SnapshotChunkStore(val path: String) extends KeyedChunkStore {
 
   private def commitDelta(
       spark: SparkSession, upserts: Option[DataFrame], retireDocs: Option[DataFrame]
-  ): Snapshots.MergeMorStats = {
+  ): Snapshots.MergeStats = {
     ensure(spark)
     // MERGE requires unique source keys; resolve within-batch duplicates
     // exactly like Overlay's tie-break (chunkIndex descending)

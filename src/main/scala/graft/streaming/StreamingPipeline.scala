@@ -534,15 +534,6 @@ object StreamingPipeline {
         graft.operators.Snapshots.appendIdempotent(s, table, batch, appId, batchId): Unit
       }
 
-  /** Exactly-once streaming keyed UPSERT into a snapshot table — the
-    * CDC-upsert twin of [[snapshotWriter]]: each microbatch MERGEs by key
-    * (copy-on-write: only files holding a matched key rewrite; manifest
-    * stats dismiss the rest), tagged `(appId, batchId)` in the commit's
-    * transaction markers so a crash-restart replay is detected from the
-    * commit log and skipped ([[graft.operators.Snapshots.mergeIdempotent]]).
-    * Duplicate keys WITHIN a microbatch violate the MERGE precondition —
-    * reduce upstream to latest-wins (e.g. max-by sequence column) first.
-    */
   /** Exactly-once streaming CDC APPLY into a snapshot table — the full
     * Debezium-shaped sink: each microbatch carries per-key latest states
     * with an op column (`delete` retires the key, anything else upserts
@@ -571,6 +562,17 @@ object StreamingPipeline {
           s, table, batch, keyCols, opCol, appId, batchId): Unit
       }
 
+  /** Exactly-once streaming keyed UPSERT into a snapshot table — the
+    * CDC-upsert twin of [[snapshotWriter]]: each microbatch MERGEs by key
+    * as one merge-on-read commit (matched rows gain deletion-vector
+    * positions, the batch lands as one file group, no data file rewrites;
+    * manifest stats dismiss files that cannot hold a key), tagged
+    * `(appId, batchId)` in the commit's transaction markers so a
+    * crash-restart replay is detected from the commit log and skipped
+    * ([[graft.operators.Snapshots.mergeIdempotent]]). Duplicate keys WITHIN
+    * a microbatch violate the MERGE precondition — reduce upstream to
+    * latest-wins (e.g. max-by sequence column) first.
+    */
   def snapshotUpsertWriter(
       source: DataFrame,
       table: String,

@@ -227,7 +227,7 @@ class SnapshotSpec extends SparkSpec {
     assert(r4.mode == "full" && ids(r4.df) == (5L until 23L).toSet)
   }
 
-  test("merge upserts by key, rewriting only files that hold a matched key") {
+  test("merge upserts by key; only files holding a matched key get vectors") {
     val t = tmpDir("snap-merge")
     Snapshots.create(spark, t)
     // three appends = three disjoint doc_id ranges = three files
@@ -239,21 +239,20 @@ class SnapshotSpec extends SparkSpec {
       .unionByName(docs(5, idFrom = 100).withColumn("n_chars", lit(-2L)))
     val m = Snapshots.merge(spark, t, source, Seq("doc_id"))
     assert(m.version == 4)
-    assert(m.filesRewritten == 1 && m.filesUntouched == 2,
+    assert(m.filesWithDv == 1 && m.filesUntouched == 2,
       s"only the [0,10) file holds matched keys: $m")
-    assert(m.rowsUpdated == 5 && m.rowsInserted == 5, s"row split: $m")
+    assert(m.rowsUpdated == 5 && m.rowsInserted == 5 && m.rowsDeleted == 0, s"row split: $m")
+    assert(Snapshots.dataFiles(spark, t, 3).subsetOf(Snapshots.dataFiles(spark, t, 4)),
+      "merge rewrites no data file: every pre-merge file stays referenced")
     // oracle: target rows with unmatched keys + all source rows
     val got = Snapshots.read(spark, t)
     assert(got.count() == 35)
     assert(got.filter(col("n_chars") === -1L).count() == 5)
     assert(got.filter(col("n_chars") === -2L).count() == 5)
     assert(ids(got) == ((0L until 30L) ++ (100L until 105L)).toSet)
-    // untouched files carried BY REFERENCE (same physical paths)
-    val before = Snapshots.read(spark, t, Some(3)).filter(col("doc_id") >= 10 && col("doc_id") < 30)
-      .select(input_file_name()).distinct().as[String].collect().toSet
-    val after = got.filter(col("doc_id") >= 10 && col("doc_id") < 30)
-      .select(input_file_name()).distinct().as[String].collect().toSet
-    assert(before == after, "files without matched keys must not rewrite")
+    // files without matched keys carry untouched: no vector, no rewrite
+    assert(fileEntries(4, t).count(r => r.getAs[String]("dv_path") != null) == 1,
+      "only the file holding matched keys gains a vector")
     // time travel: pre-merge version still shows the old rows
     assert(Snapshots.read(spark, t, Some(3)).filter(col("n_chars") < 0).count() == 0)
     // merge breaks insert-only lineage -> diff signals fallback
@@ -265,9 +264,62 @@ class SnapshotSpec extends SparkSpec {
     Snapshots.create(spark, t)
     Snapshots.append(spark, t, docs(10).coalesce(1))
     val m = Snapshots.merge(spark, t, docs(5, idFrom = 50), Seq("doc_id"))
-    assert(m.filesRewritten == 0 && m.filesUntouched == 1)
+    assert(m.filesWithDv == 0 && m.filesUntouched == 1)
     assert(m.rowsUpdated == 0 && m.rowsInserted == 5)
+    assert(Snapshots.dataFiles(spark, t, 1).subsetOf(Snapshots.dataFiles(spark, t, 2)),
+      "every pre-merge file stays referenced")
     assert(ids(Snapshots.read(spark, t)) == ((0L until 10L) ++ (50L until 55L)).toSet)
+  }
+
+  test("merge, mergeIdempotent and the upsert sink each land one merge commit, no file rewritten") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val t = tmpDir("snap-merge-one") + "/t"
+    Snapshots.create(spark, t)
+    Snapshots.append(spark, t, docs(10).coalesce(1))
+    Snapshots.append(spark, t, docs(10, idFrom = 10).coalesce(1))
+    // one `merge` commit; every parent file stays referenced and the new
+    // files are one appended group
+    def landsOne(op: => Unit): Unit = {
+      val v = Snapshots.currentVersion(t).get
+      op
+      assert(Snapshots.currentVersion(t).contains(v + 1))
+      assert(Snapshots.commitInfo(spark, t, v + 1).op == "merge")
+      val before = Snapshots.dataFiles(spark, t, v)
+      val after = Snapshots.dataFiles(spark, t, v + 1)
+      assert(before.subsetOf(after), s"a data file was rewritten: ${before -- after}")
+      assert((after -- before).map(_.split("/")(1)).size == 1, s"new files: ${after -- before}")
+    }
+    landsOne(Snapshots.merge(spark, t,
+      docs(3).withColumn("n_chars", lit(1L)), Seq("doc_id")): Unit)
+    landsOne(Snapshots.mergeIdempotent(spark, t,
+      docs(3, idFrom = 8).withColumn("n_chars", lit(2L)), Seq("doc_id"), "app", 0L): Unit)
+    val mem = MemoryStream[(Long, String, Long)]
+    mem.addData((12L, "src0", 3L), (40L, "src1", 3L))
+    landsOne(graft.streaming.StreamingPipeline.snapshotUpsertWriter(
+      mem.toDF().toDF("doc_id", "source", "n_chars"), t, tmpDir("snap-merge-one-ckpt"),
+      appId = "sink", keyCols = Seq("doc_id")).start().awaitTermination())
+    val got = Snapshots.read(spark, t)
+    assert(got.count() == 21L)
+    assert(got.filter(col("n_chars").between(1L, 3L)).select("doc_id").as[Long]
+      .collect().toSet == Set(0L, 1L, 2L, 8L, 9L, 10L, 12L, 40L))
+  }
+
+  test("a type-conflicting merge throws before writing: version and data files unchanged") {
+    import scala.jdk.CollectionConverters._
+    val t = tmpDir("snap-merge-conflict")
+    Snapshots.create(spark, t)
+    Snapshots.append(spark, t, docs(10).coalesce(1))
+    def dataDir(): Set[String] =
+      JFiles.walk(JPaths.get(s"$t/data")).iterator().asScala.map(_.toString).toSet
+    val v = Snapshots.currentVersion(t)
+    val onDisk = dataDir()
+    val bad = docs(2).withColumn("n_chars", lit("oops"))
+    intercept[IllegalArgumentException](Snapshots.merge(spark, t, bad, Seq("doc_id")))
+    assert(Snapshots.currentVersion(t) == v && dataDir() == onDisk, "merge left files behind")
+    intercept[IllegalArgumentException](Snapshots.mergeMor(spark, t, Some(bad), Seq("doc_id"),
+      Some(Seq("src1").toDF("source")), Seq("source")))
+    assert(Snapshots.currentVersion(t) == v && dataDir() == onDisk, "mergeMor left files behind")
   }
 
   test("manifest-side pruning skips files soundly and keeps results exact") {
@@ -820,29 +872,27 @@ class SnapshotSpec extends SparkSpec {
     // a table of two files with a prior vector (key 7), keyed by doc_id,
     // retired by source; upserts carry explicit sources so 32 is retired,
     // and 13's upsert is retired while its live row (src1) is not
-    def base(t: String): Unit = {
-      Snapshots.create(spark, t)
-      Snapshots.append(spark, t, docs(10).coalesce(1))
-      Snapshots.append(spark, t, docs(10, idFrom = 10).coalesce(1))
-      Snapshots.deleteKeysMor(spark, t, Seq(7L).toDF("doc_id"), Seq("doc_id")): Unit
-    }
+    val one = tmpDir("snap-mor-merge")
+    Snapshots.create(spark, one)
+    Snapshots.append(spark, one, docs(10).coalesce(1))
+    Snapshots.append(spark, one, docs(10, idFrom = 10).coalesce(1))
+    Snapshots.deleteKeysMor(spark, one, Seq(7L).toDF("doc_id"), Seq("doc_id")): Unit
     val ups = Seq((5L, "src0", 5555L), (7L, "src1", 5555L), (12L, "src0", 5555L),
       (13L, "src2", 5555L), (30L, "src0", 5555L), (32L, "src2", 5555L))
       .toDF("doc_id", "source", "n_chars")
     val retire = Seq("src2").toDF("source")
-    val one = tmpDir("snap-mor-merge")
-    val two = tmpDir("snap-mor-merge-ref")
-    base(one); base(two)
+    val cols = Seq("doc_id", "source", "n_chars").map(col)
+    val old = Snapshots.read(spark, one, Some(3L)).select(cols: _*)
+    // the reference, replayed on plain DataFrames: old live rows without an
+    // upserted key, plus the upserts, minus every row whose key is retired
+    val want = old.join(ups.select("doc_id"), Seq("doc_id"), "left_anti")
+      .unionByName(ups).join(retire, Seq("source"), "left_anti").select(cols: _*)
     val m = Snapshots.mergeMor(spark, one, Some(ups), Seq("doc_id"),
       Some(retire), Seq("source")).get
-    Snapshots.merge(spark, two, ups, Seq("doc_id")): Unit
-    Snapshots.deleteKeysMor(spark, two, retire, Seq("source")): Unit
     // one commit, op merge, and the only new data file is the appended group
     assert(m.version == 4L && Snapshots.currentVersion(one).contains(4L))
     assert(Snapshots.commitInfo(spark, one, 4L).op == "merge")
-    def referenced(v: Long): Set[String] =
-      spark.read.json(f"$one/_log/v$v%08d").filter(col("kind") === "file")
-        .select("path").as[String].collect().toSet
+    def referenced(v: Long): Set[String] = Snapshots.dataFiles(spark, one, v)
     assert(referenced(3L).subsetOf(referenced(4L)) &&
       (referenced(4L) -- referenced(3L)).map(_.split("/")(1)).size == 1,
       "mergeMor rewrites no data file; its upserts land as one file group")
@@ -853,21 +903,24 @@ class SnapshotSpec extends SparkSpec {
     // an update
     assert((m.rowsDeleted, m.rowsUpdated, m.rowsInserted) == ((7L, 1L, 3L)), s"$m")
     assert(m.filesWithDv == 2L && m.filesUntouched == 0L, s"$m")
-    // the table equals the two-commit sequence's
-    val cols = Seq("doc_id", "source", "n_chars").map(col)
+    // the table equals the replay
     val a = Snapshots.read(spark, one).select(cols: _*)
-    val b = Snapshots.read(spark, two).select(cols: _*)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+    assert(a.exceptAll(want).count() == 0 && want.exceptAll(a).count() == 0)
     assert(ids(a) == (0L until 20L).toSet -- Set(2L, 8L, 11L, 13L, 14L, 17L) + 30L)
     assert(Snapshots.fastCount(spark, one) == a.count(), "dv_rows stay exact through the merge")
-    // the changelog over the one commit nets to the same signed multiset
-    def net(t: String, from: Long, to: Long): Set[(Long, String, Long, Long)] =
-      Snapshots.rowChanges(spark, t, from, to)
-        .withColumn("s", when(col("_change_type") === "insert", 1L).otherwise(-1L))
-        .groupBy("doc_id", "source", "n_chars").agg(sum("s").as("s"))
+    // the changelog over the one commit nets to the replay's signed
+    // multiset: +1 for a row only the replay holds, -1 for one only the old
+    // table holds
+    def signed(df: DataFrame, s: Long) = df.withColumn("s", lit(s))
+    def net(df: DataFrame): Set[(Long, String, Long, Long)] =
+      df.groupBy("doc_id", "source", "n_chars").agg(sum("s").as("s"))
         .filter(col("s") =!= 0L)
         .as[(Long, String, Long, Long)].collect().toSet
-    assert(net(one, 3L, 4L) == net(two, 3L, 5L) && net(one, 3L, 4L).nonEmpty)
+    val changes = Snapshots.rowChanges(spark, one, 3L, 4L)
+      .withColumn("s", when(col("_change_type") === "insert", 1L).otherwise(-1L))
+      .select((cols :+ col("s")): _*)
+    val expected = signed(want, 1L).unionByName(signed(old, -1L))
+    assert(net(changes) == net(expected) && net(changes).nonEmpty)
     // a later keyed delete folds this commit's vectors (no double count)
     val d = Snapshots.deleteKeysMor(spark, one, Seq(0L, 12L).toDF("doc_id"), Seq("doc_id"))
     assert(d.rowsDeleted == 2L)
@@ -1095,7 +1148,7 @@ class SnapshotSpec extends SparkSpec {
         (3000 + i * 10).toLong until (3005 + i * 10).toLong)).toSet)
   }
 
-  test("copy-on-write delete and merge do not resurrect vector-deleted rows") {
+  test("copy-on-write delete applies vectors; merge skips vector-deleted rows") {
     val t = tmpDir("snap-mor-cow")
     Snapshots.create(spark, t)
     Snapshots.append(spark, t, docs(20).coalesce(1))

@@ -1,13 +1,14 @@
 #!/usr/bin/env bash
 # End-to-end smoke of the snapshot-table CLI surface against real testdata:
 # create -> append -> merge-on-read delete -> manifest count -> changelog ->
-# shallow clone -> maintain -> SQL over the planner-integrated view (and a
+# shallow clone -> keyed merge (merge-on-read: one vector, no rewrite) ->
+# maintain -> SQL over the planner-integrated view (and a
 # -D conf override reaching the CLI session) ->
 # WARC ingest (externally-written gzip WARC) -> prepare over the ingested
 # crawl. Exercises the command paths
 # the ScalaTest specs reach only as library calls.
 #
-# Usage: bash tools/cli_smoke.sh   (after `sbt compile`; ~1 min)
+# Usage: bash tools/cli_smoke.sh   (after `sbt compile`; ~4 min on 4 cores)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 W=/tmp/graft/cli_smoke
@@ -30,6 +31,15 @@ with gzip.open('/tmp/graft/cli_smoke/crawl.warc.gz', 'wb') as f:
                  f"WARC-Date: 2024-01-01T00:00:00Z\r\nContent-Type: text/plain\r\n"
                  f"Content-Length: {len(body)}\r\n\r\n").encode())
         f.write(body); f.write(b"\r\n\r\n")
+# a two-file table for snapshot-merge (doc_id below / from 250) and its
+# source: 25 updates in the low file plus 5 fresh keys
+docs = "'/tmp/graft/cli_smoke/docs.parquet'"
+duckdb.sql(f"COPY (SELECT * FROM {docs} WHERE doc_id < 250) TO '/tmp/graft/cli_smoke/lo.parquet'")
+duckdb.sql(f"COPY (SELECT * FROM {docs} WHERE doc_id >= 250) TO '/tmp/graft/cli_smoke/hi.parquet'")
+duckdb.sql(f"""COPY (SELECT doc_id, text, lang, source, n_chars + 1000000 AS n_chars FROM {docs}
+                     WHERE doc_id < 250 AND doc_id % 10 = 0
+                     UNION ALL SELECT doc_id + 1000, text, lang, source, n_chars FROM {docs}
+                     WHERE doc_id < 5) TO '/tmp/graft/cli_smoke/ups.parquet'""")
 PY
 
 G snapshot-create "$T"
@@ -38,6 +48,21 @@ G snapshot-delete-mor "$T" "n_chars < 150"
 G snapshot-count "$T"
 G snapshot-changes "$T" 0 2
 G snapshot-clone "$T" "$W/clone"
+# keyed merge: the matched rows gain one vector in the low file, the source
+# lands as one file group, and every pre-merge data file stays referenced
+G snapshot-create "$W/mtbl"
+G snapshot-append "$W/mtbl" "$W/lo.parquet"
+G snapshot-append "$W/mtbl" "$W/hi.parquet"
+MG=$(G snapshot-merge "$W/mtbl" "$W/ups.parquet" doc_id)
+[[ "$MG" =~ (^|$'\n')version=3\ .*files_with_dv=1\ .*rows_updated=25\ rows_inserted=5($|$'\n') ]] \
+  || { echo "snapshot-merge: no version line with files_with_dv=1 rows_updated=25 rows_inserted=5: $MG"; exit 1; }
+python3 - << 'PY'
+import duckdb
+def files(v):
+    m = f"/tmp/graft/cli_smoke/mtbl/_log/v{v:08d}/*.json"
+    return {r[0] for r in duckdb.sql(f"SELECT path FROM read_json_auto('{m}') WHERE kind = 'file'").fetchall()}
+assert files(2) <= files(3), f"snapshot-merge rewrote {files(2) - files(3)}"
+PY
 G snapshot-maintain "$T" 1000000 1
 G snapshot-sql "$T" docs "SELECT count(*) AS n FROM docs WHERE n_chars >= 150" | tail -4
 # Spark's own settings win over the session defaults: a -D conf must reach
