@@ -135,12 +135,10 @@ object ExplainAudit {
       (small, shuffle)
     }
 
-    // A prepared (read-back) ANN graph pins its edge table hash-partitioned
-    // on src: the walk's per-hop frontier⋈edges equi-join must exchange
-    // ONLY the frontier side — one Exchange in the join plan, zero above
-    // the edge scan. (Broadcast off: mid-walk frontiers carry no size
-    // stats, so the real search can't broadcast them either.)
-    val graphHopNoExchange = {
+    // A graph search hop over a read-back index is ONE scan: the hop's node
+    // ids go out as an isin filter over vectors ∪ edges, so the executed
+    // plan holds no Exchange and no join at any corpus size.
+    val graphHopOneScan = {
       import spark.implicits._
       val dir = java.nio.file.Files.createTempDirectory("audit-graph").toString + "/g"
       val vecs = (0 until 40).map { i =>
@@ -150,22 +148,17 @@ object ExplainAudit {
       graft.operators.GraphAnn.writeGraph(
         graft.operators.GraphAnn.buildGraph(vecs, "id", "vec", dim = 2,
           degree = 3, nPlanes = 2, probes = 4, hubs = 4), dir)
-      val prep = graft.operators.GraphAnn.prepare(
-        graft.operators.GraphAnn.readGraph(spark, dir, "id", "vec"))
-      val frontier = Seq((1L, 2L), (3L, 4L)).toDF("qid", "src")
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val p = frontier.join(prep.edges, Seq("src")).queryExecution.executedPlan.toString
-        println(s"\n===== graph hop join over a prepared read-back index =====")
-        println(p)
-        "Exchange".r.findAllIn(p).length == 1
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      val p = graft.operators.GraphAnn.hopFetch(
+        graft.operators.GraphAnn.readGraph(spark, dir, "id", "vec"), Seq(1L, 2L, 3L))
+        .queryExecution.executedPlan.toString
+      println(s"\n===== graph search hop fetch over a read-back index =====")
+      println(p)
+      p.contains("Union") && !p.contains("Exchange") && !p.contains("Join")
     }
 
     val checks = Seq(
-      ("prepared graph-ann edges stay in place on the hop join (one Exchange: the frontier)",
-        graphHopNoExchange),
+      ("graph-ann search hop is one scan of vectors union edges (no Exchange, no join)",
+        graphHopOneScan),
       // recorded clustering discipline: after ONE clustered compact, an
       // APPEND's delta inherits the layout, so a key-range predicate over
       // the appended region still prunes manifest-side — streaming-append

@@ -273,8 +273,7 @@ object GraftCli {
     val qv = provider.embedBatch(Seq(query)).head
     import spark.implicits._
     val queries = Seq((0L, qv)).toDF("qid", "embedding")
-    GraphAnn.search(
-      GraphAnn.prepare(GraphAnn.readGraph(spark, graphPath, "chunkId", "embedding")),
+    GraphAnn.search(GraphAnn.readGraph(spark, graphPath, "chunkId", "embedding"),
       queries, "qid", "embedding", k, beam = math.max(16, k))
       .select(col("neighbor_id").as("chunkId"), col("sim"))
   }

@@ -1,8 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{In, InterpretedOrdering, Literal}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, StructField,
+  StructType}
 
+import graft.expressions.VecDot
 import graft.functions.VectorFunctions._
 
 /** Graph-based approximate nearest-neighbor search — the NSW family (Malkov
@@ -13,34 +19,36 @@ import graft.functions.VectorFunctions._
   *
   * The classic formulation is pointer-chasing: greedy walk from an entry
   * point, hop to whichever neighbor is closer to the query, keep a beam of
-  * the best candidates seen. A distributed engine has no pointers — but the
-  * walk IS a fixed number of relational rounds, and that is how this
-  * operator runs it:
+  * the best candidates seen. This operator keeps that shape and splits it
+  * between the cluster and the driver:
   *
   *   - the INDEX is two tables: the vectors and an undirected k-NN edge
   *     list (built once with the existing LSH two-sided join — no
-  *     all-pairs);
-  *   - one SEARCH HOP for a whole query COHORT is: frontier ⋈ edges
-  *     (equi-join on node) → anti-join the per-query `seen` set → join back
-  *     to vectors for scoring → per-query `top_k` (map-side combined).
-  *     Every exchange carries id/score pairs bounded by
-  *     `queries × beam × degree` rows — NEVER corpus-sized, and independent
-  *     of corpus row count;
-  *   - `maxHops` bounds the rounds; the `seen` anti-join guarantees
-  *     monotone progress (a node is scored at most once per query), so the
-  *     search also terminates early the moment a hop discovers nothing new.
+  *     all-pairs), and it stays distributed;
+  *   - one SEARCH HOP for a whole query COHORT is ONE job: the hop's newly
+  *     discovered node ids go out as an `isin` filter, one scan of
+  *     `vectors ∪ edges` returns their vectors and adjacency lists, and the
+  *     driver scores them, drops nodes already seen and picks the next
+  *     beam. No exchange, no join, no per-hop checkpoint — the probe-there,
+  *     merge-here shape of REPOSE (ICDE 2021);
+  *   - the per-query visited set lives in the driver and is bounded by the
+  *     cohort, never the corpus: `nSeeds + maxHops × beam × degree` rows
+  *     per query. `maxHops` bounds the rounds; a node is scored at most
+  *     once per query, so the search also stops the moment a hop discovers
+  *     nothing new.
   *
   * Why this shape at 100 TB: IVF probes read whole cells (`nProbes/k` of
   * the corpus per query); a graph search reads `beam × degree` vectors per
   * hop regardless of corpus size, which is why graph indexes win at high
-  * recall on billion-vector corpora. The relational re-expression keeps
-  * that property: per-hop cost scales with the query cohort, not the data,
-  * and the corpus is touched only through equi-joins an at-rest layout
-  * (edges and vectors co-bucketed by id) turns into pruned scans.
+  * recall on billion-vector corpora. Per-hop data scales with the query
+  * cohort; the scan itself prunes to the requested ids as far as the
+  * at-rest layout's row-group statistics allow.
   *
   * Determinism: seeds are the `nSeeds` smallest vector ids, similarities
   * round to 6dp BEFORE ranking, and `top_k(struct(sim, id))` breaks ties
-  * toward the larger id — the battery's shared cross-engine tie rule.
+  * toward the larger id — the battery's shared cross-engine tie rule. The
+  * driver ranks with Catalyst's own ordering and scores with the executors'
+  * kernel, so the answers are the ones a distributed walk computes.
   */
 object GraphAnn {
 
@@ -61,47 +69,30 @@ object GraphAnn {
       /** Caller-measured byte size, when the caller knows it better than
         * Catalyst: the edge-table pins sit above kNN-join/hub-union plans
         * whose join-multiplied estimates blow past any real size, which
-        * silently kept those pins at full parallelism — and every later
-        * hop's frontier exchange then aligned to that width (32 one-row
-        * tasks per hop at bench scale). The builders size it from COUNTED
-        * checkpoint rows instead (see [[buildGraph]]/[[buildGraphDescent]]).
+        * silently kept those pins at full parallelism. The builders size it
+        * from COUNTED checkpoint rows instead (see
+        * [[buildGraph]]/[[buildGraphDescent]]).
         */
       bytesHint: Option[BigInt] = None): DataFrame = {
     // partition count sized to the pinned table's DATA (64 MB per
-    // partition off the Catalyst estimate), floored at the walk width and
-    // capped by cluster parallelism — the pin job runs AQE-off (that is
-    // what records the partitioning), so without an explicit count it
-    // paid the full static shuffle-partition width on tables of any size;
-    // an unknown/huge estimate keeps the full-parallelism behavior.
+    // partition off the Catalyst estimate), capped by cluster parallelism —
+    // the pin job runs AQE-off (that is what records the partitioning), so
+    // without an explicit count it paid the full static shuffle-partition
+    // width on tables of any size; an unknown/huge estimate keeps the
+    // full-parallelism behavior.
     val par = df.sparkSession.sparkContext.defaultParallelism
     val bytes = bytesHint.getOrElse(df.queryExecution.optimizedPlan.stats.sizeInBytes)
-    val w = pinWidth(bytes, walkPartitions(df), par)
     org.apache.spark.sql.graft.CheckpointBridge.withAqeOff(df)(
-      _.repartition(w, col(key)).localCheckpoint())
+      _.repartition(pinWidth(bytes, par), col(key)).localCheckpoint())
   }
 
-  /** Pin width for `bytes` of pinned data: 64 MB per partition, floored at
-    * the walk width (the pin must carry at least the per-hop exchange
-    * width), capped at cluster parallelism. Pure — unit-pinned by
+  /** Pin width for `bytes` of pinned data: 64 MB per partition, at least
+    * one, capped at cluster parallelism. Pure — unit-pinned by
     * OptimizationR15Spec independent of the test harness' core count.
     */
-  private[operators] def pinWidth(bytes: BigInt, walkW: Int, par: Int): Int = {
+  private[operators] def pinWidth(bytes: BigInt, par: Int): Int = {
     val target = BigInt(64L * 1024 * 1024)
-    ((bytes + target - 1) / target).max(BigInt(walkW)).min(BigInt(par)).toInt
-  }
-
-  /** Exchange width for the walk's per-hop state rotations: the state is
-    * cohort-bounded BY CONSTRUCTION (`queries × beam × degree` rows per
-    * hop — never corpus-sized), so a handful of partitions carries it at
-    * any corpus scale; the knob sizes to COHORT volume (raise the env for
-    * million-query batch searches), never to core count — the round-14
-    * driver run showed per-partition constants beat parallelism exactly
-    * in this regime.
-    */
-  private def walkPartitions(df: DataFrame): Int = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    sys.env.get("SPARK_GRAFT_WALK_PARTITIONS").map(_.toInt)
-      .getOrElse(math.max(2, math.min(par, 8)))
+    ((bytes + target - 1) / target).max(BigInt(1)).min(BigInt(par)).toInt
   }
 
   /** A graph ANN index: `vectors` (id, vec) and the undirected `edges`
@@ -375,12 +366,8 @@ object GraphAnn {
       // hub seeding reference THIS table, never a re-derivation
       else Some(df.select(col(idCol)).orderBy(col(idCol)).limit(hubs).localCheckpoint())
     // the edge table IS the index: ONE materialization (otherwise every
-    // search hop re-runs the symmetrize/hub-link/distinct pipeline behind
-    // it), pinned HASH-PARTITIONED ON src so every hop's frontier⋈edges
-    // equi-join leaves the edge table in place and exchanges only the
-    // queries × beam frontier — without the pin the "bounded per-hop
-    // exchange" claim was half true: the frontier was bounded, but the
-    // edge side re-exchanged corpus-sized every hop. The pinning job is
+    // search hop's fetch re-runs the symmetrize/hub-link/distinct pipeline
+    // behind it), hash-partitioned on src. The pinning job is
     // distinct+repartition over id pairs read from the `directed`
     // checkpoint (the kNN join itself ran under AQE one step earlier), so
     // running it AQE-off costs nothing.
@@ -485,16 +472,20 @@ object GraphAnn {
         .select(col("_nd_src"), col("_x._nd_dst").as("_nd_dst"),
           col("_x._nd_sim").as("_nd_sim"), col("_x._nd_new").as("_nd_new"))
 
-    // eager internal-row rotation (see [[walk]]'s rotate): no external-Row
-    // round-trip on the adjacency state each refinement round
-    val held = scala.collection.mutable.Map.empty[String, org.apache.spark.rdd.RDD[_]]
-    def rotate(slot: String, dfr: DataFrame): (DataFrame, Long) = {
+    // eager internal-row rotation (no external-Row round-trip on the
+    // adjacency state each refinement round): the state holds ONE
+    // checkpointed RDD, and rotating in a round's table releases the
+    // previous one. The row count runs over the cached partitions.
+    var held: Option[org.apache.spark.rdd.RDD[_]] = None
+    def rotate(dfr: DataFrame): (DataFrame, Long) = {
       val ck = dfr.localCheckpoint()
-      val rdd = org.apache.spark.sql.graft.CheckpointBridge.internalRdd(ck)
-      val n = rdd.map(_.count()).getOrElse(ck.count())
-      held.get(slot).foreach(_.unpersist(blocking = false))
-      rdd.foreach(r => held(slot) = r)
-      (ck, n)
+      val rdd = org.apache.spark.sql.graft.CheckpointBridge.internalRdd(ck).getOrElse(
+        throw new IllegalStateException(
+          "buildGraphDescent: localCheckpoint exposed no checkpointed RDD, so the " +
+            "rotated adjacency state could never be released"))
+      held.foreach(_.unpersist(blocking = false))
+      held = Some(rdd)
+      (ck, rdd.count())
     }
     // deterministic micro-unit sum over the cached state — the audit value
     def sumSimMicro(st: DataFrame): Long =
@@ -509,7 +500,7 @@ object GraphAnn {
       .select(col(idCol).as("_nd_src"), col("neighbor_id").as("_nd_dst"),
         col("sim").as("_nd_sim"))
       .withColumn("_nd_new", lit(true))
-    var (state, stateRows) = rotate("state", topDeg(init))
+    var (state, stateRows) = rotate(topDeg(init))
     onRound(0, sumSimMicro(state), stateRows)
 
     var roundNo = 0
@@ -564,7 +555,7 @@ object GraphAnn {
         .unionByName(scored
           .select(col("_b").as("_nd_src"), col("_a").as("_nd_dst"), col("_nd_sim")))
         .withColumn("_nd_new", lit(true))
-      val (next, nextRows) = rotate("state", topDeg(
+      val (next, nextRows) = rotate(topDeg(
         state.withColumn("_nd_new", lit(false)).unionByName(additions)))
       val nNew = next.filter(col("_nd_new")).count()
       state = next
@@ -590,8 +581,7 @@ object GraphAnn {
       // same counted-rows sizing as [[buildGraph]]'s edge pin, off the
       // adjacency state's measured row count
       "src", Some(BigInt(4L * stateRows + hubs.toLong * hubs) * 32))
-    held.values.foreach(_.unpersist(blocking = false))
-    held.clear()
+    held.foreach(_.unpersist(blocking = false))
     vRdd.foreach(_.unpersist(blocking = false))
     AnnGraph(df.select(col(idCol), col(vecCol)), idCol, vecCol, edges, hubIds)
   }
@@ -639,8 +629,7 @@ object GraphAnn {
   }
 
   /** Persist the index: vectors and edges as parquet, edges repartitioned
-    * by `src` so a search hop's frontier⋈edges join co-locates with an
-    * at-rest bucketing.
+    * by `src` so each node's adjacency list lands in one file.
     */
   def writeGraph(graph: AnnGraph, path: String): Unit = {
     graph.vectors.write.mode(SaveMode.Overwrite).parquet(s"$path/vectors")
@@ -671,18 +660,6 @@ object GraphAnn {
       if (fs.exists(hp)) Some(spark.read.parquet(s"$path/hubs")) else None)
   }
 
-  /** Prepare a READ-BACK graph for repeated searching: materialize the edge
-    * table hash-partitioned on `src` (what [[buildGraph]] already does for
-    * in-memory graphs), so every subsequent hop join leaves the edges in
-    * place — a parquet file carries no partitioning metadata, and an
-    * unprepared read-back graph re-scans AND re-exchanges the edge table
-    * once per hop. Pay one scan+shuffle here, amortize over every search;
-    * skip for append-only maintenance ([[appendToGraph]] never joins on
-    * src). PLANS.md pins the one-Exchange-per-hop-join invariant.
-    */
-  def prepare(graph: AnnGraph): AnnGraph =
-    graph.copy(edges = pinPartitionedOn(graph.edges, "src"))
-
   /** Incremental index maintenance — the IVF/BM25/MinHash/PQ append
     * discipline applied to the graph: a new batch kNN-joins against the
     * STORED corpus ∪ itself (the corpus is never re-linked, never re-read
@@ -696,8 +673,7 @@ object GraphAnn {
     * batch is a no-op (no duplicate vectors — duplicated corpus rows would
     * surface as duplicate neighbors in search results). Edge rows may
     * duplicate across appends; [[search]] is insensitive to edge
-    * multiplicity (the per-hop candidate set is `distinct` before the seen
-    * anti-join).
+    * multiplicity (each hop's candidates are a set of node ids).
     *
     * `hubs > 0` links each appended vector to its nearest FROZEN hub —
     * the hub id set persisted with the index at build time (`$path/hubs`,
@@ -738,7 +714,7 @@ object GraphAnn {
     // per-src re-truncation at append time: symmetrization lands up to
     // `degree` REVERSE edges per append on a stored hot node, so without a
     // cap its degree grows unbounded across appends and the walk's bounded
-    // per-hop exchange (queries × beam × degree) silently degrades. Cosine
+    // per-hop fetch (queries × beam × degree ids) silently degrades. Cosine
     // is symmetric, so the kNN sim prices both directions; each append now
     // contributes at most `degree` kNN edges per touched src ([[compactGraph]]
     // heals the residual cross-append accumulation). Hub links are exempt —
@@ -770,7 +746,7 @@ object GraphAnn {
     * parquet files (per-file open cost dominates fragmented scans at
     * scale) and up to `degree` new edges per touched src (bounded per
     * append, unbounded across appends — hot nodes accumulate degree and
-    * the walk's `queries × beam × degree` per-hop exchange grows with
+    * the walk's `queries × beam × degree` per-hop fetch grows with
     * them). Compaction heals both:
     *
     *   - replay-duplicate edges collapse (`distinct`);
@@ -879,21 +855,15 @@ object GraphAnn {
   /** Beam search over the graph for a query cohort. Returns the per-query
     * top-`k` as `(queryIdCol, neighbor_id, sim)` — the [[Similarity.nnJoin]]
     * output shape, so the recall harness and downstream joins compose
-    * unchanged.
+    * unchanged. The answer is ranked in the driver and comes back as a
+    * local DataFrame: reading it runs no job.
     *
-    * State per round (all bounded by the cohort, never the corpus):
-    * `fresh` (queries × beam × degree) and the hop-tagged `seen`
-    * (queries × nodes-scored-so-far ≤ nSeeds + hops × beam × degree).
-    * Each round cuts lineage through one localCheckpoint rotation per
-    * state table (the PageRank/BpeTrainer discipline) so `maxHops` rounds
-    * hold a constant number of materialized tables.
-    */
-  /** `seedHubs > 0` switches entry-point selection from the global
+    * `seedHubs > 0` switches entry-point selection from the global
     * `nSeeds` smallest ids to PER-QUERY seeds: each query starts from its
     * `nSeeds` most-similar members of the `seedHubs`-wide hub set (the
     * same smallest-ids rule the build's routing layer uses, so a
     * hub-built graph is seeded on its own routing nodes) — HNSW's
-    * upper-layer descent as one broadcast scan over cohort × hubs rows.
+    * upper-layer descent, scored in the driver over the fetched hubs.
     * Personalized seeds start the walk near the answer, so the same
     * recall needs fewer hops.
     */
@@ -907,9 +877,15 @@ object GraphAnn {
       maxHops: Int = 4,
       nSeeds: Int = 16,
       seedHubs: Int = 0
-  ): DataFrame =
-    walk(graph, queries, queryIdCol, queryVecCol, k, beam, maxHops,
-      nSeeds, seedHubs)(seen => finalCut(seen, queryIdCol, k))
+  ): DataFrame = {
+    val rank = ranking(graph.vectors.schema(graph.idCol).dataType)
+    visitFrame(graph, queries.schema(queryIdCol).dataType,
+      walk(graph, queries, queryIdCol, queryVecCol, k, beam, maxHops, nSeeds, seedHubs) {
+        (_, visited) => visited.flatMap(_.sorted(rank).take(k))
+      }.flatten)
+      .select(col("_ga_qid").as(queryIdCol), col("_ga_node").as("neighbor_id"),
+        col("_ga_sim").as("sim"))
+  }
 
   /** Filtered ANN through the graph — the DiskANN filtered-search shape:
     * the WALK runs unrestricted (routing needs the whole graph; a
@@ -943,23 +919,25 @@ object GraphAnn {
       nSeeds: Int = 16,
       seedHubs: Int = 0,
       fallback: Boolean = true
-  ): DataFrame =
+  ): DataFrame = {
+    // resolve the allowed-id column BY NAME (`graph.idCol`) when present;
+    // positional `columns.head` on a multi-column input silently
+    // semi-joined on whatever happened to be first — an empty/wrong
+    // filter with no error. A single-column input of any name is
+    // unambiguous and stays accepted.
+    val allowedIdName =
+      if (allowed.columns.contains(graph.idCol)) graph.idCol
+      else if (allowed.columns.length == 1) allowed.columns.head
+      else throw new IllegalArgumentException(
+        s"searchFiltered: allowed-id set has columns " +
+          s"[${allowed.columns.mkString(", ")}] and none is the graph id " +
+          s"column '${graph.idCol}' — pass a single-column DataFrame or " +
+          s"name the id column '${graph.idCol}'.")
+    val allowedIds = allowed.select(col(allowedIdName).as("_ga_node"))
+    val qSchema = queries.select(col(queryIdCol), col(queryVecCol)).schema
     walk(graph, queries, queryIdCol, queryVecCol, k, beam, maxHops,
-      nSeeds, seedHubs) { seen =>
-      // resolve the allowed-id column BY NAME (`graph.idCol`) when present;
-      // positional `columns.head` on a multi-column input silently
-      // semi-joined on whatever happened to be first — an empty/wrong
-      // filter with no error. A single-column input of any name is
-      // unambiguous and stays accepted.
-      val allowedIdName =
-        if (allowed.columns.contains(graph.idCol)) graph.idCol
-        else if (allowed.columns.length == 1) allowed.columns.head
-        else throw new IllegalArgumentException(
-          s"searchFiltered: allowed-id set has columns " +
-            s"[${allowed.columns.mkString(", ")}] and none is the graph id " +
-            s"column '${graph.idCol}' — pass a single-column DataFrame or " +
-            s"name the id column '${graph.idCol}'.")
-      val allowedIds = allowed.select(col(allowedIdName).as("_ga_node"))
+      nSeeds, seedHubs) { (slice, visited) =>
+      val seen = visitFrame(graph, qSchema.head.dataType, visited.flatten)
       // materialized once (queries × k rows): the fallback plan reads the
       // cut three times (fill counts, the kept side, the deficient
       // anti-join) and would otherwise re-run the top-k per read
@@ -972,8 +950,8 @@ object GraphAnn {
         val filled = walkCut.groupBy(col(queryIdCol))
           .agg(count(lit(1)).as("_ga_nhits"))
           .filter(col("_ga_nhits") >= k).select(col(queryIdCol))
-        val deficient = queries
-          .select(col(queryIdCol), col(queryVecCol))
+        val deficient = org.apache.spark.sql.graft.LocalRows
+          .frame(graph.vectors.sparkSession, qSchema, slice)
           .join(filled, Seq(queryIdCol), "left_anti")
         val allowedVecs = graph.vectors
           .select(col(graph.idCol).as("_ga_node"), col(graph.vecCol).as("_ga_v"))
@@ -989,7 +967,8 @@ object GraphAnn {
         walkCut.join(deficient.select(col(queryIdCol)), Seq(queryIdCol), "left_anti")
           .unionByName(finalCut(exact, queryIdCol, k))
       }
-    }
+    }.reduce(_ unionByName _).localCheckpoint()
+  }
 
   private def finalCut(seen: DataFrame, queryIdCol: String, k: Int): DataFrame =
     seen.groupBy(col("_ga_qid"))
@@ -999,19 +978,91 @@ object GraphAnn {
         col("_ga_t._ga_node").as("neighbor_id"),
         col("_ga_t._ga_sim").as("sim"))
 
-  /** The beam walk itself: builds the full hop-tagged visited table
-    * `(_ga_qid, _ga_node, _ga_sim, _ga_hop)`, applies `finish` to it, and
-    * MATERIALIZES the finished result through one final localCheckpoint the
-    * caller owns — then releases every walk-internal checkpointed slot
-    * (`seen`, the cohort, the pinned vector table) before returning.
-    * Without the explicit
-    * release, each search leaked its final state RDDs for the session
-    * lifetime (until a GC cycle let the context cleaner find them); with
-    * it, repeated cohort searches hold exactly one small cached table each
-    * (the `queries × k` answer), freed by the cleaner when the caller drops
-    * the DataFrame.
+  /** Query rows per walk slice: the driver holds one slice's walk state
+    * (≤ `nSeeds|seedHubs + maxHops × beam × degree` visited rows per query,
+    * plus the vectors fetched for them) at a time. Every in-tree caller
+    * fits in one slice: the CLI asks one query, the battery ≤100, the
+    * probes ≤20.
     */
-  private def walk(
+  private val WalkSliceQueries = 1024
+
+  /** `top_k(struct(sim, node))`'s order: sim descending, then node
+    * descending in Catalyst's order (binary `UTF8String` order for string
+    * ids), over rows that start `(sim, node)`.
+    */
+  private def ranking(idType: DataType): Ordering[InternalRow] =
+    InterpretedOrdering.forSchema(Seq(DoubleType, idType)).reverse
+
+  /** Visited rows `(sim, node, hop, qid)` as a local DataFrame. */
+  private def visitFrame(graph: AnnGraph, qidType: DataType, rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.graft.LocalRows.frame(graph.vectors.sparkSession, StructType(Seq(
+      StructField("_ga_sim", DoubleType),
+      StructField("_ga_node", graph.vectors.schema(graph.idCol).dataType),
+      StructField("_ga_hop", IntegerType), StructField("_ga_qid", qidType))), rows)
+
+  private def floatElems(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) => true
+    case ArrayType(DoubleType, _) => false
+    case other => throw new IllegalArgumentException(
+      s"graph search needs ARRAY<FLOAT|DOUBLE> vectors, got ${other.catalogString}")
+  }
+
+  /** [[norm]] in the driver. */
+  private def normOf(v: ArrayData, isFloat: Boolean): java.lang.Double =
+    Option(v).flatMap(a => Option(VecDot.dot(a, a, isFloat, isFloat)))
+      .map(d => java.lang.Double.valueOf(math.sqrt(d))).orNull
+
+  /** `round(cosineWithNorms(q, v, qn, vn), 6)` in the driver, bit-equal to
+    * the executors' value: the same [[VecDot]] kernel, the same `qn × vn > 0`
+    * guard under Catalyst's double order (a null norm fails it, NaN passes),
+    * and Spark's `Round` (HALF_UP through `BigDecimal`; NaN and ±∞ pass).
+    */
+  private def roundedCosine(q: ArrayData, qFloat: Boolean, qn: java.lang.Double,
+      v: ArrayData, vFloat: Boolean, vn: java.lang.Double): java.lang.Double =
+    if (qn == null || vn == null || SQLOrderingUtil.compareDoubles(qn * vn, 0.0) <= 0) 0.0
+    else Option(VecDot.dot(q, v, qFloat, vFloat)).map { d =>
+      val c = d / (qn * vn)
+      java.lang.Double.valueOf(if (c.isNaN || c.isInfinite) c
+        else java.math.BigDecimal.valueOf(c).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue)
+    }.orNull
+
+  /** One hop's fetch: the vectors and adjacency lists of `ids` (Catalyst
+    * values of the graph's id type) as `(_ga_node, _ga_v, _ga_dst, _ga_isv)`
+    * rows — one scan of `vectors ∪ edges` under an `isin` filter, with no
+    * exchange and no join, so a hop is one job at any corpus size.
+    */
+  private[graft] def hopFetch(graph: AnnGraph, ids: Seq[Any]): DataFrame = {
+    val idType = graph.vectors.schema(graph.idCol).dataType
+    def among(c: String) = org.apache.spark.sql.graft.ColumnBridge.toColumn(In(
+      org.apache.spark.sql.graft.ColumnBridge.toExpression(col(c)), ids.map(Literal(_, idType))))
+    graph.vectors.filter(among(graph.idCol))
+      .select(col(graph.idCol).as("_ga_node"), col(graph.vecCol).as("_ga_v"),
+        lit(null).cast(idType).as("_ga_dst"), lit(true).as("_ga_isv"))
+      .unionByName(graph.edges.filter(among("src"))
+        .select(col("src").cast(idType).as("_ga_node"),
+          lit(null).cast(graph.vectors.schema(graph.vecCol).dataType).as("_ga_v"),
+          col("dst").cast(idType).as("_ga_dst"), lit(false).as("_ga_isv")))
+  }
+
+  /** The beam walk, its per-query state in the driver. It collects the
+    * cohort's `(qid, vec)` rows, picks and fetches the entry points once
+    * (the `nSeeds` smallest ids, or the `seedHubs`-wide hub set), then
+    * walks each slice of [[WalkSliceQueries]] queries in lockstep:
+    *
+    *   - round 0 scores each query's seeds (under hub seeding, its
+    *     top-`nSeeds` hubs);
+    *   - hop `h`'s frontier is the top-`beam` of the nodes first scored at
+    *     hop `h`, and its candidates are the frontier's distinct neighbors
+    *     minus the nodes the query already scored;
+    *   - every query's candidates are fetched in ONE [[hopFetch]] job and
+    *     scored, one visited row per vector row; the walk stops when no
+    *     query has a candidate, or after `maxHops` hops.
+    *
+    * `finish` gets the slice's query rows and each query's visited rows
+    * `(sim, node, hop, qid)`; a query with a null id walks nothing.
+    * Nothing is persisted.
+    */
+  private def walk[R](
       graph: AnnGraph,
       queries: DataFrame,
       queryIdCol: String,
@@ -1021,169 +1072,100 @@ object GraphAnn {
       maxHops: Int,
       nSeeds: Int,
       seedHubs: Int
-  )(finish: DataFrame => DataFrame): DataFrame = {
+  )(finish: (Seq[InternalRow], Seq[Seq[InternalRow]]) => R): Seq[R] = {
     require(k > 0 && beam >= k, s"need 0 < k <= beam, got k=$k beam=$beam")
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     require(nSeeds > 0, s"nSeeds must be positive, got $nSeeds")
+    import scala.collection.mutable
+    import org.apache.spark.sql.graft.LocalRows
 
-    // joined every hop: compute the cohort once (eager internal-row
-    // checkpoint — same rotation discipline as the state slots; the
-    // bridge exposes the persisted RDD so the exit path can release it)
-    val q = queries
-      .select(col(queryIdCol).as("_ga_qid"), col(queryVecCol).as("_ga_qv"))
-      .withColumn("_ga_qn", norm(col("_ga_qv")))
-      .localCheckpoint()
-    val qRdd = org.apache.spark.sql.graft.CheckpointBridge.internalRdd(q)
-    // the scored-vectors table: norms computed ONCE, hash-partitioned on
-    // the node id and pinned for the whole walk (Dataset.localCheckpoint
-    // keeps the partitioning) — each hop's scoring join then shuffles only
-    // its bounded candidate set, where the lazy form re-scanned AND
-    // re-exchanged the corpus-sized vector table once per hop. Released on
-    // exit with the other walk state (CheckpointBridge).
-    val v = pinPartitionedOn(
-      graph.vectors
-        .select(col(graph.idCol).as("_ga_node"), col(graph.vecCol).as("_ga_v"))
-        .withColumn("_ga_n", norm(col("_ga_v"))),
-      "_ga_node")
-    val vRdd = org.apache.spark.sql.graft.CheckpointBridge.internalRdd(v)
-    val e = graph.edges
-      .select(col("src").as("_ga_node"), col("dst").as("_ga_dst"))
+    val idType = graph.vectors.schema(graph.idCol).dataType
+    val vFloat = floatElems(graph.vectors.schema(graph.vecCol).dataType)
+    val q = queries.select(col(queryIdCol), col(queryVecCol))
+    val qidType = q.schema.head.dataType
+    val qFloat = floatElems(q.schema(1).dataType)
+    val qRows = LocalRows.collect(q).toSeq
+    val qids = qRows.filterNot(_.isNullAt(0)).map(_.get(0, qidType))
+    require(qids.distinct.size == qids.size,
+      s"graph search: query ids in '$queryIdCol' must be unique")
+    val rank = ranking(idType)
 
-    // deterministic entry points: the nSeeds smallest ids (id-only sort —
-    // nSeeds rows, no vector payload in the exchange)
-    val seeds = v.select(col("_ga_node")).orderBy(col("_ga_node")).limit(nSeeds)
-
-    // score a (qid, node) candidate set: both norms were projected once
-    // below this join; sims round to 6dp BEFORE any ranking.
-    // SHUFFLE_HASH on the CANDIDATE side (guide §3.2): the candidate set is
-    // cohort-bounded (queries × beam × degree rows) at any corpus scale, so
-    // it is always the cheap build side, while `v` is corpus-sized and must
-    // stream IN PLACE against its recorded hash-pin. Without the hint the
-    // rotation's static planner sized `v` under the broadcast threshold at
-    // bench scale and re-ran a broadcast collect+build of the WHOLE vector
-    // table every hop (plan-dumped; the pin was never probed in place).
-    def score(cand: DataFrame): DataFrame =
-      cand.hint("SHUFFLE_HASH").join(v, Seq("_ga_node"))
-        .join(q, Seq("_ga_qid"))
-        .select(col("_ga_qid"), col("_ga_node"),
-          round(cosineWithNorms(col("_ga_qv"), col("_ga_v"),
-            col("_ga_qn"), col("_ga_n")), 6).as("_ga_sim"))
-
-    def topBeam(scored: DataFrame): DataFrame =
-      scored.groupBy(col("_ga_qid"))
-        .agg(expr(s"top_k(struct(_ga_sim, _ga_node), $beam)").as("_ga_top"))
-        .select(col("_ga_qid"), explode(col("_ga_top")).as("_ga_t"))
-        .select(col("_ga_qid"), col("_ga_t._ga_node").as("_ga_node"),
-          col("_ga_t._ga_sim").as("_ga_sim"))
-
-    // per-state-slot lineage rotation: each slot holds ONE checkpointed
-    // RDD; rotating in a new round's table releases the previous one.
-    // Returns the row count too — the hop's termination probe rides the
-    // rotation's own materialization. Rotation goes through the EAGER
-    // Dataset.localCheckpoint (INTERNAL rows): the previous `df.rdd`
-    // rotation deserialized every state row to an external Row at
-    // checkpoint time and re-encoded it on every downstream read of the
-    // slot — `seen` is read three times per hop (frontier filter,
-    // anti-join, union), so the walk paid the double conversion on its
-    // largest table each round. The count runs over the already-cached
-    // internal partitions (no recompute, no conversion).
-    // Rotations run AQE-OFF: per hop the adaptive planner executed each
-    // exchange of the rotation plan as its OWN job (~4 stage-jobs + final
-    // per hop, all over cohort-bounded kilobytes) — the walk's cost at
-    // this state size is driver round-trips, not data. A static plan runs
-    // the whole rotation as ONE job at [[walkPartitions]] width. The
-    // pinned edge/vector tables keep their recorded hashpartitioning, so
-    // the hop equi-joins still leave them in place.
-    val held = scala.collection.mutable.Map.empty[String, org.apache.spark.rdd.RDD[_]]
-    def rotate(slot: String, df: DataFrame): (DataFrame, Long) = {
-      val ck = org.apache.spark.sql.graft.CheckpointBridge
-        .withAqeOff(df, Some(walkPartitions(df))) { d =>
-          if (sys.env.contains("SPARK_GRAFT_WALK_DEBUG"))
-            // scalastyle:off println
-            println(s"=== rotate($slot) static plan ===\n" +
-              d.queryExecution.executedPlan.toString)
-            // scalastyle:on println
-          d.localCheckpoint()
-        }
-      val rdd = org.apache.spark.sql.graft.CheckpointBridge.internalRdd(ck)
-      val n = rdd.map(_.count()).getOrElse(ck.count())
-      held.get(slot).foreach(_.unpersist(blocking = false))
-      rdd.foreach(r => held(slot) = r)
-      (ck, n)
+    // vectors (with norms) and adjacency lists fetched so far, by node id
+    val vecs = mutable.HashMap.empty[Any, mutable.ArrayBuffer[(ArrayData, java.lang.Double)]]
+    val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
+    val fetched = mutable.HashSet.empty[Any]
+    def fetch(ids: Iterable[Any]): Unit = {
+      val todo = ids.iterator.filter(n => n != null && !fetched(n)).toSeq.distinct
+      if (todo.nonEmpty) LocalRows.collect(hopFetch(graph, todo)).foreach { r =>
+        val node = r.get(0, idType)
+        if (r.getBoolean(3)) {
+          val v = if (r.isNullAt(1)) null else r.getArray(1)
+          vecs.getOrElseUpdate(node, mutable.ArrayBuffer.empty) += ((v, normOf(v, vFloat)))
+        } else if (!r.isNullAt(2))
+          adj.getOrElseUpdate(node, mutable.ArrayBuffer.empty) += r.get(2, idType)
+      }
+      fetched ++= todo
     }
-
-    // ONE state table: everything scored so far, tagged with the hop that
-    // discovered it — `(qid, node, sim, hop)`. The per-hop frontier is a
-    // filter on the cached table (zero extra jobs), the dedup guard is an
-    // anti-join against it, and the final answer is its per-query top-k
-    // (a superset of any beam-capped running best, so keeping the full
-    // visited set can only help recall; its size is bounded by
-    // nSeeds + hops × beam × degree rows per query).
-    val round0 =
-      if (seedHubs <= 0) q.select(col("_ga_qid")).crossJoin(seeds) // cohort × nSeeds
-      else { // per-query descent from the hub set: cohort × seedHubs scored rows
-        // a hub-built graph seeds on its FROZEN routing set (persisted with
-        // the index — stable under appends); only a hub-less graph falls
-        // back to deriving "the seedHubs smallest ids" from the vectors
-        val hid = graph.hubIds match {
+    // entry points, shared by every slice. A hub-built graph seeds on its
+    // FROZEN routing set (persisted with the index — stable under appends);
+    // only a hub-less graph falls back to "the seedHubs smallest ids"
+    lazy val entry: Seq[Any] = {
+      val ids =
+        if (seedHubs <= 0)
+          graph.vectors.select(col(graph.idCol)).orderBy(col(graph.idCol)).limit(nSeeds)
+        else graph.hubIds match {
           case Some(h) => h.select(col(h.columns.head).as("_gh"))
-            .orderBy(col("_gh")).limit(seedHubs).withColumnRenamed("_gh", graph.idCol)
+            .orderBy(col("_gh")).limit(seedHubs).select(col("_gh").cast(idType))
           case None => graph.vectors.select(col(graph.idCol))
             .orderBy(col(graph.idCol)).limit(seedHubs)
         }
-        val hubVecs = hubVectors(graph.vectors, graph.idCol, graph.vecCol, hid)
-        q.crossJoin(broadcast(hubVecs))
-          .select(col("_ga_qid"), col("_ga_hub"),
-            round(cosineWithNorms(col("_ga_qv"), col("_ga_hv"),
-              col("_ga_qn"), col("_ga_hn")), 6).as("_ga_hs"))
-          .groupBy(col("_ga_qid"))
-          .agg(expr(s"top_k(struct(_ga_hs, _ga_hub), $nSeeds)").as("_ga_t"))
-          .select(col("_ga_qid"), explode(col("_ga_t")).as("_ga_x"))
-          .select(col("_ga_qid"), col("_ga_x._ga_hub").as("_ga_node"))
-      }
-    // two state slots, deliberately asymmetric: the FRESH rotation is the
-    // small one (≤ queries × beam × degree rows — its checkpoint doubles as
-    // the termination probe at trivial cost), and the large SEEN table
-    // re-materializes only when the hop actually discovered nodes. Folding
-    // the two into one rotation re-copies the full visited set on every
-    // hop including the final no-change one — measured slower on the
-    // exhaustive-walk entries, where seen is cohort × corpus. (Round-15
-    // re-test: keeping `seen` as a UNION of per-hop checkpoints instead —
-    // no copy, one rotation per hop — measured ~1.2 s SLOWER on the
-    // exhaustive filtered entries: the per-hop anti-join then probes a
-    // deepening union instead of one cached table. The copy stays.)
-    var (seen, _) = rotate("seen", score(round0).withColumn("_ga_hop", lit(0)))
-    var hop = 0
-    var converged = false
-    while (hop < maxHops && !converged) {
-      val frontier = topBeam(seen.filter(col("_ga_hop") === hop))
-      // SHUFFLE_HASH both ways (guide §3.2): the frontier (queries × beam
-      // rows) builds against the corpus-sized edge table, which streams in
-      // place on its src-pin — the unhinted static plan sort-merge-joined,
-      // re-sorting ALL edges every hop. The anti-join builds the seen side
-      // (cohort-bounded by construction) instead of sorting both sides.
-      val (fresh, nFresh) = rotate("fresh",
-        frontier.select(col("_ga_qid"), col("_ga_node")).hint("SHUFFLE_HASH")
-          .join(e, Seq("_ga_node"))
-          .select(col("_ga_qid"), col("_ga_dst").as("_ga_node"))
-          .distinct()
-          .join(seen.hint("SHUFFLE_HASH"), Seq("_ga_qid", "_ga_node"), "left_anti"))
-      if (nFresh == 0) converged = true
-      else {
-        val (s1, _) = rotate("seen",
-          seen.unionByName(score(fresh).withColumn("_ga_hop", lit(hop + 1))))
-        seen = s1
-      }
-      hop += 1
+      val e = LocalRows.collect(ids).toSeq.map(_.get(0, idType))
+      fetch(e)
+      e
     }
-    // finish over the visited table, materialize the (queries × k)-bounded
-    // answer through ONE caller-owned localCheckpoint, then free every
-    // walk-internal slot — the finished result no longer references them.
-    val result = finish(seen).localCheckpoint()
-    held.values.foreach(_.unpersist(blocking = false))
-    held.clear()
-    qRdd.foreach(_.unpersist(blocking = false))
-    vRdd.foreach(_.unpersist(blocking = false))
-    result
+
+    val slices = if (qRows.isEmpty) Iterator(Seq.empty) else qRows.grouped(WalkSliceQueries)
+    slices.map { slice =>
+      val live = slice.indices.filterNot(slice(_).isNullAt(0))
+      val qv = slice.map(r => if (r.isNullAt(1)) null else r.getArray(1))
+      val qn = qv.map(normOf(_, qFloat))
+      val visited = slice.map(_ => mutable.ArrayBuffer.empty[InternalRow])
+      val seen = slice.map(_ => mutable.HashSet.empty[Any])
+      def sim(i: Int, v: (ArrayData, java.lang.Double)): java.lang.Double =
+        roundedCosine(qv(i), qFloat, qn(i), v._1, vFloat, v._2)
+      def score(i: Int, node: Any, hop: Int): Unit = vecs.get(node).foreach { vs =>
+        seen(i) += node
+        vs.foreach(v => visited(i) += InternalRow(sim(i, v), node, hop, slice(i).get(0, qidType)))
+      }
+      live.foreach { i =>
+        val round0 =
+          if (seedHubs <= 0) entry
+          else entry.flatMap(h => vecs.getOrElse(h, Nil).map(v => InternalRow(sim(i, v), h)))
+            .sorted(rank).take(nSeeds).map(_.get(1, idType))
+        round0.foreach(score(i, _, 0))
+      }
+      var hop = 0
+      var converged = false
+      while (hop < maxHops && !converged) {
+        val fresh = live.map { i =>
+          visited(i).filter(_.getInt(2) == hop).sorted(rank).take(beam)
+            .flatMap(h => adj.getOrElse(h.get(1, idType), Nil)).filterNot(seen(i)).distinct
+        }
+        converged = fresh.forall(_.isEmpty)
+        if (!converged) {
+          fetch(fresh.flatten)
+          live.zip(fresh).foreach { case (i, ns) => ns.foreach(score(i, _, hop + 1)) }
+        }
+        hop += 1
+      }
+      val out = finish(slice, visited.map(_.toSeq))
+      // the next slice starts from the entry points' rows alone
+      if (live.nonEmpty) {
+        val keep = entry.toSet
+        Seq(vecs, adj).foreach(_.filterInPlace((n, _) => keep(n)))
+        fetched.filterInPlace(keep)
+      }
+      out
+    }.toList
   }
 }

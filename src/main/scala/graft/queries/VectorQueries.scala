@@ -987,13 +987,13 @@ object VectorQueries {
       Seq("E2")
     ),
 
-    // Graph-based ANN (NSW family) — beam search over a k-NN graph run as
-    // iterated equi-joins: per hop, frontier ⋈ edges → anti-join the seen
-    // set → score → per-query top_k; every exchange is bounded by
-    // queries × beam × degree and INDEPENDENT of corpus size (IVF probes
-    // read nProbes/k of the corpus; the graph walk reads beam×degree
-    // vectors per hop — why graph indexes win at high recall on 10⁹-vector
-    // corpora, preserved here in relational form). Entry points descend
+    // Graph-based ANN (NSW family) — beam search over a k-NN graph: per
+    // hop, ONE scan of vectors ∪ edges fetches the hop's new node ids, and
+    // the driver scores them, drops seen nodes and keeps the per-query
+    // beam; the walk state is bounded by queries × beam × degree per hop
+    // and INDEPENDENT of corpus size (IVF probes read nProbes/k of the
+    // corpus; the graph walk reads beam×degree vectors per hop — why graph
+    // indexes win at high recall on 10⁹-vector corpora). Entry points descend
     // from the hub layer per query (seedHubs — HNSW's upper-layer descent),
     // which buys a hop: measured recall@10 at degree=12/beam=32/hops=4/
     // hub-seeded is 1.0 (sf0.001) / 1.0 (sf0.01) / 0.974 (sf0.1) vs

@@ -72,19 +72,10 @@ object CheckpointBridge {
     * downstream equi-joins in the original (AQE-on) session still elide
     * the exchange.
     */
-  def withAqeOff(
-      df: DataFrame,
-      /** Static shuffle-partition count for the scoped job (None = inherit).
-        * An AQE-off job has no partition coalescing, so an iterative
-        * operator whose per-round state is bounded (a walk frontier, an
-        * adjacency slice) passes the width its STATE warrants instead of
-        * paying the session default on every tiny exchange.
-        */
-      shufflePartitions: Option[Int] = None)(f: DataFrame => DataFrame): DataFrame = {
+  def withAqeOff(df: DataFrame)(f: DataFrame => DataFrame): DataFrame = {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val cloned = session.cloneSession()
     cloned.conf.set("spark.sql.adaptive.enabled", "false")
-    shufflePartitions.foreach(n => cloned.conf.set("spark.sql.shuffle.partitions", n.toString))
     val rebound = org.apache.spark.sql.classic.Dataset.ofRows(
       cloned, df.queryExecution.logical)
     val out = f(rebound)

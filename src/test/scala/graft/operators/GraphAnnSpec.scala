@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Graph-based ANN (NSW-style beam search as iterated equi-joins): exact
+/** Graph-based ANN (NSW-style beam search, one index scan per hop): exact
   * laws on hand-built graphs, navigation, build invariants, and
   * persistence.
   */
@@ -236,37 +236,26 @@ class GraphAnnSpec extends SparkSpec {
     assert(run(built) == run(read))
   }
 
-  test("prepared read-back graph: a hop join leaves the edge table in place") {
-    val dir = tmpDir("graft-graphann-prep")
+  test("read-back hop fetch: one scan, no Exchange and no join") {
+    val dir = tmpDir("graft-graphann-fetch")
     GraphAnn.writeGraph(
       GraphAnn.buildGraph(circle(30), "id", "vec", dim = 2, degree = 3,
         nPlanes = 2, probes = 4, hubs = 4),
       dir)
     val read = GraphAnn.readGraph(spark, dir, "id", "vec")
-    val prep = GraphAnn.prepare(read)
-    // the walk's per-hop shape: an unknown-size frontier equi-joined on the
-    // edge key (broadcast off — mid-walk frontiers carry no size stats, so
-    // the planner can't broadcast them either)
-    val frontier = Seq((3L, 1L), (7L, 2L)).toDF("qid", "src")
-    def exchanges(g: GraphAnn.AnnGraph): Int = {
-      val plan = frontier.join(g.edges, Seq("src"))
-        .queryExecution.executedPlan.toString
-      "Exchange".r.findAllIn(plan).length
-    }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      assert(exchanges(read) == 2, "unprepared parquet edges re-exchange (premise)")
-      assert(exchanges(prep) == 1,
-        "prepared edges are hash-partitioned on src: only the frontier moves")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    // and preparation changes nothing about the answers
-    val queries = circle(30).filter(col("id") % 7 === 0)
-    def run(g: GraphAnn.AnnGraph) =
-      GraphAnn.search(g, queries, "id", "vec", k = 3, beam = 8, maxHops = 4,
-        nSeeds = 2, seedHubs = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(run(prep) == run(read))
+    val ids = Seq(3L, 7L, 29L)
+    val fetch = GraphAnn.hopFetch(read, ids)
+    val plan = fetch.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && !plan.contains("Join") && plan.contains("Union"),
+      s"a hop is one scan of vectors ∪ edges:\n$plan")
+    // and it returns exactly the requested nodes' vectors and adjacency
+    val rows = fetch.collect()
+    val vecIds = rows.filter(_.getBoolean(3)).map(_.getLong(0)).sorted.toSeq
+    assert(vecIds == ids)
+    val adj = rows.filterNot(_.getBoolean(3)).map(r => (r.getLong(0), r.getLong(2))).toSet
+    val want = read.edges.filter(col("src").isin(ids: _*))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(adj == want && want.nonEmpty)
   }
 
   test("searchFiltered contract: sparse allowed set still fills k rows, exactly") {
@@ -564,5 +553,49 @@ class GraphAnnSpec extends SparkSpec {
         "id", "vec", dim = 2, degree = 3, nPlanes = 2, probes = 4, hubs = 4)
     }
     assert(ex.getMessage.contains("persisted hub set"))
+  }
+
+  test("graph-search, read-back index: <= maxHops + 6 jobs, no shuffle/leak") {
+    val provider = new graft.embed.DeterministicProvider(64)
+    val texts = (0 until 60).map(i => s"chunk $i of lov ${i % 7} paragraf ${i % 11}")
+    val dir = tmpDir("graft-graphann-jobs")
+    GraphAnn.writeGraph(
+      GraphAnn.buildGraph(
+        texts.indices.map(i => (s"c$i", provider.embedBatch(Seq(texts(i))).head))
+          .toDF("chunkId", "embedding"),
+        "chunkId", "embedding", dim = 64, degree = 4, nPlanes = 4, probes = 2, hubs = 4),
+      dir)
+    val sc = spark.sparkContext
+    val costs = new graft.ops.JobCosts()
+    sc.addSparkListener(costs)
+    try {
+      org.apache.spark.graft.StatusBridge.quiesce(sc)
+      costs.clearJobs()
+      val shuffled = costs.shuffleWriteBytes
+      val persisted = sc.getPersistentRDDs.keySet
+      val hits = graft.cli.GraftCli.graphSearch(spark, dir, texts(17), k = 3,
+        provider = provider).collect()
+      org.apache.spark.graft.StatusBridge.quiesce(sc)
+      assert(hits.head.getString(0) == "c17", "the stored text is its own nearest neighbor")
+      // graphSearch walks the default 4 hops: one job per hop, plus the
+      // entry ids, their fetch and the index reads
+      assert(costs.jobs.size <= 4 + 6, s"${costs.jobs.size} jobs: ${costs.jobs}")
+      assert(costs.shuffleWriteBytes == shuffled, "a graph search shuffles nothing")
+      assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty,
+        "a graph search leaves no persisted RDD behind")
+    } finally sc.removeSparkListener(costs)
+  }
+
+  test("NN-Descent build persists only the returned graph's tables") {
+    val rnd = new scala.util.Random(7)
+    val vecs = (0 until 120).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat()))).toDF("id", "vec")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val g = GraphAnn.buildGraphDescent(vecs, "id", "vec", dim = 8, degree = 4,
+      nPlanes = 4, refineRounds = 2, hubs = 4)
+    val kept = (Seq(g.edges) ++ g.hubIds).flatMap(d =>
+      org.apache.spark.sql.graft.CheckpointBridge.internalRdd(d)).map(_.id).toSet
+    assert(kept.size == 2, "edges and hub ids are the graph's two materialized tables")
+    assert(sc.getPersistentRDDs.keySet -- before == kept)
   }
 }

@@ -70,14 +70,14 @@ class OptimizationR15Spec extends SparkSpec {
     }
   }
 
-  test("graph pin width: 64 MB per partition, walk floor, parallelism cap") {
-    // tiny table: floored at the walk width, never the cluster width
-    assert(GraphAnn.pinWidth(BigInt(4L * 1024 * 1024), walkW = 8, par = 32) == 8)
+  test("graph pin width: 64 MB per partition, >= 1, parallelism cap") {
+    // tiny table: one partition, never the cluster width
+    assert(GraphAnn.pinWidth(BigInt(4L * 1024 * 1024), par = 32) == 1)
     // data-sized in between: ceil(bytes / 64 MB)
-    assert(GraphAnn.pinWidth(BigInt(1L * 1024 * 1024 * 1024), walkW = 8, par = 32) == 16)
+    assert(GraphAnn.pinWidth(BigInt(1L * 1024 * 1024 * 1024), par = 32) == 16)
     // huge (or unknown ⇒ Catalyst max) estimate: capped at parallelism
-    assert(GraphAnn.pinWidth(BigInt(Long.MaxValue) * 4, walkW = 8, par = 32) == 32)
-    assert(GraphAnn.pinWidth(BigInt(0), walkW = 2, par = 32) == 2)
+    assert(GraphAnn.pinWidth(BigInt(Long.MaxValue) * 4, par = 32) == 32)
+    assert(GraphAnn.pinWidth(BigInt(0), par = 32) == 1)
   }
 
   test("expire's orphan sweep never deletes a commit dir holding in-flight staging") {
