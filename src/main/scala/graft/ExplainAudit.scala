@@ -117,17 +117,18 @@ object ExplainAudit {
         p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct")
     }
 
-    // K3 delete anti-join mirrors J1: broadcast for small tombstone sets,
-    // shuffle when broadcast is unavailable — proving no forced hint pins
-    // the plan (mass dataset retirement must not exceed the broadcast limit)
+    // K3 delete-by-document mirrors J1: the chunk store's retire join (the
+    // semi-join mergeMor finds the retired documents' rows with) broadcasts
+    // small tombstone sets and shuffles when broadcast is unavailable —
+    // proving no forced hint pins the plan (mass dataset retirement must
+    // not exceed the broadcast limit)
     val (k3SmallTombstones, k3ShuffleTombstones) = {
       import spark.implicits._
-      val store = new graft.sources.ChunkStore(
-        java.nio.file.Files.createTempDirectory("audit-k3").toString + "/store")
       val chunks = (0 until 100).map(i => (s"c$i", s"doc${i % 10}")).toDF("chunkId", "documentId")
       val ids = Seq("doc1", "doc2").toDF("documentId")
-      def deletePlan = store.remainingAfter(chunks, ids).queryExecution.executedPlan.toString
-      val small = deletePlan.contains("BroadcastHashJoin") && deletePlan.contains("LeftAnti")
+      def deletePlan = graft.operators.Snapshots.retiredRows(chunks, ids, Seq("documentId"))
+        .queryExecution.executedPlan.toString
+      val small = deletePlan.contains("BroadcastHashJoin") && deletePlan.contains("LeftSemi")
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val shuffle = try !deletePlan.contains("BroadcastHashJoin")
@@ -286,8 +287,8 @@ object ExplainAudit {
       }),
       ("j1 anti-join broadcasts a small ledger (size-adaptive, no hint)", j1SmallLedger),
       ("j1 anti-join shuffles when broadcast is unavailable (no forced hint)", j1ShuffleLedger),
-      ("k3 delete anti-join broadcasts a small tombstone set (no hint)", k3SmallTombstones),
-      ("k3 delete anti-join shuffles when broadcast is unavailable (no forced hint)", k3ShuffleTombstones),
+      ("k3 delete-by-document retire join broadcasts a small tombstone set (no hint)", k3SmallTombstones),
+      ("k3 delete-by-document retire join shuffles when broadcast is unavailable (no forced hint)", k3ShuffleTombstones),
       ("ivf probe prunes cid partitions on a persisted index (incl. after append)", ivfPrunes),
       ("bm25 appended-index search prunes term buckets and broadcasts merge-on-read df",
         bm25AppendPrunes),

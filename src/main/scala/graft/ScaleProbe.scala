@@ -7,22 +7,21 @@ import graft.chunker.LovdataChunker
 import graft.embed.{DeterministicProvider, Embedding}
 import graft.pipeline.Pipeline
 import graft.queries.PipelineQueries
-import graft.sources.ChunkStore
+import graft.sources.SnapshotChunkStore
 
 /** Scale probe: replicate the documents table N× (distinct doc ids) and run
   * the full chunk → embed → upsert path, timing each stage. Evidence that
-  * the per-document flatMap/mapPartitions stages and the bucketed store
+  * the per-document flatMap/mapPartitions stages and the chunk store
   * scale linearly well past the bench SF — run with `multiplier 10` on sf0.1
   * for a 500k-document corpus.
   *
-  * Usage: runMain graft.ScaleProbe [sfDir] [multiplier] [buckets]
+  * Usage: runMain graft.ScaleProbe [sfDir] [multiplier]
   */
 object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val prefixLen = args.lift(2).map(_.toInt).getOrElse(2)
     val spark = Session()
     val cpus = spark.sparkContext.defaultParallelism
 
@@ -57,7 +56,7 @@ object ScaleProbe {
     }
     val storePath = s"/tmp/graft/scaleprobe_store"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(storePath))
-    val store = new ChunkStore(storePath, prefixLen = prefixLen)
+    val store = new SnapshotChunkStore(storePath)
     val (_, tStore) = timed { store.upsert(spark, embedded) }
     val stored = store.count(spark)
 

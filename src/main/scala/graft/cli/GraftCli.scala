@@ -11,7 +11,7 @@ import graft.embed.{DeterministicProvider, EmbeddingProvider}
 import graft.operators.{GraphAnn, Similarity}
 import graft.ops.Ops
 import graft.pipeline.Pipeline
-import graft.sources.{ChunkStore, KeyedChunkStore, LovligState, SnapshotChunkStore, XmlFiles}
+import graft.sources.{LovligState, SnapshotChunkStore, XmlFiles}
 
 /** The user-facing entry points, one per reference CLI command (`lg process`
   * / `status` / `validate` / `migrate`; reference `cli.py`). Methods are
@@ -23,14 +23,10 @@ object GraftCli {
 
   final case class ProcessResult(summary: Pipeline.RunSummary, exitCode: Int)
 
-  /** Store constructor dispatching on the configured backend:
-    * `--storage-type=snapshot` selects the snapshot-table store (MERGE
-    * upserts, merge-on-read deletes, time travel); parquet|json select the
-    * reference-shaped bucket store.
+  /** The chunk store at `path`. [[Settings]] already rejected any backend
+    * but the snapshot table, so the settings select nothing more here.
     */
-  def mkStore(path: String, settings: Settings): KeyedChunkStore =
-    if (settings.storageType == "snapshot") new SnapshotChunkStore(path)
-    else new ChunkStore(path, settings.storageType, settings.storePrefixLen)
+  def mkStore(path: String, settings: Settings): SnapshotChunkStore = new SnapshotChunkStore(path)
 
   /** `lg process`: sync state → identify → chunk → embed → store → cleanup.
     * @param stateJson   lovlig state.json path (S1 CDC feed)
@@ -50,10 +46,8 @@ object GraftCli {
         * [[graft.config.Settings.datasetLikePattern]]); default matches all.
         */
       datasetFilter: String = "%",
-      /** pre-configured store (format/prefixLen); defaults to parquet at
-        * `storePath`.
-        */
-      store: KeyedChunkStore = null
+      /** pre-built store; defaults to the snapshot store at `storePath`. */
+      store: SnapshotChunkStore = null
   ): ProcessResult = {
     val fullScan = LovligState.scan(spark, stateJson, extractedDir)
     // dataset pattern gates which datasets the run touches at all (reference
@@ -72,7 +66,7 @@ object GraftCli {
     val removed = LovligState.removedFiles(scan).select(col("docId"))
     val summary = Pipeline.run(
       spark, changed, removed,
-      Option(store).getOrElse(new ChunkStore(storePath)), ledgerPath, chunker, provider,
+      Option(store).getOrElse(new SnapshotChunkStore(storePath)), ledgerPath, chunker, provider,
       force, limit
     )
     val missing = guarded.filter(col("error").isNotNull).count()
@@ -80,7 +74,7 @@ object GraftCli {
   }
 
   /** `lg process` wired entirely from [[Settings]] (env + flags) — the
-    * operator-facing entry: chunk params, store format/bucketing, dataset
+    * operator-facing entry: chunk params, embedding, dataset
     * pattern, force/limit all come from configuration, not code.
     */
   def processConfigured(
@@ -117,7 +111,7 @@ object GraftCli {
     */
   def search(
       spark: SparkSession,
-      store: KeyedChunkStore,
+      store: SnapshotChunkStore,
       query: String,
       k: Int = 10,
       provider: EmbeddingProvider = new DeterministicProvider(64)
@@ -136,16 +130,16 @@ object GraftCli {
     * directly comparable for hybrid retrieval.
     */
   def textIndex(
-      spark: SparkSession, store: KeyedChunkStore, indexPath: String, nBuckets: Int = 64): Unit =
+      spark: SparkSession, store: SnapshotChunkStore, indexPath: String, nBuckets: Int = 64): Unit =
     graft.operators.TextSearch.writeIndex(
       spark, store.read(spark), "content", "chunkId", indexPath, nBuckets)
 
   /** Register newly-stored chunks in an existing index without re-tokenizing
     * the corpus ([[graft.operators.TextSearch.appendToIndex]]): `docIds`
-    * limits the batch to those documents' chunks (bucket-pruned store read).
+    * limits the batch to those documents' chunks (a documentId-filtered store read).
     */
   def textIndexAppend(
-      spark: SparkSession, store: KeyedChunkStore, indexPath: String, docIds: Seq[String]): Unit = {
+      spark: SparkSession, store: SnapshotChunkStore, indexPath: String, docIds: Seq[String]): Unit = {
     val chunks = store.read(spark)
     val batch =
       if (docIds.isEmpty) chunks
@@ -174,7 +168,7 @@ object GraftCli {
     * pruning, and [[vectorIndexAppend]] keeps ingest incremental.
     */
   def vectorIndex(
-      spark: SparkSession, store: KeyedChunkStore, indexPath: String, kCells: Int = 64): Unit =
+      spark: SparkSession, store: SnapshotChunkStore, indexPath: String, kCells: Int = 64): Unit =
     Similarity.writeIvf(spark,
       Similarity.buildIvf(
         // project BEFORE indexing: buildIvf keeps every input column under
@@ -191,7 +185,7 @@ object GraftCli {
     * `docIds` limits the batch to those documents' chunks.
     */
   def vectorIndexAppend(
-      spark: SparkSession, store: KeyedChunkStore, indexPath: String, docIds: Seq[String]): Unit = {
+      spark: SparkSession, store: SnapshotChunkStore, indexPath: String, docIds: Seq[String]): Unit = {
     val chunks = store.read(spark).filter(col("embedding").isNotNull)
     val batch =
       if (docIds.isEmpty) chunks
@@ -222,7 +216,7 @@ object GraftCli {
     * discipline as the IVF path: only (chunkId, embedding) enter the index.
     */
   def graphIndex(
-      spark: SparkSession, store: KeyedChunkStore, graphPath: String,
+      spark: SparkSession, store: SnapshotChunkStore, graphPath: String,
       dim: Int = 64, degree: Int = 8, hubs: Int = 64): Unit =
     GraphAnn.writeGraph(
       GraphAnn.buildGraph(
@@ -238,7 +232,7 @@ object GraftCli {
     * Returns the plan it used (logged by the CLI for the audit trail).
     */
   def graphIndexPlanned(
-      spark: SparkSession, store: KeyedChunkStore, graphPath: String,
+      spark: SparkSession, store: SnapshotChunkStore, graphPath: String,
       dim: Int = 64, targetRecall: Double = 0.9): GraphAnn.GraphBuildPlan = {
     val vecs = store.read(spark).filter(col("embedding").isNotNull)
       .select(col("chunkId"), col("embedding"))
@@ -252,7 +246,7 @@ object GraftCli {
     * [[graft.operators.GraphAnn.appendToGraph]]); `docIds` limits the batch.
     */
   def graphIndexAppend(
-      spark: SparkSession, store: KeyedChunkStore, graphPath: String,
+      spark: SparkSession, store: SnapshotChunkStore, graphPath: String,
       docIds: Seq[String], dim: Int = 64, degree: Int = 8, hubs: Int = 64): Unit = {
     val chunks = store.read(spark).filter(col("embedding").isNotNull)
     val batch =
@@ -331,11 +325,11 @@ object GraftCli {
     * (index, content) structs fixes it), deduped with the one-call corpus
     * path (exact sha2 keep-min → MinHash-LSH candidates → connected
     * components → canonical keep), dropped documents retired through the
-    * bucketed delete path.
+    * store's delete-by-document commit.
     *
     * @return (dropped document count, deleted chunk count)
     */
-  def dedupStore(spark: SparkSession, store: KeyedChunkStore): (Long, Long) = {
+  def dedupStore(spark: SparkSession, store: SnapshotChunkStore): (Long, Long) = {
     val docsText = store.read(spark)
       .groupBy(col("documentId"))
       .agg(concat_ws("\n\n",
@@ -358,15 +352,15 @@ object GraftCli {
     * word n-gram with a benchmark/eval set (the published eval-overlap
     * rule), applied to the chunk store: flag via
     * [[graft.operators.Dedup.contaminatedIds]] over chunk content grouped
-    * by documentId, then retire the flagged documents through the bucketed
-    * delete path.
+    * by documentId, then retire the flagged documents through the store's
+    * delete-by-document commit.
     *
     * @param benchmark a DataFrame with the benchmark texts in `benchTextCol`
     * @return (contaminated document count, deleted chunk count)
     */
   def decontaminate(
       spark: SparkSession,
-      store: KeyedChunkStore,
+      store: SnapshotChunkStore,
       benchmark: DataFrame,
       benchTextCol: String,
       n: Int = 13,
@@ -737,12 +731,10 @@ object GraftCli {
             System.err.println("usage: validate <ledgerPath> <storePath> [--storage-type=...]")
             2
         }
-      // formats: parquet | json (bucket store) | snapshot (snapshot-table
-      // store) — so bucket -> snapshot is a one-command store migration
+      // formats: snapshot (the chunk store) | parquet | json (plain chunk
+      // dirs) — import into the store, export out of it, or copy
       case "migrate" :: src :: srcFmt :: dst :: dstFmt :: Nil =>
-        def storeFor(p: String, fmt: String): KeyedChunkStore =
-          if (fmt == "snapshot") new SnapshotChunkStore(p) else new ChunkStore(p, fmt)
-        val n = Ops.migrate(spark, storeFor(src, srcFmt), storeFor(dst, dstFmt))
+        val n = Ops.migrate(spark, src, srcFmt, dst, dstFmt)
         println(s"migrated=$n")
         0
       // mixture <in.parquet> <out.parquet> <totalTokens> src=w [src=w ...]
@@ -1037,7 +1029,7 @@ object GraftCli {
             |  process <state.json> <extractedDir> <storePath> <ledgerPath> [flags]
             |    flags (override GRAFT_* env vars): --force --progress --limit=N
             |      --target-tokens=N --max-tokens=N --min-tokens=N --overlap-ratio=R
-            |      --dataset=GLOB --storage-type=parquet|json|snapshot --prefix-len=N
+            |      --dataset=GLOB --storage-type=snapshot
             |      --embedding-model=NAME --embedding-dim=N --api-key=sk-...
             |      --tokenizer=word|bpe:<rank-file>
             |  search <storePath> <query> [--limit=K --embedding-dim=N]
@@ -1098,7 +1090,8 @@ object GraftCli {
             |    per-source budget = min(available, round(share * total))
             |  status <ledgerPath> <storePath>
             |  validate <ledgerPath> <storePath>
-            |  migrate <srcPath> <srcFormat> <dstPath> <dstFormat>""".stripMargin)
+            |  migrate <srcPath> <srcFormat> <dstPath> <dstFormat>
+            |    formats: snapshot (the chunk store) | parquet | json (chunk dirs)""".stripMargin)
         2
     }
     spark.stop()

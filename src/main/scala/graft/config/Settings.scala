@@ -17,12 +17,12 @@ import graft.functions.{BpeTokenCounter, TokenCounter, WordSymbolTokenizer}
 final case class Settings(
     embeddingModel: String = "deterministic-sha256",
     embeddingDimensions: Int = 64,
-    /** chunk-store format; the engine's analogue of `storage_type` ∈
-      * {chroma, jsonl} (`settings.py:55-58`) is {parquet, json}.
+    /** chunk-store backend, the analogue of the reference's `storage_type`
+      * ∈ {chroma, jsonl} (`settings.py:55-58`): the snapshot table is the
+      * one store, so `snapshot` is the one legal value; parquet and
+      * JSON-lines chunk dirs move in and out through `migrate`.
       */
-    storageType: String = "parquet",
-    /** hex chars of the store's document bucket key, 1..8 (16..4 G buckets). */
-    storePrefixLen: Int = 2,
+    storageType: String = "snapshot",
     chunkMaxTokens: Int = 6800,
     chunkTargetTokens: Int = 2000,
     chunkMinTokens: Int = 300,
@@ -52,10 +52,11 @@ final case class Settings(
 ) {
   require(embeddingDimensions >= 1 && embeddingDimensions <= 3072,
     s"embeddingDimensions must be 1..3072, got $embeddingDimensions")
-  require(storageType == "parquet" || storageType == "json" || storageType == "snapshot",
-    s"storageType must be 'parquet', 'json' or 'snapshot', got '$storageType'")
-  require(storePrefixLen >= 1 && storePrefixLen <= 8,
-    s"storePrefixLen must be 1..8, got $storePrefixLen")
+  require(storageType == "snapshot",
+    if (storageType == "parquet" || storageType == "json")
+      s"storageType '$storageType' is no longer a chunk store: the store is a snapshot " +
+        s"table; import a $storageType chunk dir with `migrate <dir> $storageType <store> snapshot`"
+    else s"storageType must be 'snapshot', got '$storageType'")
   require(chunkMaxTokens >= 100 && chunkMaxTokens <= 10000,
     s"chunkMaxTokens must be 100..10000, got $chunkMaxTokens")
   require(chunkTargetTokens >= 100 && chunkTargetTokens <= 8191,
@@ -97,7 +98,7 @@ object Settings {
 
   /** Field → env-var suffix (`GRAFT_CHUNK_TARGET_TOKENS` etc.). */
   private val envKeys = Seq(
-    "EMBEDDING_MODEL", "EMBEDDING_DIMENSIONS", "STORAGE_TYPE", "STORE_PREFIX_LEN",
+    "EMBEDDING_MODEL", "EMBEDDING_DIMENSIONS", "STORAGE_TYPE",
     "CHUNK_MAX_TOKENS", "CHUNK_TARGET_TOKENS", "CHUNK_MIN_TOKENS", "CHUNK_OVERLAP_RATIO",
     "DATASET_FILTER", "FORCE", "LIMIT", "TOKENIZER", "PROGRESS", "API_KEY"
   )
@@ -123,7 +124,6 @@ object Settings {
         case Array("embedding-model", v)    => applyKey(s, "EMBEDDING_MODEL", v)
         case Array("embedding-dim", v)      => applyKey(s, "EMBEDDING_DIMENSIONS", v)
         case Array("storage-type", v)       => applyKey(s, "STORAGE_TYPE", v)
-        case Array("prefix-len", v)         => applyKey(s, "STORE_PREFIX_LEN", v)
         case Array("max-tokens", v)         => applyKey(s, "CHUNK_MAX_TOKENS", v)
         case Array("target-tokens", v)      => applyKey(s, "CHUNK_TARGET_TOKENS", v)
         case Array("min-tokens", v)         => applyKey(s, "CHUNK_MIN_TOKENS", v)
@@ -143,7 +143,6 @@ object Settings {
     case "EMBEDDING_MODEL"      => s.copy(embeddingModel = v)
     case "EMBEDDING_DIMENSIONS" => s.copy(embeddingDimensions = toInt(key, v))
     case "STORAGE_TYPE"         => s.copy(storageType = v)
-    case "STORE_PREFIX_LEN"     => s.copy(storePrefixLen = toInt(key, v))
     case "CHUNK_MAX_TOKENS"     => s.copy(chunkMaxTokens = toInt(key, v))
     case "CHUNK_TARGET_TOKENS"  => s.copy(chunkTargetTokens = toInt(key, v))
     case "CHUNK_MIN_TOKENS"     => s.copy(chunkMinTokens = toInt(key, v))

@@ -138,12 +138,18 @@ object Drift {
     // `_guard` (always 0, or an error) rides BOTH metric sums so column
     // pruning can never drop the validation — a caller selecting only
     // `kl_ref_cur` would otherwise prune `psi` and the guard with it
-    present.select(
+    val result = present.select(
       round((col("_psiN") + col("_guard") + (lit(buckets.toLong) - col("_npresent")) * lit(psi0)) / lit(1e9), 6).as("psi"),
       round((col("_klN") + col("_guard") + (lit(buckets.toLong) - col("_npresent")) * lit(kl0)) / lit(1e9), 6).as("kl_ref_cur"),
       col("_npresent").cast("long").as("n_buckets_present"),
       lit(tRef).as("n_ref"),
       lit(tCur).as("n_cur"))
+    // the one-row result lands as a local relation, so nothing downstream
+    // reads the checkpoint and it is released here, not left to the GC
+    try joined.sparkSession.createDataFrame(
+      java.util.Arrays.asList(result.collect(): _*), result.schema)
+    finally org.apache.spark.sql.graft.CheckpointBridge.internalRdd(joined)
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** One-call text drift: hashed-n-gram bucket distributions of both

@@ -126,7 +126,13 @@ object ImportanceSampling {
     val ratio = joined.select(col("bucket"),
       (log(coalesce(col("_ct"), lit(0L)) + lit(1.0)) - lit(math.log(tTot)) -
         log(coalesce(col("_cr"), lit(0L)) + lit(1.0)) + lit(math.log(rTot))).as("lr"))
-    (ratio, floor)
+    // the ratio table (≤ `buckets` rows, broadcast by every scoring join
+    // anyway) lands as a local relation, so nothing downstream reads the
+    // checkpoint and it is released here, not left to the GC
+    try (joined.sparkSession.createDataFrame(
+      java.util.Arrays.asList(ratio.collect(): _*), ratio.schema), floor)
+    finally org.apache.spark.sql.graft.CheckpointBridge.internalRdd(joined)
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** A materialized DSIR scoring model: the per-bucket log-ratio table

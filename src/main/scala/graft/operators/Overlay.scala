@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Relational form: union(old, new) → keep the newest row per key via a
   * window over the key. The window shuffles by key once; at scale the store
   * side should be partitioned by a key-derived column so the shuffle is
-  * co-located (see [[graft.sources.ChunkStore]]).
+  * co-located.
   */
 object Overlay {
 

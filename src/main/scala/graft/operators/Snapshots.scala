@@ -47,9 +47,9 @@ import org.apache.spark.sql.types._
   * cost Spark's own `InMemoryFileIndex` pays).
   *
   * Commit protocol (multi-writer appends; same staged-write +
-  * checked-swap family as `ChunkStore`/`TextSearch.compactIndex`, with
-  * commit sections serialized on `_commit_lock` — see the commit
-  * serialization notes below):
+  * checked-swap family as `TextSearch.compactIndex`, with commit sections
+  * serialized on `_commit_lock` — see the commit serialization notes
+  * below):
   * data files land under a fresh `data/c<version>-<token>/` dir, the new
   * manifest lands under `_log/v<version>/`, and only then does `_current`
   * swap via an atomic rename. A crash before the swap leaves the table
@@ -275,7 +275,7 @@ object Snapshots {
   // pointer and retries/fails) or hasn't started its commit section.
   // The lock covers ONLY the cheap commit half — staging (the data write)
   // stays fully concurrent — and a stale lock (crashed committer) is
-  // broken after [[staleLockMs]], same discipline as `ChunkStore`.
+  // broken after [[staleLockMs]].
   // Atomic create-if-absent arbitrates: POSIX O_EXCL locally, create(
   // overwrite=false) on HDFS; object stores need an external coordinator.
 
@@ -317,16 +317,19 @@ object Snapshots {
     * that lets a nightly `maintain()` coexist with a streaming append sink:
     *
     * Inside the commit lock, commits that landed in `(plannedParent, cur]`
-    * are re-validated. When every one is an APPEND whose files CANNOT hold
-    * a row the op should have seen (their manifest stats boxes miss the
-    * op's predicate/key box — or the op is a row-preserving replace, which
-    * commutes with any append), the appended files carry forward untouched
+    * are re-validated. When every one only ADDED files — an append, or any
+    * other op that left every base file referenced with its deletion
+    * vector unchanged (a keyed upsert whose keys matched no live row: two
+    * writers of disjoint documents) — and those files CANNOT hold a row
+    * the op should have seen (their manifest stats boxes miss the op's
+    * predicate/key box — or the op is a row-preserving replace, which
+    * commutes with any append), the added files carry forward untouched
     * and the op commits against the refreshed base: all commits land, none
-    * retries its data write. A genuine overlap — an appended file that
-    * might match, or an intervening non-append — still throws
-    * ConcurrentModificationException (the op's rewrite is stale). This is
-    * the Delta/Iceberg conflict-resolution discipline: appends commute
-    * with a replace of files they don't contain.
+    * retries its data write. A genuine overlap — an added file that might
+    * match, or an intervening commit that deleted or rewrote rows — still
+    * throws ConcurrentModificationException (the op's rewrite is stale).
+    * This is the Delta/Iceberg conflict-resolution discipline: appends
+    * commute with a replace of files they don't contain.
     *
     * `preserved` rows keep their recorded `version` (carried references +
     * re-referenced MOR entries); `entries` are fresh files retagged to the
@@ -358,11 +361,12 @@ object Snapshots {
       else {
         val ops = ((plannedParent + 1) to cur).map(x => (x, commitInfo(spark, table, x).op))
         val nonAppend = ops.filter(_._2 != "append")
-        if (nonAppend.nonEmpty)
+        if (nonAppend.nonEmpty && !onlyAddedFiles(spark, table, plannedParent, cur))
           throw new java.util.ConcurrentModificationException(
             s"snapshot $op at $table planned against v$plannedParent but " +
               s"v${nonAppend.head._1} (${nonAppend.head._2}) intervened — " +
-              "non-append commits do not commute; re-run against the current version")
+              "commits that delete or rewrite rows do not commute; re-run against " +
+              "the current version")
         val extra = fileRows(spark, table, cur)
           .filter(col("version") > plannedParent)
           .select(fileColNames.head, fileColNames.tail: _*)
@@ -397,11 +401,21 @@ object Snapshots {
     }
   }
 
+  /** Whether the commits in `(from, to]` only added files: `to` still
+    * references every file of `from`, each with the same deletion-vector
+    * dataset, and no other file recorded at or before `from`.
+    */
+  private def onlyAddedFiles(spark: SparkSession, table: String, from: Long, to: Long): Boolean = {
+    val base = fileRows(spark, table, from).select("path", "dv_path")
+    val kept = fileRows(spark, table, to).filter(col("version") <= from).select("path", "dv_path")
+    base.exceptAll(kept).isEmpty && kept.exceptAll(base).isEmpty
+  }
+
   /** Test seam: runs after an op has staged/planned its rewrite, just
     * before its commit section takes the lock — lets specs interleave a
     * concurrent commit DETERMINISTICALLY (production value is a no-op).
     */
-  private[operators] var preCommitHook: () => Unit = () => ()
+  private[graft] var preCommitHook: () => Unit = () => ()
 
   /** Numeric top-level columns — the default stats set. */
   /** Default stats set: numeric + string top-level columns (string bounds
@@ -776,7 +790,7 @@ object Snapshots {
     // a hand-rolled write must too, or a CACHED plan over this dir (a
     // re-created table at the same path: test/bench reruns, drop-and-
     // recreate ops) keeps serving the PREVIOUS table's manifest rows and
-    // readers chase deleted data files (the ChunkStore staged-swap lesson)
+    // readers chase deleted data files
     spark.catalog.refreshByPath(vdir(table, v))
   }
 
@@ -1574,7 +1588,7 @@ object Snapshots {
           // was itself retired (merge-then-delete drops both rows); that
           // split costs two more joins, so it runs only when some upsert
           // was retired
-          val retired = rKeys.map(rk => pos(cand.join(rk, retireCols, "left_semi"), noKey))
+          val retired = rKeys.map(rk => pos(retiredRows(cand, rk, retireCols), noKey))
           val hit = uKeys.map { uk =>
             val h = cand.join(uk, keyCols, "left_semi")
             rKeys.fold(h)(rk => h.join(rk, retireCols, "left_anti"))
@@ -1594,6 +1608,17 @@ object Snapshots {
       files.unpersist(); src.foreach(_.unpersist())
     }
   }
+
+  /** The delete-by-document join at the heart of K3, shared with the plan
+    * audit: the candidate rows whose retire key is in `retire`. No
+    * broadcast hint: the retire set is unbounded (retiring a whole dataset
+    * can mean 10⁷–10⁸ ids). Hint-free, the planner broadcasts small id sets
+    * and falls back to a shuffled semi-join for large ones — the same
+    * size-adaptive shape as the J1 ledger anti-join.
+    */
+  private[graft] def retiredRows(
+      cand: DataFrame, retire: DataFrame, retireCols: Seq[String]): DataFrame =
+    cand.join(retire, retireCols, "left_semi")
 
   /** One collect over a version's cached file rows: the file count and the
     * `(path, dv_path)` of the files `mayMatch` keeps — a merge-on-read

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Identify
-import graft.sources.{ChunkStore, KeyedChunkStore}
+import graft.sources.SnapshotChunkStore
 import graft.state.PipelineState
 
 /** The thin job entry points mirroring the reference CLI (`cli.py`):
@@ -17,7 +17,7 @@ object Ops {
   /** `lg status`: ledger + store counts (A2; reference `cli.py:333-347`). */
   final case class Status(processed: Long, failed: Long, storeChunks: Long, storeDocs: Long)
 
-  def status(spark: SparkSession, statePath: String, store: KeyedChunkStore): Status = {
+  def status(spark: SparkSession, statePath: String, store: SnapshotChunkStore): Status = {
     val state = new PipelineState(statePath).load(spark)
     val byStatus = state.groupBy(col("status")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -34,7 +34,7 @@ object Ops {
     */
   final case class Validation(isConsistent: Boolean, stateOnly: Seq[String], storeOnly: Seq[String])
 
-  def validate(spark: SparkSession, statePath: String, store: KeyedChunkStore, reportLimit: Int = 10): Validation = {
+  def validate(spark: SparkSession, statePath: String, store: SnapshotChunkStore, reportLimit: Int = 10): Validation = {
     val stateIds = new PipelineState(statePath).load(spark)
       .filter(col("status") === "processed").select(col("docId"))
     val diff = Identify.validate(stateIds, store.distinctDocumentIds(spark)).cache()
@@ -48,9 +48,35 @@ object Ops {
     } finally { diff.unpersist(); () }
   }
 
-  /** `lg migrate`: store → store copy (K5; reference `cli.py:166-329`). */
-  def migrate(spark: SparkSession, source: KeyedChunkStore, target: KeyedChunkStore): Long =
-    ChunkStore.migrate(spark, source, target)
+  /** `lg migrate`: chunk import/export (K5; reference `cli.py:166-329`).
+    * A `snapshot` side is the chunk store — read whole, or written as ONE
+    * upsert commit. A `parquet`/`json` side is a plain chunk directory,
+    * read with [[SnapshotChunkStore.storedSchema]] (JSON `PERMISSIVE`:
+    * corrupt lines are dropped, as the reference skips them with a warning,
+    * `jsonl_vector_store.py:197-226`; partition columns such as a bucketed
+    * layout's `doc_prefix` are dropped) and written by a plain `df.write`
+    * that fails if the directory exists. Returns the rows moved.
+    */
+  def migrate(
+      spark: SparkSession, src: String, srcFormat: String, dst: String, dstFormat: String): Long = {
+    Seq(srcFormat, dstFormat).foreach(f => require(MigrateFormats.contains(f),
+      s"migrate format must be one of ${MigrateFormats.mkString(", ")}, got '$f'"))
+    val rows = srcFormat match {
+      case "snapshot" => new SnapshotChunkStore(src).read(spark)
+      case fmt =>
+        spark.read.schema(SnapshotChunkStore.storedSchema).option("mode", "PERMISSIVE")
+          .format(fmt).load(src)
+          .select(SnapshotChunkStore.chunkCols.map(col): _*)
+          .filter(col("chunkId").isNotNull)
+    }
+    dstFormat match {
+      case "snapshot" => new SnapshotChunkStore(dst).upsert(spark, rows)
+      case fmt => rows.write.format(fmt).save(dst)
+    }
+    rows.count()
+  }
+
+  private val MigrateFormats: Seq[String] = Seq("snapshot", "parquet", "json")
 
   /** Hadoop-Configuration holder that survives task serialization: the
     * stock `Configuration` is not `Serializable`, but it is `Writable` —

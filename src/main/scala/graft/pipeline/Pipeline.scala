@@ -7,7 +7,7 @@ import graft.chunker.LovdataChunker
 import graft.embed.{Embedding, EmbeddingProvider}
 import graft.model.ChunkRow
 import graft.operators.Identify
-import graft.sources.{ChunkStore, KeyedChunkStore}
+import graft.sources.SnapshotChunkStore
 import graft.state.PipelineState
 
 /** The end-to-end incremental pipeline (reference
@@ -15,7 +15,7 @@ import graft.state.PipelineState
   *
   *   identify (J1 anti-join vs ledger) → chunk (per-document flatMap) →
   *   embed (mapPartitions batches) → store delta (upsert + K3 cleanup of
-  *   failed and removed docs, one [[KeyedChunkStore.applyDelta]] call) →
+  *   failed and removed docs, one [[SnapshotChunkStore.applyDelta]] call) →
   *   commit ledger (K4).
   *
   * The reference commits state after every file; our unit of durability is
@@ -111,7 +111,7 @@ object Pipeline {
       spark: SparkSession,
       changed: DataFrame,
       removed: DataFrame,
-      store: KeyedChunkStore,
+      store: SnapshotChunkStore,
       statePath: String,
       chunker: LovdataChunker,
       provider: EmbeddingProvider,

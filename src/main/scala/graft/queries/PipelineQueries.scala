@@ -12,7 +12,7 @@ import graft.functions.TextFunctions
 import graft.multimodal.Multimodal
 import graft.operators.Identify
 import graft.pipeline.Pipeline
-import graft.sources.{ChunkStore, LovligState}
+import graft.sources.{LovligState, SnapshotChunkStore}
 import graft.streaming.StreamingPipeline
 
 /** End-to-end pipeline battery: these queries synthesize the reference's
@@ -158,7 +158,7 @@ object PipelineQueries {
       (s, d) => {
         val storePath = tmpDir(d, "store")
         cleanDir(storePath)
-        val store = new ChunkStore(storePath, prefixLen = 1)
+        val store = new SnapshotChunkStore(storePath)
         def chunkify(df: DataFrame): DataFrame = df.select(
           concat(lit("doc"), col("doc_id"), lit("_chunk_0")).as("chunkId"),
           concat(lit("doc"), col("doc_id")).as("documentId"),
@@ -199,21 +199,19 @@ object PipelineQueries {
       Seq("K1", "K3", "J3", "A1", "A2", "S4", "F6")
     ),
 
-    // The SAME keyed-store protocol over the snapshot-table backend
-    // (SnapshotChunkStore): every store call is one merge-on-read commit
-    // (Snapshots.mergeMor) — an upsert marks the replaced chunkIds'
-    // positions and appends the new chunks, a delete-by-document marks the
-    // documents' positions; zero data files rewrite, and a pipeline delta
-    // lands its upserts and deletes as ONE such commit. Free on this
-    // backend — TIME TRAVEL: n_v1 pins the store's exact pre-overlay
+    // The same store round-trip, commit by commit: every store call is one
+    // merge-on-read commit (Snapshots.mergeMor) — an upsert marks the
+    // replaced chunkIds' positions and appends the new chunks, a
+    // delete-by-document marks the documents' positions; zero data files
+    // rewrite, and a pipeline delta lands its upserts and deletes as ONE
+    // such commit. TIME TRAVEL: n_v1 pins the store's exact pre-overlay
     // contents. The final rollup must equal k1_k3's oracle arithmetic
-    // identically, which is the interchangeability proof for the two
-    // backends.
+    // identically.
     "k_snapshot_store_roundtrip" -> Q(
       (s, d) => {
         val storePath = tmpDir(d, "snap_store")
         cleanDir(storePath)
-        val store = new graft.sources.SnapshotChunkStore(storePath)
+        val store = new SnapshotChunkStore(storePath)
         def chunkify(df: DataFrame): DataFrame = df.select(
           concat(lit("doc"), col("doc_id"), lit("_chunk_0")).as("chunkId"),
           concat(lit("doc"), col("doc_id")).as("documentId"),
@@ -389,7 +387,7 @@ object PipelineQueries {
           .select(concat(lit("doc"), col("doc_id")).as("docId"))
         val summary = Pipeline.run(
           s, changed, removed,
-          new ChunkStore(storePath, prefixLen = 1), statePath,
+          new SnapshotChunkStore(storePath), statePath,
           new LovdataChunker(targetTokens = 64, maxTokens = 200, minTokens = 20),
           new DeterministicProvider(32)
         )
@@ -660,7 +658,7 @@ object PipelineQueries {
             col("xml")
           )
           .coalesce(1).write.mode("overwrite").json(inDir)
-        val store = new ChunkStore(storeDir, prefixLen = 1)
+        val store = new SnapshotChunkStore(storeDir)
         val q = StreamingPipeline.writer(
           s, StreamingPipeline.fileSource(s, inDir), store,
           new LovdataChunker(targetTokens = 64, maxTokens = 200, minTokens = 20),

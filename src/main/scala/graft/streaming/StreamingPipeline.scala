@@ -8,7 +8,7 @@ import org.apache.spark.sql.Row
 import graft.chunker.LovdataChunker
 import graft.embed.{Embedding, EmbeddingProvider}
 import graft.pipeline.Pipeline
-import graft.sources.{ChunkStore, KeyedChunkStore}
+import graft.sources.SnapshotChunkStore
 
 /** Streaming face of the engine (SURVEY §2.11): the reference is an
   * incremental batch loop (sync → identify → process); its streaming
@@ -66,7 +66,7 @@ object StreamingPipeline {
   def writer(
       spark: SparkSession,
       source: DataFrame,
-      store: KeyedChunkStore,
+      store: SnapshotChunkStore,
       chunker: LovdataChunker,
       provider: EmbeddingProvider,
       checkpointDir: String

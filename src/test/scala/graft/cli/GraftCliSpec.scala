@@ -7,7 +7,7 @@ import graft.chunker.LovdataChunker
 import graft.config.Settings
 import graft.embed.DeterministicProvider
 import graft.ops.Ops
-import graft.sources.ChunkStore
+import graft.sources.SnapshotChunkStore
 
 /** The full `lg process` path from disk: state.json + XML files on disk →
   * binaryFile scan → chunk → embed → store → ledger, with the reference's
@@ -20,6 +20,16 @@ class GraftCliSpec extends SparkSpec {
       s"""<html><body><main class="documentBody"><h1>L</h1>
          |<article class="legalP" id="$name-l1">$body</article>
          |</main></body></html>""".stripMargin.getBytes("UTF-8"))
+
+  /** The direct-chunker reference for a store: what `chunker` cuts from each
+    * live document's XML file, under the pipeline's positional chunk ids
+    * (`<docId>_chunk_<chunkIndex>`), as chunkId → content.
+    */
+  private def directChunks(chunker: LovdataChunker, docs: (String, String)*): Map[String, String] =
+    docs.flatMap { case (docId, path) =>
+      chunker.chunk(new String(Files.readAllBytes(Paths.get(path)), "UTF-8"))
+        .map(c => s"${docId}_chunk_${c.chunkIndex}" -> c.text)
+    }.toMap
 
   test("process from disk: CDC scan + binaryFile + pipeline; idempotent; exit codes") {
     val root = tmpDir("cli")
@@ -48,7 +58,7 @@ class GraftCliSpec extends SparkSpec {
     val r1 = run()
     assert(r1.summary.processed == 2)
     assert(r1.exitCode == 1, "missing doc_c must surface as a failure exit code")
-    val store = new ChunkStore(storePath)
+    val store = new SnapshotChunkStore(storePath)
     import spark.implicits._
     assert(store.distinctDocumentIds(spark).as[String].collect().sorted.toSeq == Seq("doc_a", "doc_b"))
 
@@ -110,7 +120,7 @@ class GraftCliSpec extends SparkSpec {
       chunker = new LovdataChunker(targetTokens = 20, maxTokens = 100, minTokens = 2),
       provider = provider).summary.processed == 2)
 
-    val store = new ChunkStore(storePath)
+    val store = new SnapshotChunkStore(storePath)
     import spark.implicits._
     val storedText = store.read(spark)
       .filter(org.apache.spark.sql.functions.col("documentId") === "doc_a")
@@ -128,7 +138,7 @@ class GraftCliSpec extends SparkSpec {
 
   test("text-search: BM25 over the store ranks the term-bearing chunk first, indexed == brute") {
     val root = tmpDir("clitext")
-    val store = new ChunkStore(s"$root/store")
+    val store = new SnapshotChunkStore(s"$root/store")
     import spark.implicits._
     import org.apache.spark.sql.functions.{array, col, lit, sha2}
     val chunks = Seq(
@@ -161,7 +171,7 @@ class GraftCliSpec extends SparkSpec {
 
   test("decontaminate removes documents whose chunks collide with a benchmark file") {
     val root = tmpDir("clidecon")
-    val store = new ChunkStore(s"$root/store", prefixLen = 1)
+    val store = new SnapshotChunkStore(s"$root/store")
     val leakRun = (1 to 8).map(i => s"bench$i").mkString(" ")
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -191,7 +201,7 @@ class GraftCliSpec extends SparkSpec {
 
   test("vector-index + vector-search: indexed ANN finds the stored chunk; append makes new chunks searchable") {
     val root = tmpDir("clivec")
-    val store = new ChunkStore(s"$root/store", prefixLen = 1)
+    val store = new SnapshotChunkStore(s"$root/store")
     val provider = new graft.embed.DeterministicProvider(64)
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -231,7 +241,7 @@ class GraftCliSpec extends SparkSpec {
 
   test("graph-index + graph-search: beam walk finds the stored chunk; append links new chunks") {
     val root = tmpDir("cligraph")
-    val store = new ChunkStore(s"$root/store", prefixLen = 1)
+    val store = new SnapshotChunkStore(s"$root/store")
     val provider = new graft.embed.DeterministicProvider(64)
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -291,7 +301,7 @@ class GraftCliSpec extends SparkSpec {
 
   test("dedup retires the near-duplicate document, keeping the canonical one") {
     val root = tmpDir("clidedup")
-    val store = new ChunkStore(s"$root/store", prefixLen = 1)
+    val store = new SnapshotChunkStore(s"$root/store")
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // doc_b near-dups doc_a ACROSS its two chunks (the doc-level concat is
@@ -320,7 +330,7 @@ class GraftCliSpec extends SparkSpec {
 
   test("decontaminate --report ranks the leaking eval item and deletes nothing") {
     val root = tmpDir("clireport")
-    val store = new ChunkStore(s"$root/store", prefixLen = 1)
+    val store = new SnapshotChunkStore(s"$root/store")
     val leakRun = (1 to 8).map(i => s"bench$i").mkString(" ")
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -371,7 +381,7 @@ class GraftCliSpec extends SparkSpec {
         .stripMargin.replace("\n", "").getBytes("UTF-8"))
 
     val settings = Settings.fromArgs(
-      Seq("--target-tokens=100", "--max-tokens=150", "--min-tokens=50", "--prefix-len=1",
+      Seq("--target-tokens=100", "--max-tokens=150", "--min-tokens=50",
         "--dataset=dsa*", "--embedding-dim=8"),
       env = Map.empty)._1
     val storePath = s"$root/store"
@@ -380,14 +390,12 @@ class GraftCliSpec extends SparkSpec {
     assert(r.summary.processed == 1, "dataset pattern must exclude the 'other' dataset")
     assert(r.exitCode == 0)
 
-    // prefixLen=1 → single-hex-char bucket directories
-    val buckets = new java.io.File(storePath).listFiles()
-      .filter(_.getName.startsWith("doc_prefix=")).map(_.getName.stripPrefix("doc_prefix="))
-    assert(buckets.nonEmpty && buckets.forall(_.length == 1))
+    // the configured store is a snapshot table
+    assert(graft.operators.Snapshots.currentVersion(storePath).isDefined)
 
     // target-tokens=100 over a 300-word doc → the sentence windowing splits
     import spark.implicits._
-    val chunks = new ChunkStore(storePath, prefixLen = 1).read(spark)
+    val chunks = new SnapshotChunkStore(storePath).read(spark)
     assert(chunks.select("documentId").distinct().as[String].collect().toSeq == Seq("doc_1"))
     assert(chunks.count() > 1, "configured token bounds must drive chunk splitting")
     assert(chunks.select("embedding").head().getSeq[Float](0).length == 8)
@@ -406,26 +414,22 @@ class GraftCliSpec extends SparkSpec {
         |"doc_b.xml":{"status":"modified","sha256":"hb"}}}}}"""
         .stripMargin.replace("\n", "").getBytes("UTF-8"))
     import spark.implicits._
-    def contents(storageType: String): Map[String, String] = {
-      val storePath = s"$root/store-$storageType"
-      val settings = Settings(storageType = storageType, embeddingDimensions = 8)
-      val r = GraftCli.processConfigured(
-        spark, stateJson, extracted, storePath, s"$root/ledger-$storageType", settings)
-      assert(r.exitCode == 0 && r.summary.processed == 2)
-      // idempotent re-run over the same backend
-      assert(GraftCli.processConfigured(spark, stateJson, extracted, storePath,
-        s"$root/ledger-$storageType", settings).summary.processed == 0)
-      GraftCli.mkStore(storePath, settings).read(spark)
-        .select("chunkId", "content").as[(String, String)].collect().toMap
-    }
-    val viaSnapshot = contents("snapshot")
-    val viaParquet = contents("parquet")
-    assert(viaSnapshot == viaParquet && viaSnapshot.nonEmpty,
-      "both backends must store identical chunks")
-    // the snapshot backend exposes status/validate through the same trait
     val settings = Settings(storageType = "snapshot", embeddingDimensions = 8)
-    val st = Ops.status(spark, s"$root/ledger-snapshot",
-      GraftCli.mkStore(s"$root/store-snapshot", settings))
+    val storePath = s"$root/store-snapshot"
+    val r = GraftCli.processConfigured(
+      spark, stateJson, extracted, storePath, s"$root/ledger-snapshot", settings)
+    assert(r.exitCode == 0 && r.summary.processed == 2)
+    // idempotent re-run over the same store
+    assert(GraftCli.processConfigured(spark, stateJson, extracted, storePath,
+      s"$root/ledger-snapshot", settings).summary.processed == 0)
+    val viaSnapshot = GraftCli.mkStore(storePath, settings).read(spark)
+      .select("chunkId", "content").as[(String, String)].collect().toMap
+    val reference = directChunks(settings.chunker(),
+      "doc_a" -> s"$extracted/ds1/doc_a.xml", "doc_b" -> s"$extracted/ds1/doc_b.xml")
+    assert(viaSnapshot == reference && viaSnapshot.nonEmpty,
+      "the store must hold exactly the chunker's chunks of the live documents")
+    // status/validate read the same store
+    val st = Ops.status(spark, s"$root/ledger-snapshot", GraftCli.mkStore(storePath, settings))
     assert(st.processed == 2 && st.storeDocs == 2)
   }
 
@@ -443,30 +447,27 @@ class GraftCliSpec extends SparkSpec {
       p
     }
     // run 1 adds three documents; run 2 modifies one, adds one, removes one
-    def runBoth(storageType: String) = {
-      val extracted = s"$root/extracted-$storageType"
-      Files.createDirectories(Paths.get(extracted, "ds1"))
-      writeXml(s"$extracted/ds1", "doc_a.xml", "Alpha beta gamma delta.")
-      writeXml(s"$extracted/ds1", "doc_b.xml", "Epsilon zeta eta theta.")
-      writeXml(s"$extracted/ds1", "doc_c.xml", "Iota kappa lambda mu.")
-      val settings = Settings(storageType = storageType, embeddingDimensions = 8)
-      val store = s"$root/store-$storageType"
-      val ledger = s"$root/ledger-$storageType"
-      val r1 = GraftCli.processConfigured(spark, writeState("s1",
-        ("doc_a.xml", "added", "ha"), ("doc_b.xml", "added", "hb"), ("doc_c.xml", "added", "hc")),
-        extracted, store, ledger, settings)
-      writeXml(s"$extracted/ds1", "doc_a.xml", "Alpha beta gamma delta revised epsilon.")
-      writeXml(s"$extracted/ds1", "doc_d.xml", "Nu xi omicron pi.")
-      val s2 = writeState("s2", ("doc_a.xml", "modified", "ha2"), ("doc_b.xml", "unchanged", "hb"),
-        ("doc_c.xml", "removed", "hc"), ("doc_d.xml", "added", "hd"))
-      (r1, () => GraftCli.processConfigured(spark, s2, extracted, store, ledger, settings),
-        () => GraftCli.mkStore(store, settings).read(spark), store)
-    }
-    val (p1, p2, pRead, _) = runBoth("parquet")
-    assert(p1.exitCode == 0 && p1.summary.processed == 3)
-    val pr2 = p2()
-
-    val (r1, run2, read, store) = runBoth("snapshot")
+    val extracted = s"$root/extracted-snapshot"
+    Files.createDirectories(Paths.get(extracted, "ds1"))
+    writeXml(s"$extracted/ds1", "doc_a.xml", "Alpha beta gamma delta.")
+    writeXml(s"$extracted/ds1", "doc_b.xml", "Epsilon zeta eta theta.")
+    writeXml(s"$extracted/ds1", "doc_c.xml", "Iota kappa lambda mu.")
+    val settings = Settings(storageType = "snapshot", embeddingDimensions = 8)
+    val store = s"$root/store-snapshot"
+    val ledger = s"$root/ledger-snapshot"
+    val r1 = GraftCli.processConfigured(spark, writeState("s1",
+      ("doc_a.xml", "added", "ha"), ("doc_b.xml", "added", "hb"), ("doc_c.xml", "added", "hc")),
+      extracted, store, ledger, settings)
+    writeXml(s"$extracted/ds1", "doc_a.xml", "Alpha beta gamma delta revised epsilon.")
+    writeXml(s"$extracted/ds1", "doc_d.xml", "Nu xi omicron pi.")
+    val s2 = writeState("s2", ("doc_a.xml", "modified", "ha2"), ("doc_b.xml", "unchanged", "hb"),
+      ("doc_c.xml", "removed", "hc"), ("doc_d.xml", "added", "hd"))
+    def run2() = GraftCli.processConfigured(spark, s2, extracted, store, ledger, settings)
+    def read() = GraftCli.mkStore(store, settings).read(spark)
+    // the live documents after the delta, cut by the chunker directly
+    def doc(d: String) = d -> s"$extracted/ds1/$d.xml"
+    val reference = directChunks(settings.chunker(), doc("doc_a"), doc("doc_b"), doc("doc_d"))
+    val changedReference = directChunks(settings.chunker(), doc("doc_a"), doc("doc_d"))
     assert(r1.exitCode == 0 && r1.summary.processed == 3)
     val snaps = graft.operators.Snapshots
     def referenced(v: Long): Set[String] =
@@ -491,17 +492,18 @@ class GraftCliSpec extends SparkSpec {
     assert(newDirs.size == 2 && newDirs.count(_.endsWith(".dv")) == 1, s"new dirs: $newDirs")
     val group = newDirs.find(!_.endsWith(".dv")).get
     assert((referenced(v2) -- referenced(v1)).forall(_.startsWith(s"data/$group/")))
-    // store contents equal the parquet backend's after the same delta
+    // store contents equal the direct chunker's over the live documents
     def contents(df: org.apache.spark.sql.DataFrame): Map[String, String] =
       df.select("chunkId", "content").as[(String, String)].collect().toMap
-    assert(contents(read()) == contents(pRead()) && contents(read()).nonEmpty)
+    assert(contents(read()) == reference && contents(read()).nonEmpty)
     assert(!contents(read()).values.exists(_.contains("Iota")), "removed document's chunks must go")
     // ProcessResult counts match the delta: modified + added processed, one removed
     assert(r2.exitCode == 0 && r2.summary.processed == 2 && r2.summary.failed == 0 &&
       r2.summary.removed == 1, s"$r2")
     assert(r2.summary.chunksWritten ==
       read().filter(col("sourceHash").isin("ha2", "hd")).count() && r2.summary.chunksWritten > 0)
-    assert(r2.summary == pr2.summary, s"snapshot $r2 vs parquet $pr2")
+    assert(r2.summary.chunksWritten == changedReference.size,
+      s"$r2 vs the chunker's ${changedReference.size} chunks of the changed documents")
   }
 
   test("prepare: warc-ingest output feeds the crawl→shards pipeline into a snapshot table") {

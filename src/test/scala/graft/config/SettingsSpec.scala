@@ -8,22 +8,22 @@ class SettingsSpec extends AnyFunSuite {
   test("defaults mirror the reference chunk/storage defaults") {
     val s = Settings()
     assert(s.chunkMaxTokens == 6800 && s.chunkTargetTokens == 2000 && s.chunkMinTokens == 300)
-    assert(s.chunkOverlapRatio == 0.15 && s.storageType == "parquet" && !s.force)
+    assert(s.chunkOverlapRatio == 0.15 && s.storageType == "snapshot" && !s.force)
   }
 
   test("env vars override defaults; flags override env") {
     val env = Map(
       "GRAFT_CHUNK_TARGET_TOKENS" -> "1500",
-      "GRAFT_STORE_PREFIX_LEN" -> "3",
+      "GRAFT_EMBEDDING_DIMENSIONS" -> "96",
       "GRAFT_FORCE" -> "true"
     )
     val fromEnv = Settings.fromEnv(env)
-    assert(fromEnv.chunkTargetTokens == 1500 && fromEnv.storePrefixLen == 3 && fromEnv.force)
+    assert(fromEnv.chunkTargetTokens == 1500 && fromEnv.embeddingDimensions == 96 && fromEnv.force)
 
     val (s, positional) = Settings.fromArgs(
       Seq("a.json", "--target-tokens=800", "dir", "--limit=5"), env)
     assert(s.chunkTargetTokens == 800, "flag beats env")
-    assert(s.storePrefixLen == 3, "env survives where no flag is given")
+    assert(s.embeddingDimensions == 96, "env survives where no flag is given")
     assert(s.limit.contains(5))
     assert(positional == Seq("a.json", "dir"))
   }
@@ -34,7 +34,11 @@ class SettingsSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](Settings(chunkMinTokens = 10))
     assertThrows[IllegalArgumentException](Settings(chunkOverlapRatio = 0.7))
     assertThrows[IllegalArgumentException](Settings(storageType = "chroma"))
-    assertThrows[IllegalArgumentException](Settings(storePrefixLen = 0))
+    // the retired chunk-store formats fail at config load and name the import path
+    Seq("parquet", "json").foreach { t =>
+      val e = intercept[IllegalArgumentException](Settings.fromArgs(Seq(s"--storage-type=$t"))._1)
+      assert(e.getMessage.contains("migrate"), e.getMessage)
+    }
     assertThrows[IllegalArgumentException](Settings(datasetFilter = "  "))
     assertThrows[IllegalArgumentException](Settings(limit = Some(0)))
     assertThrows[IllegalArgumentException](Settings.fromArgs(Seq("--target-tokens=abc"))._1)

@@ -18,6 +18,16 @@ class DriftSpec extends SparkSpec {
     assert(r.getAs[Double]("kl_ref_cur") == 0.0)
   }
 
+  test("textDrift releases its count checkpoint (no persisted RDD left)") {
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "beta gamma epsilon zeta"))
+      .toDF("id", "text")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val r = Drift.textDrift(docs, docs.filter(col("id") === 2L), "text", buckets = 64)
+    assert(r.head().getAs[Double]("psi") > 0.0, "the result still evaluates after the release")
+    assert(sc.getPersistentRDDs.keySet == before, "textDrift left a persisted RDD")
+  }
+
   test("categorical drift matches the hand-computed PSI and KL") {
     // ref: a,a,b   cur: a,b,b   domain 2
     // p = (2+1)/5, (1+1)/5 ; q = (1+1)/5, (2+1)/5

@@ -42,6 +42,17 @@ class ImportanceSamplingSpec extends SparkSpec {
     assert(run(docs) == run(docs.repartition(13)), "scores must not depend on partitioning")
   }
 
+  test("dsir: logWeights releases its count checkpoint (no persisted RDD left)") {
+    val docs = (1L to 40L).map(i => (i, s"tok${i % 5} tok${i % 7} tok${i % 3}")).toDF("doc_id", "text")
+    val tc = ImportanceSampling.bucketCounts(docs.filter(col("doc_id") % 4 === 0), "text", B)
+    val rc = ImportanceSampling.bucketCounts(docs, "text", B)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val w = ImportanceSampling.logWeights(docs, "doc_id", "text", tc, rc, B)
+    assert(w.count() == 40L, "the weights still evaluate after the release")
+    assert(sc.getPersistentRDDs.keySet == before, "logWeights left a persisted RDD")
+  }
+
   test("dsir: gumbel top-k is deterministic, bounded, and weight-sensitive") {
     val filler = (1L to 100L).map(i => (i, s"x$i y$i x$i z$i w$i v$i"))
     val hero = Seq((999L, "alpha beta alpha beta alpha beta alpha beta"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.Enrichers
-import graft.sources.ChunkStore
+import graft.sources.SnapshotChunkStore
 import graft.state.PipelineState
 import graft.ops.ProgressReporter
 
@@ -13,8 +13,8 @@ import graft.ops.ProgressReporter
 class OpsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def seedStore(dir: String): ChunkStore = {
-    val store = new ChunkStore(dir, prefixLen = 1)
+  private def seedStore(dir: String): SnapshotChunkStore = {
+    val store = new SnapshotChunkStore(dir)
     val df = Seq(("d1_c0", "d1", "alpha"), ("d2_c0", "d2", "beta")).toDF("chunkId", "documentId", "content")
       .select(
         col("chunkId"), col("documentId"), lit("ds").as("datasetName"), col("content"),
@@ -57,9 +57,10 @@ class OpsSpec extends SparkSpec {
 
   test("migrate copies the store") {
     val src = seedStore(tmpDir("mig_src"))
-    val dst = new ChunkStore(tmpDir("mig_dst"), format = "json", prefixLen = 1)
-    assert(Ops.migrate(spark, src, dst) == 2)
-    assert(dst.count(spark) == 2)
+    val root = tmpDir("mig_dst")
+    assert(Ops.migrate(spark, src.path, "snapshot", s"$root/json", "json") == 2)
+    assert(Ops.migrate(spark, s"$root/json", "json", s"$root/store", "snapshot") == 2)
+    assert(new SnapshotChunkStore(s"$root/store").count(spark) == 2)
   }
 
   test("F5 exists guard marks missing paths as failure records") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.chunker.LovdataChunker
 import graft.embed.DeterministicProvider
-import graft.sources.ChunkStore
+import graft.sources.SnapshotChunkStore
 
 /** End-to-end incremental workflow (reference
   * `tests/end2end/incremental_update_test.py`: initial run, skip-unchanged,
@@ -29,7 +29,7 @@ class PipelineSpec extends SparkSpec {
   test("run → idempotent second run → modify → remove (e2e)") {
     val storePath = tmpDir("pipe") + "/store"
     val statePath = tmpDir("pipe") + "/state.json"
-    val store = new ChunkStore(storePath)
+    val store = new SnapshotChunkStore(storePath)
     val chunker = new LovdataChunker(targetTokens = 20, maxTokens = 100, minTokens = 2)
     val provider = new DeterministicProvider(16)
 
@@ -70,7 +70,7 @@ class PipelineSpec extends SparkSpec {
   test("a modified doc that fails re-chunking keeps zero store rows (cleanup-on-error)") {
     val storePath = tmpDir("pipestale") + "/store"
     val statePath = tmpDir("pipestale") + "/state"
-    val store = new ChunkStore(storePath, prefixLen = 1)
+    val store = new SnapshotChunkStore(storePath)
     val chunker = new LovdataChunker(targetTokens = 20, maxTokens = 100, minTokens = 2)
     val provider = new DeterministicProvider(8)
     import spark.implicits._
@@ -94,7 +94,7 @@ class PipelineSpec extends SparkSpec {
   test("force reprocesses unchanged documents (reference orchestrator_test.py:153)") {
     val storePath = tmpDir("pipeforce") + "/store"
     val statePath = tmpDir("pipeforce") + "/state.json"
-    val store = new ChunkStore(storePath, prefixLen = 1)
+    val store = new SnapshotChunkStore(storePath)
     val chunker = new LovdataChunker(targetTokens = 20, maxTokens = 100, minTokens = 2)
     val provider = new DeterministicProvider(8)
     val batch = cdc(("f1", "h1", "Alpha beta."), ("f2", "h2", "Gamma delta."))
@@ -106,7 +106,7 @@ class PipelineSpec extends SparkSpec {
   test("per-document failure quarantine: bad XML marks failed, retries, never aborts") {
     val storePath = tmpDir("pipef") + "/store"
     val statePath = tmpDir("pipef") + "/state.json"
-    val store = new ChunkStore(storePath, prefixLen = 1)
+    val store = new SnapshotChunkStore(storePath)
     val chunker = new LovdataChunker(targetTokens = 20, maxTokens = 100, minTokens = 2)
     val provider = new DeterministicProvider(8)
     import spark.implicits._

@@ -1,12 +1,21 @@
 package graft.sources
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.util.Try
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Snapshots
+import graft.ops.Ops
 
 /** Store semantics (reference `tests/unit/jsonl_vector_store_test.py`:
-  * upsert, update-by-id, delete, empty-file removal, multi-doc handling).
+  * upsert, update-by-id, delete, empty-store handling, multi-doc handling),
+  * the import/export of plain parquet and JSON-lines chunk dirs, and
+  * concurrent writers.
   */
 class ChunkStoreSpec extends SparkSpec {
 
@@ -26,19 +35,22 @@ class ChunkStoreSpec extends SparkSpec {
       )
   }
 
+  private def freshStore(name: String) = new SnapshotChunkStore(tmpDir(name) + "/t")
+
+  private def contents(df: DataFrame): Map[String, String] =
+    df.select("chunkId", "content").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
   test("upsert inserts then overlays by chunkId (K1/J3)") {
-    val store = new ChunkStore(tmpDir("store"))
+    val store = freshStore("store")
     store.upsert(spark, chunks(("d1_c0", "d1", "v1", 0), ("d1_c1", "d1", "v1b", 1)))
     assert(store.count(spark) == 2)
     // same id, new content (different sourceHash — must still overlay)
     store.upsert(spark, chunks(("d1_c0", "d1", "v2", 0)))
-    val rows = store.read(spark).select("chunkId", "content").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(rows == Map("d1_c0" -> "v2", "d1_c1" -> "v1b"))
+    assert(contents(store.read(spark)) == Map("d1_c0" -> "v2", "d1_c1" -> "v1b"))
   }
 
   test("delete by document removes all chunks and empty buckets (K3)") {
-    val store = new ChunkStore(tmpDir("store"))
+    val store = freshStore("store")
     store.upsert(spark, chunks(
       ("d1_c0", "d1", "a", 0), ("d1_c1", "d1", "b", 1), ("d2_c0", "d2", "c", 0)
     ))
@@ -51,28 +63,8 @@ class ChunkStoreSpec extends SparkSpec {
     assert(store.count(spark) == 0)
   }
 
-  test("a torn bucket swap fails reads loudly and heals on the next mutation") {
-    val dir = tmpDir("store")
-    val store = new ChunkStore(dir)
-    store.upsert(spark, chunks(("d1_c0", "d1", "a", 0), ("d2_c0", "d2", "b", 0)))
-    assert(store.count(spark) == 2)
-    // simulate a crash mid-swap: one live bucket renamed aside, replacement
-    // never landed — exactly the window upsert's bak-first protocol leaves
-    val bucket = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("doc_prefix=")).head
-    assert(bucket.renameTo(new java.io.File(dir, s".bak-${bucket.getName}")))
-    val ex = intercept[IllegalStateException] { store.count(spark) }
-    assert(ex.getMessage.contains("interrupted"),
-      s"a missing bucket must fail loudly, not read short: $ex")
-    // ANY mutation's recovery pass restores the bucket first
-    store.upsert(spark, chunks(("d3_c0", "d3", "c", 0)))
-    assert(store.count(spark) == 3)
-    assert(store.distinctDocumentIds(spark).collect().map(_.getString(0)).toSet ==
-      Set("d1", "d2", "d3"))
-  }
-
   test("upsert is idempotent under replay (task-retry safety)") {
-    val store = new ChunkStore(tmpDir("store"))
+    val store = freshStore("store")
     val batch = chunks(("d1_c0", "d1", "a", 0), ("d2_c0", "d2", "b", 0))
     store.upsert(spark, batch)
     val first = store.read(spark).orderBy("chunkId").collect().toSeq
@@ -82,112 +74,131 @@ class ChunkStoreSpec extends SparkSpec {
   }
 
   test("delete of unknown document is a no-op returning 0") {
-    val store = new ChunkStore(tmpDir("store"))
+    val store = freshStore("store")
     store.upsert(spark, chunks(("d1_c0", "d1", "a", 0)))
     assert(store.deleteByDocumentIds(spark, Seq("nope")) == 0)
     assert(store.count(spark) == 1)
   }
 
   test("migrate parquet -> json preserves rows incl. crossRefs list (K5)") {
-    val src = new ChunkStore(tmpDir("src"))
-    val dst = new ChunkStore(tmpDir("dst"), format = "json")
-    src.upsert(spark, chunks(("d1_c0", "d1", "a", 0), ("d2_c0", "d2", "b", 0)))
-    val n = ChunkStore.migrate(spark, src, dst)
-    assert(n == 2)
-    val back = dst.read(spark)
+    val root = tmpDir("mig")
+    chunks(("d1_c0", "d1", "a", 0), ("d2_c0", "d2", "b", 0)).write.parquet(s"$root/in")
+    // parquet dir -> json dir -> the store: each step moves every row
+    assert(Ops.migrate(spark, s"$root/in", "parquet", s"$root/json", "json") == 2)
+    assert(Ops.migrate(spark, s"$root/json", "json", s"$root/store", "snapshot") == 2)
+    val back = new SnapshotChunkStore(s"$root/store").read(spark)
     assert(back.count() == 2)
     assert(back.select("crossRefs").head().getSeq[String](0) == Seq("r1"))
+    // and out again: the export is the store's rows, in the stored schema
+    assert(Ops.migrate(spark, s"$root/store", "snapshot", s"$root/out", "parquet") == 2)
+    def cols(schema: org.apache.spark.sql.types.StructType) =
+      schema.map(f => f.name -> f.dataType.simpleString)
+    assert(cols(spark.read.parquet(s"$root/out").schema) == cols(SnapshotChunkStore.storedSchema))
+    assert(contents(spark.read.parquet(s"$root/out")) == Map("d1_c0" -> "a", "d2_c0" -> "b"))
   }
 
   test("json store tolerates corrupt lines (S4 PERMISSIVE)") {
-    val dir = tmpDir("jsonstore")
-    val store = new ChunkStore(dir, format = "json")
-    store.upsert(spark, chunks(("d1_c0", "d1", "a", 0)))
-    // inject garbage into the bucket file
-    val bucket = new java.io.File(dir).listFiles().find(_.getName.startsWith("doc_prefix=")).get
-    val part = bucket.listFiles().find(_.getName.endsWith(".json")).get
+    val root = tmpDir("jsonstore")
+    chunks(("d1_c0", "d1", "a", 0)).coalesce(1).write.json(s"$root/json")
+    // inject garbage into the JSON-lines part file
+    val dir = new java.io.File(s"$root/json")
+    val part = dir.listFiles().find(_.getName.endsWith(".json")).get
     val out = new java.io.FileWriter(part, true)
     out.write("\n{not valid json!!\n"); out.close()
     // drop Hadoop's local checksum sidecar so the tampered file is readable
-    bucket.listFiles().filter(_.getName.endsWith(".crc")).foreach(_.delete())
-    assert(store.read(spark).count() == 1)
+    dir.listFiles().filter(_.getName.endsWith(".crc")).foreach(_.delete())
+    assert(Ops.migrate(spark, s"$root/json", "json", s"$root/store", "snapshot") == 1)
+    assert(new SnapshotChunkStore(s"$root/store").count(spark) == 1)
   }
 
-  test("one file per bucket holds across repeated upsert cycles (no compaction needed)") {
-    val store = new ChunkStore(tmpDir("store_files"), prefixLen = 1)
-    // three separate upsert cycles over the same documents: each touched
-    // bucket is rewritten whole as a single sorted file every time, so the
-    // store never fragments and never needs a compaction pass
-    (0 until 3).foreach { cycle =>
-      store.upsert(spark, chunks(
-        (1 to 12).map(i => (s"c$i-$cycle", s"doc$i", s"text $i cycle $cycle", cycle)): _*))
-    }
-    val buckets = store.read(spark)
-      .select(substring(sha2(col("documentId"), 256), 1, 1)).distinct().count()
-    assert(store.dataFileCount(spark) == buckets,
-      "exactly one data file per occupied bucket after three upsert cycles")
-    assert(store.count(spark) == 36)
+  test("migrate imports a doc_prefix-bucketed parquet dir; the bucket column drops") {
+    val root = tmpDir("bucketed")
+    // the layout of a store bucketed by the first hex char of sha2(documentId)
+    chunks((1 to 12).map(i => (s"c$i", s"doc$i", s"text $i", 0)): _*)
+      .withColumn("doc_prefix", substring(sha2(col("documentId"), 256), 1, 1))
+      .write.partitionBy("doc_prefix").parquet(s"$root/in")
+    assert(Ops.migrate(spark, s"$root/in", "parquet", s"$root/store", "snapshot") == 12)
+    val store = new SnapshotChunkStore(s"$root/store")
+    assert(store.read(spark).columns.toSeq == SnapshotChunkStore.chunkCols)
+    assert(contents(store.read(spark)) == (1 to 12).map(i => s"c$i" -> s"text $i").toMap)
+  }
+
+  test("migrate rejects an unknown format and an existing export dir") {
+    val root = tmpDir("migbad")
+    val store = new SnapshotChunkStore(s"$root/store")
+    store.upsert(spark, chunks(("d1_c0", "d1", "a", 0)))
+    intercept[IllegalArgumentException](
+      Ops.migrate(spark, s"$root/store", "snapshot", s"$root/x", "chroma"))
+    Ops.migrate(spark, s"$root/store", "snapshot", s"$root/out", "json")
+    // an export never overwrites: a second one into the same dir fails
+    intercept[org.apache.spark.sql.AnalysisException](
+      Ops.migrate(spark, s"$root/store", "snapshot", s"$root/out", "json"))
+    assert(spark.read.json(s"$root/out").count() == 1)
   }
 
   test("read of a missing store is empty, not an error") {
-    val store = new ChunkStore(tmpDir("gone") + "/nothing")
+    val store = new SnapshotChunkStore(tmpDir("gone") + "/nothing")
     assert(store.count(spark) == 0)
   }
 
-  test("a mutation fails clean while another writer holds the lock") {
-    val dir = tmpDir("locked")
-    val store = new ChunkStore(dir)
-    store.upsert(spark, chunks(("c0", "d1", "v1", 0)))
-    // simulate a live competing writer: fresh foreign-owned lock file
-    val lock = new java.io.File(dir, "_lock")
-    val w = new java.io.FileWriter(lock); w.write("someone-else"); w.close()
-    intercept[ChunkStore.ConcurrentWriteException] {
-      store.upsert(spark, chunks(("c1", "d1", "v2", 1)))
-    }
-    intercept[ChunkStore.ConcurrentWriteException] {
-      store.deleteByDocumentIds(spark, Seq("d1"))
-    }
-    // failed clean: store unchanged, foreign lock untouched
-    assert(store.count(spark) == 1)
-    assert(lock.exists())
-    assert(scala.io.Source.fromFile(lock).mkString == "someone-else")
+  // --- concurrent writers ---------------------------------------------------
+
+  /** Runs `a` and `b` on two threads whose commits both plan against the
+    * same table version: each waits in the pre-commit seam until the other
+    * has planned too, then both race for the commit lock.
+    */
+  private def race(a: => Unit, b: => Unit): Seq[Try[Unit]] = {
+    val planned = new java.util.concurrent.CyclicBarrier(2)
+    Snapshots.preCommitHook = () => planned.await(120, java.util.concurrent.TimeUnit.SECONDS): Unit
+    try Seq(Future(Try(a)), Future(Try(b))).map(Await.result(_, 5.minutes))
+    finally Snapshots.preCommitHook = () => ()
   }
 
-  test("an abandoned (stale) lock is broken and the mutation proceeds") {
-    val dir = tmpDir("stale")
-    val store = new ChunkStore(dir, staleLockMs = 50L)
-    store.upsert(spark, chunks(("c0", "d1", "v1", 0)))
-    val lock = new java.io.File(dir, "_lock")
-    val w = new java.io.FileWriter(lock); w.write("crashed-writer"); w.close()
-    Thread.sleep(120) // let the lock age past staleLockMs
-    store.upsert(spark, chunks(("c1", "d2", "v2", 0)))
-    assert(store.count(spark) == 2)
-    assert(!lock.exists(), "the new writer must release its own lock")
-  }
+  private def mergeCommits(store: SnapshotChunkStore): Seq[Long] =
+    Snapshots.history(spark, store.path).filter(col("op") === "merge")
+      .select("version").collect().map(_.getLong(0)).toSeq.sorted
 
-  test("concurrent upserts serialize under lockWaitMs and lose no rows") {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val dir = tmpDir("concurrent")
-    val store = new ChunkStore(dir, prefixLen = 1, lockWaitMs = 60000L)
+  test("two writers of disjoint documents both land as merge commits and lose no rows") {
+    val store = freshStore("concurrent")
     store.upsert(spark, chunks(("seed", "d0", "base", 0)))
-    // two writers race over disjoint chunk ids; the lock serializes the
-    // read-overlay-overwrite cycles, so the final store holds both batches
-    val a = Future(store.upsert(spark, chunks(
-      (1 to 8).map(i => (s"a$i", s"docA$i", s"textA$i", 0)): _*)))
-    val b = Future(store.upsert(spark, chunks(
-      (1 to 8).map(i => (s"b$i", s"docB$i", s"textB$i", 0)): _*)))
-    Await.result(a, 120.seconds)
-    Await.result(b, 120.seconds)
+    val seeded = Snapshots.currentVersion(store.path).get
+    // disjoint documents AND disjoint chunkId ranges: neither writer's new
+    // file can hold a key the other one replaces, so the later commit
+    // rebases over the earlier one instead of failing
+    val outcomes = race(
+      store.upsert(spark, chunks((1 to 8).map(i => (s"a$i", s"docA$i", s"textA$i", 0)): _*)),
+      store.upsert(spark, chunks((1 to 8).map(i => (s"b$i", s"docB$i", s"textB$i", 0)): _*)))
+    assert(outcomes.forall(_.isSuccess), s"both writers must commit: $outcomes")
+    assert(Snapshots.currentVersion(store.path).contains(seeded + 2))
+    assert(mergeCommits(store).takeRight(2) == Seq(seeded + 1, seeded + 2))
     assert(store.count(spark) == 17, "both writers' rows must survive")
-    assert(!new java.io.File(dir, "_lock").exists())
+    assert(contents(store.read(spark)) ==
+      ((1 to 8).flatMap(i => Seq(s"a$i" -> s"textA$i", s"b$i" -> s"textB$i")) :+ ("seed" -> "base")).toMap)
+    Seq("_lock", "_commit_lock").foreach(l =>
+      assert(!new java.io.File(store.path, l).exists(), s"$l left behind"))
   }
 
-  // --- the shared protocol, parameterized over BOTH backends -------------
+  test("two writers of overlapping chunkIds: the loser conflicts, the table is the winner's") {
+    val store = freshStore("conflict")
+    store.upsert(spark, chunks(("seed", "d0", "base", 0)))
+    val seeded = Snapshots.currentVersion(store.path).get
+    def batch(tag: String) = chunks((1 to 8).map(i => (s"c$i", s"doc$i", s"$tag$i", 0)): _*)
+    val outcomes = race(store.upsert(spark, batch("A")), store.upsert(spark, batch("B")))
+    val (won, lost) = outcomes.zip(Seq("A", "B")).partition(_._1.isSuccess)
+    assert(won.size == 1 && lost.size == 1, s"exactly one writer must win: $outcomes")
+    assert(lost.head._1.failed.get.isInstanceOf[java.util.ConcurrentModificationException],
+      s"the loser must fail with a conflict: ${lost.head._1}")
+    val winner = won.head._2
+    assert(Snapshots.currentVersion(store.path).contains(seeded + 1), "the loser must not commit")
+    assert(contents(store.read(spark)) ==
+      ((1 to 8).map(i => s"c$i" -> s"$winner$i") :+ ("seed" -> "base")).toMap)
+    assert(!new java.io.File(store.path, "_commit_lock").exists())
+  }
 
-  private def protocolLaws(mk: String => KeyedChunkStore, label: String): Unit = {
-    val store = mk(tmpDir(s"kstore-$label"))
+  // --- the protocol ----------------------------------------------------------
+
+  test("the keyed-store protocol holds over the snapshot-table backend") {
+    val store = freshStore("kstore-snapshot")
     assert(store.count(spark) == 0, "a missing store reads empty")
     store.upsert(spark, chunks(("d1_c0", "d1", "v1", 0), ("d1_c1", "d1", "v1b", 1),
       ("d2_c0", "d2", "x", 0)))
@@ -195,10 +206,9 @@ class ChunkStoreSpec extends SparkSpec {
     // overlay by chunkId, including a within-batch duplicate (chunkIndex
     // tie-break keeps the later row — the Overlay discipline)
     store.upsert(spark, chunks(("d1_c0", "d1", "stale", 0), ("d1_c0", "d1", "v2", 1)))
-    val rows = store.read(spark).select("chunkId", "content").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val rows = contents(store.read(spark))
     assert(rows == Map("d1_c0" -> "v2", "d1_c1" -> "v1b", "d2_c0" -> "x"),
-      s"[$label] overlay semantics must match: $rows")
+      s"overlay semantics must hold: $rows")
     // idempotent replay
     store.upsert(spark, chunks(("d1_c0", "d1", "v2", 1)))
     assert(store.count(spark) == 3)
@@ -209,16 +219,8 @@ class ChunkStoreSpec extends SparkSpec {
     assert(store.count(spark) == 0)
   }
 
-  test("the keyed-store protocol holds over the bucket-swap backend") {
-    protocolLaws(p => new ChunkStore(p), "bucket")
-  }
-
-  test("the keyed-store protocol holds over the snapshot-table backend") {
-    protocolLaws(p => new SnapshotChunkStore(p + "/t"), "snapshot")
-  }
-
   test("snapshot-backed store adds time travel and zero-rewrite deletes") {
-    val store = new SnapshotChunkStore(tmpDir("kstore-tt") + "/t")
+    val store = freshStore("kstore-tt")
     // data files outside deletion-vector datasets
     def nonDv(): Set[String] = {
       import scala.jdk.CollectionConverters._
@@ -240,12 +242,10 @@ class ChunkStoreSpec extends SparkSpec {
     // MOR delete: the .dv dataset is new, but no DATA file rewrote
     assert(nonDv() == dataFilesBefore, "delete-by-document must rewrite zero data files")
     // time travel: v1 still shows the pre-overlay content and both docs
-    val v1 = store.readAt(spark, 1L).select("chunkId", "content").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(v1 == Map("d1_c0" -> "v1", "d2_c0" -> "y"))
-    // migration between backends rides the shared trait
-    val bucket = new ChunkStore(tmpDir("kstore-mig"))
-    assert(ChunkStore.migrate(spark, store, bucket) == 1L)
-    assert(bucket.read(spark).select("content").head().getString(0) == "v2")
+    assert(contents(store.readAt(spark, 1L)) == Map("d1_c0" -> "v1", "d2_c0" -> "y"))
+    // export reads the current version
+    val out = tmpDir("kstore-mig") + "/out"
+    assert(Ops.migrate(spark, store.path, "snapshot", out, "parquet") == 1L)
+    assert(spark.read.parquet(out).select("content").head().getString(0) == "v2")
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.chunker.LovdataChunker
 import graft.embed.DeterministicProvider
-import graft.sources.ChunkStore
+import graft.sources.SnapshotChunkStore
 
 /** Streaming behavior: file-arrival source drives the same idempotent
   * upsert path as the batch pipeline; watermarked windows aggregate.
@@ -27,7 +27,7 @@ class StreamingSpec extends SparkSpec {
     val inDir = tmpDir("stream_in")
     val storeDir = tmpDir("stream_store")
     val ckpt = tmpDir("stream_ckpt")
-    val store = new ChunkStore(storeDir)
+    val store = new SnapshotChunkStore(storeDir)
     writeDropFile(inDir, "drop1.json", ("d1", "Alpha beta gamma."), ("d2", "Delta epsilon."))
 
     def runOnce(): Unit = {
@@ -172,7 +172,7 @@ class StreamingSpec extends SparkSpec {
     val inDir = tmpDir("streamf_in")
     val storeDir = tmpDir("streamf_store")
     val ckpt = tmpDir("streamf_ckpt")
-    val store = new ChunkStore(storeDir, prefixLen = 1)
+    val store = new SnapshotChunkStore(storeDir)
     Files.write(Paths.get(inDir, "drop.json"),
       (Seq(
         s"""{"docId":"ok1","dataset":"ds","hash":"h1","xml":"<html><body><main class=\\"documentBody\\"><article class=\\"legalP\\" id=\\"x\\">Fine text.</article></main></body></html>"}""",

@@ -5,7 +5,7 @@
 # maintain -> SQL over the planner-integrated view (and a
 # -D conf override reaching the CLI session) ->
 # WARC ingest (externally-written gzip WARC) -> prepare over the ingested
-# crawl. Exercises the command paths
+# crawl -> chunk import/export through migrate. Exercises the command paths
 # the ScalaTest specs reach only as library calls.
 #
 # Usage: bash tools/cli_smoke.sh   (after `sbt compile`; ~4 min on 4 cores)
@@ -97,4 +97,44 @@ kept = duckdb.sql("SELECT count(*) FROM '/root/testdata/sf0.001/documents.parque
 # feed = initial snapshot (kept rows, clustered replace emits nothing) + second append as changelog
 assert n == kept + t, f"feed rows {n} != {kept}+{t}"
 PY
+# chunk import/export: a DuckDB-written chunk-shaped parquet dir goes
+# parquet -> store -> json -> store, each step moving every row, and the
+# final store holds exactly the input's chunkIds
+python3 - << 'PY'
+import duckdb, os
+os.makedirs('/tmp/graft/cli_smoke/chunks_in')
+duckdb.sql("""COPY (SELECT 'doc' || doc_id || '_chunk_0' AS chunkId, 'doc' || doc_id AS documentId,
+                           source AS datasetName, text AS content, CAST(n_chars AS INTEGER) AS tokenCount,
+                           lang AS sectionHeading, '' AS absoluteAddress, 'none' AS splitReason,
+                           CAST(NULL AS VARCHAR) AS parentChunkId, md5(text) AS sourceHash,
+                           ['r' || (doc_id % 3)] AS crossRefs, CAST(0 AS INTEGER) AS chunkIndex,
+                           [CAST(doc_id AS FLOAT), 0.5::FLOAT] AS embedding, 'm' AS embeddingModel,
+                           '2024-01-01' AS embeddedAt
+                    FROM '/tmp/graft/cli_smoke/docs.parquet' WHERE doc_id % 7 = 0)
+              TO '/tmp/graft/cli_smoke/chunks_in/part-0.parquet'""")
+PY
+MI=$(G migrate "$W/chunks_in" parquet "$W/chunk_store" snapshot | grep '^migrated=')
+MO=$(G migrate "$W/chunk_store" snapshot "$W/chunks_json" json | grep '^migrated=')
+MB=$(G migrate "$W/chunks_json" json "$W/chunk_store2" snapshot | grep '^migrated=')
+[[ "$MI" =~ ^migrated=[1-9][0-9]*$ && "$MO" == "$MI" && "$MB" == "$MI" ]] \
+  || { echo "migrate parquet -> snapshot -> json -> snapshot moved different counts: $MI / $MO / $MB"; exit 1; }
+python3 - << 'PY'
+import duckdb, glob, json
+W = '/tmp/graft/cli_smoke'
+cur = int(open(f'{W}/chunk_store2/_current').read().strip())
+rows = [json.loads(l) for f in glob.glob(f'{W}/chunk_store2/_log/v{cur:08d}/*.json') for l in open(f)]
+files = [r for r in rows if r.get('kind') == 'file']
+assert files and not any(r.get('dv_path') for r in files), f"an import into a new store deletes nothing: {files}"
+got = {r[0] for r in duckdb.sql("SELECT chunkId FROM read_parquet([" +
+       ", ".join(f"'{W}/chunk_store2/{r['path']}'" for r in files) + "])").fetchall()}
+want = {r[0] for r in duckdb.sql(f"SELECT chunkId FROM '{W}/chunks_in/*.parquet'").fetchall()}
+assert got == want, f"store chunkIds differ from the input: {len(got ^ want)} differ"
+PY
+# the retired parquet/json store formats fail at config load, naming migrate
+if ST=$(java -cp "$CP" -Xmx4g graft.cli.GraftCli status "$W/ledger" "$W/chunk_store2" \
+    --storage-type=parquet 2>&1); then
+  echo "status --storage-type=parquet must fail"; exit 1
+fi
+[[ "$ST" == *"storageType 'parquet'"*migrate* ]] \
+  || { echo "status --storage-type=parquet failed without naming migrate: ${ST: -400}"; exit 1; }
 echo "cli_smoke: OK"
