@@ -117,6 +117,36 @@ object ExplainAudit {
         p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct")
     }
 
+    // IVF and BM25 searches plan their scans in the driver: each scan's file
+    // index is rooted at the probed `cid=` / `bucket=` directories only
+    // (root paths <= probes), never at the index root, whose listing is a
+    // job over every partition
+    val searchScansListProbes = {
+      import spark.implicits._
+      def roots(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+        df.queryExecution.sparkPlan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+            s.relation.location.rootPaths.map(_.getName)
+        }
+      def probedOnly(rs: Seq[Seq[String]], part: String, probes: Int): Boolean =
+        rs.nonEmpty && rs.forall(r => r.nonEmpty && r.size <= probes && r.forall(_.startsWith(part)))
+      val tmp = java.nio.file.Files.createTempDirectory("audit-probes").toString
+      val vecs = (0 until 60).map { i =>
+        val a = i / 60.0 * 2 * math.Pi
+        (i.toLong, Array(math.cos(a).toFloat, math.sin(a).toFloat))
+      }.toDF("vec_id", "embedding")
+      graft.operators.Similarity.writeIvf(spark,
+        graft.operators.Similarity.buildIvf(vecs, "embedding", "vec_id", 6), s"$tmp/ivf")
+      val ivf = graft.operators.Similarity.topKIvf(
+        graft.operators.Similarity.readIvf(spark, s"$tmp/ivf"), "embedding", "vec_id",
+        Array(1f, 0f), 3, 2)
+      val docs = (0 until 40).map(i => (i.toLong, s"w${i % 13} w${i % 7} w${i % 5}"))
+        .toDF("doc_id", "text")
+      graft.operators.TextSearch.writeIndex(spark, docs, "text", "doc_id", s"$tmp/bm25", nBuckets = 8)
+      val bm25 = graft.operators.TextSearch.searchIndex(spark, s"$tmp/bm25", Seq("w1", "w2"), 5)
+      probedOnly(roots(ivf), "cid=", 2) && probedOnly(roots(bm25), "bucket=", 2)
+    }
+
     // K3 delete-by-document mirrors J1: the chunk store's retire join (the
     // semi-join mergeMor finds the retired documents' rows with) broadcasts
     // small tombstone sets and shuffles when broadcast is unavailable —
@@ -292,6 +322,8 @@ object ExplainAudit {
       ("ivf probe prunes cid partitions on a persisted index (incl. after append)", ivfPrunes),
       ("bm25 appended-index search prunes term buckets and broadcasts merge-on-read df",
         bm25AppendPrunes),
+      ("ivf and bm25 search scans list only the probed partition directories (root paths <= probes)",
+        searchScansListProbes),
       ("star join uses broadcast joins only",
         !plan("q_star_join").contains("SortMergeJoin")),
       ("f6 filter is pushed to the parquet scan",

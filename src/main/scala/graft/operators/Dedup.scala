@@ -1252,11 +1252,12 @@ object Dedup {
     * and cosine pairs form only within cells and only INVOLVING the batch:
     * exactly the pairs a from-scratch within-cell sweep over (corpus ∪
     * batch) under the same centroid table would emit, minus corpus-internal
-    * ones. The stored side is a cid-partitioned parquet scan of vectors
-    * already assigned — no distance to any centroid is recomputed for the
-    * corpus. The skew cap applies over the combined (stored ∪ fresh) cell
-    * population, and a replayed batch (at-least-once ingest) is anti-joined
-    * out of the stored scan so its rows never double-count toward the cap.
+    * ones. The stored side is a parquet scan of only the cells the batch
+    * landed in (their `cid=<c>` directories) — no distance to any centroid
+    * is recomputed for the corpus. The skew cap applies over the combined
+    * (stored ∪ fresh) cell population, and a replayed batch (at-least-once
+    * ingest) is anti-joined out of the stored scan so its rows never
+    * double-count toward the cap.
     */
   def incrementalSemanticCandidates(
       spark: org.apache.spark.sql.SparkSession,
@@ -1274,7 +1275,9 @@ object Dedup {
         stored.centroids)
       .withColumn("_new", lit(true))
       .localCheckpoint(false) // feeds both the union and the replay anti-join
-    val storedRows = stored.assigned
+    // pairs need a batch row, so only the cells the batch landed in are read
+    val batchCells = fresh.select(col("cid")).distinct().collect().map(_.getInt(0)).toSeq
+    val storedRows = stored.cells(batchCells)
       .select(col(idCol).as("id"), col(vecCol).as("vec"), col("cid"))
       .join(fresh.select(col("id")).distinct(), Seq("id"), "left_anti")
       .withColumn("_new", lit(false))

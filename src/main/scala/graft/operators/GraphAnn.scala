@@ -652,12 +652,17 @@ object GraphAnn {
     }
   }
 
+  /** Read back a [[writeGraph]] index: `vectors`, `edges` and, when the
+    * index has one, the frozen `hubs` set. Each table's schema comes from
+    * one footer read in the driver, so reading the index runs no job; the
+    * search's jobs are its own hops.
+    */
   def readGraph(spark: SparkSession, path: String, idCol: String, vecCol: String): AnnGraph = {
     val hp = new org.apache.hadoop.fs.Path(s"$path/hubs")
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    AnnGraph(spark.read.parquet(s"$path/vectors"), idCol, vecCol,
-      spark.read.parquet(s"$path/edges"),
-      if (fs.exists(hp)) Some(spark.read.parquet(s"$path/hubs")) else None)
+    AnnGraph(ParquetDirs.read(spark, s"$path/vectors"), idCol, vecCol,
+      ParquetDirs.read(spark, s"$path/edges"),
+      if (fs.exists(hp)) Some(ParquetDirs.read(spark, s"$path/hubs")) else None)
   }
 
   /** Incremental index maintenance — the IVF/BM25/MinHash/PQ append

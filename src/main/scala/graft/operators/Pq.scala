@@ -219,7 +219,7 @@ object Pq {
     */
   def encodeIvf(
       index: Similarity.IvfIndex, vecCol: String, model: PqModel): Similarity.IvfIndex =
-    index.copy(assigned = encode(index.assigned, vecCol, model))
+    index.mapRows(encode(_, vecCol, model))
 
   /** IVF-PQ search: probe the best `nProbes` cells (the [[Similarity.topKIvf]]
     * centroid ranking — identical probe-cell selection, so the candidate
@@ -231,21 +231,9 @@ object Pq {
     */
   def topKIvfPq(
       index: Similarity.IvfIndex, idCol: String,
-      query: Array[Float], n: Int, nProbes: Int, model: PqModel): DataFrame = {
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) {
-        d += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
-        i += 1
-      }
-      if (na > 0 && nb > 0) d / math.sqrt(na * nb) else 0.0
-    }
-    val probeCids = index.centroids.sortBy { case (_, c) => -cos(query, c) }
-      .take(nProbes).map(_._1)
-    topKAdc(index.assigned.filter(col("cid").isin(probeCids: _*)),
+      query: Array[Float], n: Int, nProbes: Int, model: PqModel): DataFrame =
+    topKAdc(index.cells(Similarity.probeCells(index, query, nProbes)),
       "pq_code", idCol, query, n, model)
-  }
 
   /** Two-sided (query-set) ADC search — the relational form of the
     * per-query table loop: each query's (m × k) weight table materializes

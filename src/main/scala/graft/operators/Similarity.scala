@@ -82,8 +82,34 @@ object Similarity {
     * assigned vectors) — no RNG, rebuild-stable. Assignment is a codegen'd
     * argmax over per-centroid cosine columns (fine for k ≲ 64 centroids; a
     * mapPartitions assigner takes over beyond that).
+    *
+    * `cells(cids)` is the rows of those cells only: a `cid` filter over an
+    * in-memory assignment, and for an index [[readIvf]] read back, a read
+    * of only those cells' `cid=<c>` directories, planned in the driver.
     */
-  final case class IvfIndex(centroids: Seq[(Int, Array[Float])], assigned: DataFrame)
+  final class IvfIndex private (
+      val centroids: Seq[(Int, Array[Float])],
+      rows: () => DataFrame,
+      cellRows: Seq[Int] => DataFrame) {
+
+    /** Every assigned row (for a persisted index, a scan of every cell). */
+    lazy val assigned: DataFrame = rows()
+
+    def cells(cids: Seq[Int]): DataFrame = cellRows(cids).filter(col("cid").isin(cids: _*))
+
+    /** This index with `f` applied to its rows (PQ codes, a metadata filter). */
+    def mapRows(f: DataFrame => DataFrame): IvfIndex =
+      new IvfIndex(centroids, () => f(assigned), c => f(cellRows(c)))
+  }
+
+  object IvfIndex {
+    def apply(centroids: Seq[(Int, Array[Float])], assigned: DataFrame): IvfIndex =
+      new IvfIndex(centroids, () => assigned, _ => assigned)
+
+    private[operators] def persisted(
+        centroids: Seq[(Int, Array[Float])], cellRows: Seq[Int] => DataFrame): IvfIndex =
+      new IvfIndex(centroids, () => cellRows(centroids.map(_._1)), cellRows)
+  }
 
   /** Assign every row to its max-cosine centroid cell. Two equivalent paths:
     *
@@ -219,11 +245,11 @@ object Similarity {
   }
 
   /** Persist an IVF index with `cid` as a partition column — the 100 TB
-    * layout the design comment on [[buildIvf]] promises: a probe of
-    * `nProbes` cells becomes partition pruning on the scan, so a search
-    * reads `nProbes/k` of the corpus from disk instead of filtering it.
-    * Centroids (k rows) live under `_centroids`, which partition discovery
-    * ignores.
+    * layout the design comment on [[buildIvf]] promises: a cell is the
+    * directory `cid=<c>`, so a probe of `nProbes` cells lists and reads
+    * only those directories ([[readIvf]]) and a search reads `nProbes/k` of
+    * the corpus from disk. Centroids (k rows) live under `_centroids`,
+    * which partition discovery ignores.
     */
   def writeIvf(spark: SparkSession, index: IvfIndex, path: String): Unit = {
     import spark.implicits._
@@ -235,12 +261,19 @@ object Similarity {
       .write.mode(SaveMode.Overwrite).parquet(path + "/_centroids")
   }
 
-  /** Load a persisted IVF index; only the k centroid rows reach the driver. */
-  def readIvf(spark: SparkSession, path: String): IvfIndex = {
-    val cents = spark.read.parquet(path + "/_centroids")
+  /** Load a persisted IVF index: one job collects the k centroid rows, and
+    * nothing else is read until a search names its cells — `cells` then
+    * lists only the probed `cid=<c>` directories (a cell no vector landed
+    * in has none and is skipped) and takes their schema from one footer,
+    * so planning a probe runs no job.
+    */
+  def readIvf(spark: SparkSession, path: String): IvfIndex =
+    IvfIndex.persisted(readCentroids(spark, path),
+      cids => ParquetDirs.readPartitions(spark, path, "cid", cids))
+
+  private def readCentroids(spark: SparkSession, path: String): Seq[(Int, Array[Float])] =
+    ParquetDirs.read(spark, path + "/_centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
-    IvfIndex(cents, spark.read.parquet(path))
-  }
 
   /** Register NEW vectors in a persisted IVF index without touching the
     * stored corpus: assignment runs against the FROZEN stored centroids —
@@ -268,9 +301,7 @@ object Similarity {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (marker.exists(fs.exists)) return
-    val cents = spark.read.parquet(path + "/_centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
-    assignCells(df, vecCol, cents)
+    assignCells(df, vecCol, readCentroids(spark, path))
       .repartition(col("cid"))
       .write.partitionBy("cid").mode(SaveMode.Append).parquet(path)
     marker.foreach { m => // marker LAST: the segment counts fully or not at all
@@ -374,21 +405,26 @@ object Similarity {
     }.foldLeft(-1L)(math.max)
   }
 
-  /** Search an IVF index: score the query against the (driver-side, tiny)
-    * centroid table, keep the `nProbes` best cells, brute-force only those.
+  /** The `nProbes` cells whose centroids are nearest `query` by cosine,
+    * ranked in the driver over the k-row centroid table (ties keep the
+    * table's order) — the probe set of every single-query IVF search.
     */
-  def topKIvf(index: IvfIndex, vecCol: String, idCol: String,
-              query: Array[Float], k: Int, nProbes: Int): DataFrame = {
+  def probeCells(index: IvfIndex, query: Array[Float], nProbes: Int): Seq[Int] = {
     def cos(a: Array[Float], b: Array[Float]): Double = {
       var d = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
       while (i < a.length) { d += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i); i += 1 }
       if (na > 0 && nb > 0) d / math.sqrt(na * nb) else 0.0
     }
-    val probeCids = index.centroids.sortBy { case (_, c) => -cos(query, c) }
-      .take(nProbes).map(_._1)
-    topK(index.assigned.filter(col("cid").isin(probeCids: _*)), vecCol, idCol, query, k)
+    index.centroids.sortBy { case (_, c) => -cos(query, c) }.take(nProbes).map(_._1)
   }
+
+  /** Search an IVF index: score the query against the (driver-side, tiny)
+    * centroid table, keep the `nProbes` best cells, brute-force only those.
+    */
+  def topKIvf(index: IvfIndex, vecCol: String, idCol: String,
+              query: Array[Float], k: Int, nProbes: Int): DataFrame =
+    topK(index.cells(probeCells(index, query, nProbes)), vecCol, idCol, query, k)
 
   /** IVF-SQ8: probe the index like [[topKIvf]] but score int8 codes — the
     * composed 100 TB search path: `cid` partition pruning limits WHICH rows
@@ -399,18 +435,8 @@ object Similarity {
     * variant exactly; only within-cell scoring is quantized.
     */
   def topKIvfSq8(index: IvfIndex, vecCol: String, idCol: String,
-                 query: Array[Float], k: Int, nProbes: Int): DataFrame = {
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) { d += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i); i += 1 }
-      if (na > 0 && nb > 0) d / math.sqrt(na * nb) else 0.0
-    }
-    val probeCids = index.centroids.sortBy { case (_, c) => -cos(query, c) }
-      .take(nProbes).map(_._1)
-    topKQuantized(
-      index.assigned.filter(col("cid").isin(probeCids: _*)), vecCol, idCol, query, k)
-  }
+                 query: Array[Float], k: Int, nProbes: Int): DataFrame =
+    topKQuantized(index.cells(probeCells(index, query, nProbes)), vecCol, idCol, query, k)
 
   /** LSH-bucketed approximate top-k: only rows whose hyperplane bucket is
     * within Hamming distance `probes` of the query bucket are scored (multi-

@@ -707,8 +707,8 @@ object Snapshots {
     */
   private val MaxLocalManifestBytes: Long = 64L * 1024 * 1024
 
-  /** A version's manifest FILE rows as raw driver-side lines, paired with
-    * each row's `path`: `Some` only when the manifest is the canonical
+  /** A version's manifest FILE rows as raw driver-side lines, each with
+    * the row's `path` and `dv_path` (null when it has none): `Some` only when the manifest is the canonical
     * single-part shape at most [[MaxLocalManifestBytes]] with a parseable
     * commit row — the shape [[writeManifest]]/[[writeManifestLinesLocal]]
     * produce. The raw lines carry forward VERBATIM into a child manifest
@@ -717,7 +717,7 @@ object Snapshots {
     * caller takes the distributed path.
     */
   private def manifestFileLinesLocal(
-      spark: SparkSession, table: String, v: Long): Option[IndexedSeq[(String, String)]] =
+      spark: SparkSession, table: String, v: Long): Option[IndexedSeq[(String, String, String)]] =
     try {
       val dir = new Path(vdir(table, v))
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -729,13 +729,16 @@ object Snapshots {
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(
         fs.open(parts.head.getPath), StandardCharsets.UTF_8))
       try {
-        val out = IndexedSeq.newBuilder[(String, String)]
+        val out = IndexedSeq.newBuilder[(String, String, String)]
         var sawCommit = false
         var line = in.readLine()
         while (line != null) {
           val n = jsonMapper.readTree(line)
           n.path("kind").asText() match {
-            case "file" => out += ((line, n.path("path").asText()))
+            case "file" =>
+              val dv = n.path("dv_path")
+              out += ((line, n.path("path").asText(),
+                if (dv.isMissingNode || dv.isNull) null else dv.asText()))
             case "commit" => sawCommit = true
             case _ => return None // unknown row kind: fall back
           }
@@ -1279,29 +1282,48 @@ object Snapshots {
       else {
         // DV side ∝ deleted rows of the files scanned — broadcast-small
         // for point deletes, hash-join at worst; never a data rewrite
-        val dv = spark.read.parquet(dvPaths.toIndexedSeq: _*)
+        val dv = readDvs(spark, dvPaths)
           .select(col("file").as("__file"), col("pos").as("__pos"))
         base.join(dv, Seq("__file", "__pos"), "left_anti")
       }
     }
   }
 
+  /** A deletion-vector dataset's fixed shape: the data file's base name
+    * and a deleted row's position in it.
+    */
+  private val dvSchema = StructType(Seq(
+    StructField("file", StringType), StructField("pos", LongType)))
+
+  /** Deletion-vector datasets, read with [[dvSchema]] (no inference job). */
+  private def readDvs(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(dvSchema).parquet(paths: _*)
+
+  private def dropMeta(m: DataFrame): DataFrame =
+    if (m.columns.contains("__file")) m.drop("__file", "__pos") else m
+
   private def readFiles(
       spark: SparkSession, table: String, files: DataFrame,
-      schema: Option[StructType] = None): DataFrame = {
-    val m = readFilesMeta(spark, table, files, schema)
-    if (m.columns.contains("__file")) m.drop("__file", "__pos") else m
-  }
+      schema: Option[StructType] = None): DataFrame =
+    dropMeta(readFilesMeta(spark, table, files, schema))
 
   /** Read the table at `version` (default: current). Snapshot-isolated: the
     * returned frame lists its exact immutable files, so concurrent commits,
     * compactions, or deletes cannot change what it reads. The schema is the
     * one RECORDED at that version (evolution travels with time travel); no
-    * parquet footer is opened for schema inference.
+    * parquet footer is opened for schema inference. The file list comes
+    * from the driver-parsed manifest lines commits use, so planning the
+    * read runs no job; only a manifest that helper declines is read as a
+    * distributed dataset.
     */
   def read(spark: SparkSession, table: String, version: Option[Long] = None): DataFrame = {
     val v = version.getOrElse(requireVersion(table))
-    readFiles(spark, table, fileRows(spark, table, v), tableSchema(spark, table, Some(v)))
+    val schema = tableSchema(spark, table, Some(v))
+    manifestFileLinesLocal(spark, table, v) match {
+      case Some(lines) =>
+        dropMeta(readPathsMeta(spark, table, lines.map(l => (l._2, l._3)), schema))
+      case None => readFiles(spark, table, fileRows(spark, table, v), schema)
+    }
   }
 
   /** Planner-integrated read: a DataFrame over a manifest-backed Catalyst
@@ -1343,7 +1365,7 @@ object Snapshots {
       (box, strBox) => collectFiles(files.filter(boxPred(box, strBox))))
     if (dvPaths.isEmpty) base
     else {
-      val dv = spark.read.parquet(dvPaths.toIndexedSeq: _*)
+      val dv = readDvs(spark, dvPaths.toSeq)
         .select(col("file").as("__file"), col("pos").as("__pos"))
       base
         .withColumn("__file", col("_metadata.file_name"))
@@ -1699,7 +1721,7 @@ object Snapshots {
           val oldDirs = perFile.keys.flatMap(dvOf.get).toSeq.distinct
           val oldPos =
             if (oldDirs.isEmpty) pos.limit(0)
-            else spark.read.parquet(oldDirs.map(absPath(table, _)): _*)
+            else readDvs(spark, oldDirs.map(absPath(table, _)))
               .select(col("file"), col("pos"),
                 element_at(split(col("_metadata.file_path"), "/"), -2).as("__dir"))
               .join(hits, col("file") === col("__bn") && col("__dir") === col("__dvDir"),
@@ -1941,7 +1963,7 @@ object Snapshots {
                     if (dirs.isEmpty) {
                       import spark.implicits._
                       spark.emptyDataset[(String, Long)].toDF("file", "pos")
-                    } else spark.read.parquet(dirs.toIndexedSeq: _*)
+                    } else readDvs(spark, dirs.toSeq)
                       .select(col("file"), col("pos"),
                         element_at(split(col("_metadata.file_path"), "/"), -2).as("__dir"))
                       .join(refs.select(lastPart(col("path")).as("file"),

@@ -252,14 +252,16 @@ object TextSearch {
     * pre-segment indexes).
     */
   private def readStats(spark: SparkSession, path: String): IndexStats = {
-    val df = spark.read.parquet(path + "/_stats")
-    val row = df.head()
+    // explicit schema: no inference job, and a legacy index's missing
+    // columns read as null
+    val row = spark.read.schema("n LONG, avgdl DOUBLE, n_buckets INT, sum_dl LONG, appends INT")
+      .parquet(ParquetDirs.files(spark, path + "/_stats"): _*).head()
     val n = row.getAs[Long]("n")
     val sumDl =
-      if (df.columns.contains("sum_dl")) row.getAs[Long]("sum_dl")
+      if (!row.isNullAt(row.fieldIndex("sum_dl"))) row.getAs[Long]("sum_dl")
       else math.round(row.getAs[Double]("avgdl") * n)
     val legacyAppends =
-      if (df.columns.contains("appends")) row.getAs[Int]("appends") else 1
+      if (!row.isNullAt(row.fieldIndex("appends"))) row.getAs[Int]("appends") else 1
     val segs = segmentPaths(spark, path)
     val (nSeg, sumDlSeg) =
       if (segs.isEmpty) (0L, 0L)
@@ -276,8 +278,9 @@ object TextSearch {
 
   /** Build and persist the inverted index: one posting row per (term, doc)
     * carrying tf and dl, partitioned by `bucket = xxhash64(term) mod
-    * nBuckets` so a query's scan prunes to its terms' buckets. Corpus
-    * scalars live under `_stats` (ignored by partition discovery).
+    * nBuckets`, so a query lists and reads only its terms' `bucket=<b>`
+    * directories ([[searchIndex]]). Corpus scalars live under `_stats`
+    * (ignored by partition discovery).
     */
   def writeIndex(
       spark: SparkSession, docs: DataFrame, textCol: String, idCol: String,
@@ -368,11 +371,15 @@ object TextSearch {
         s"the compacted index is intact at $tmp — move it into place manually")
   }
 
-  /** Query the persisted index: prune the postings scan to the query terms'
-    * buckets (partition pruning — reads `|buckets(query)|/nBuckets` of the
-    * index), score, top-k. Document frequency is derived merge-on-read: the
-    * true df of a query term is exactly the posting-row count in the pruned
-    * scan, a |query|-row aggregate over rows already being read — which is
+  /** Query the persisted index: read only the query terms' `bucket=<b>`
+    * directories (`|buckets(query)|/nBuckets` of the index; a bucket no
+    * posting landed in has none and is skipped), score, top-k. The scan is
+    * planned in the driver — `_stats` with an explicit schema, the postings
+    * schema from one footer — so a query runs the `_stats` read and its own
+    * scoring jobs, no listing or inference job. Document frequency is
+    * derived merge-on-read: the true df of a query term is exactly the
+    * posting-row count in the pruned scan, a |query|-row aggregate over
+    * rows already being read — which is
     * what keeps appended segments (whose stored df is segment-local)
     * correct with no compaction on the query path. No corpus-wide work at
     * query time.
@@ -389,7 +396,7 @@ object TextSearch {
     val termBuckets = terms.toDF("term")
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(st.nBuckets.toLong)))
       .collect().map(_.getLong(1)).distinct.toSeq
-    val pruned = spark.read.parquet(path)
+    val pruned = ParquetDirs.readPartitions(spark, path, "bucket", termBuckets)
       .filter(col("bucket").isin(termBuckets: _*) && col("term").isin(terms: _*))
     // a built/compacted index (appends == 0) carries globally-correct
     // denormalized df — score straight off the scan; appended segments'

@@ -213,7 +213,7 @@ object VectorQueries {
       (s, d) => {
         val index = Similarity.buildIvf(
           embeddings(s, d).filter(col("vec_id") =!= 0), "embedding", "vec_id", k = 16)
-        val filtered = index.copy(assigned = index.assigned.filter(col("label") === 1))
+        val filtered = index.mapRows(_.filter(col("label") === 1))
         Similarity.topKIvf(filtered, "embedding", "vec_id", queryVec(s, d), k = 10, nProbes = 2)
       },
       Some(ivfOracleSql(kCentroids = 16, nProbes = 2, k = 10, candPred = "label = 1")),
