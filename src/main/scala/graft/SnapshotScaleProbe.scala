@@ -4,18 +4,16 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{IncrementalAgg, Snapshots}
 
-/** Scale probe for the snapshot-table delete paths: replicate `documents`
-  * N× (text kept — rewrite cost must be real), land it as a snapshot
-  * table, then delete a 0.1% SCATTERED row set (hash-spread, so every
-  * file is a stats candidate — the copy-on-write worst case and the
-  * merge-on-read design case) both ways and measure what each physically
-  * costs, plus what the delete does to downstream reads and to the
-  * changelog-maintained rollup vs a full recompute.
+/** Scale probe for the snapshot-table delete path: replicate `documents`
+  * N× (text kept — file sizes must be real), land it as a snapshot table,
+  * then delete a 0.1% SCATTERED row set (hash-spread, so every file is a
+  * stats candidate — the merge-on-read design case) and measure what it
+  * physically writes, plus what the delete does to downstream reads and
+  * to the changelog-maintained rollup vs a full recompute.
   *
-  * Evidence for the 100 TB claim: COW write cost ∝ candidate FILE bytes,
-  * MOR write cost ∝ deleted ROWS; at 0.1% scattered the gap is the whole
-  * game, and the read-back anti-join premium is bounded by the
-  * deleted-fraction-sized side.
+  * Evidence for the 100 TB claim: the delete's write cost ∝ deleted ROWS,
+  * not candidate FILE bytes, and the read-back anti-join premium is
+  * bounded by the deleted-fraction-sized side.
   *
   * Usage: runMain graft.SnapshotScaleProbe [sfDir] [multiplier]
   */
@@ -59,24 +57,18 @@ object SnapshotScaleProbe {
       t
     }
 
-    val tCow = freshTable("cow")
     val tMor = freshTable("mor")
-    val tableBytes = bytesUnder(s"$tCow/data", _ => true)
+    val tableBytes = bytesUnder(s"$tMor/data", _ => true)
 
-    val ((cowV, cowRewritten, _), tCowDel) =
-      timed(Snapshots.deleteWhere(spark, tCow, scattered))
-    val cowBytes = bytesUnder(s"$tCow/data",
-      _.toString.contains(f"c$cowV%08d")) // the rewrite's new file groups
-
-    val (morStats, tMorDel) = timed(Snapshots.deleteWhereMor(spark, tMor, scattered))
-    val morBytes = bytesUnder(s"$tMor/data", _.getParent.toString.endsWith(".dv"))
-
-    // read-back: the anti-join premium vs the rewritten-clean table
+    // read-back: the anti-join premium over the same table before the delete
     def scanAgg(t: String): Long =
       Snapshots.read(spark, t).agg(count(lit(1))).head().getLong(0)
-    val (nCow, tCowRead) = timed(scanAgg(tCow))
+    val (nBefore, tReadBefore) = timed(scanAgg(tMor))
+    val (morStats, tMorDel) = timed(Snapshots.deleteWhereMor(spark, tMor, scattered))
+    val morBytes = bytesUnder(s"$tMor/data", _.getParent.toString.endsWith(".dv"))
     val (nMor, tMorRead) = timed(scanAgg(tMor))
-    require(nCow == nMor, s"paths disagree: cow=$nCow mor=$nMor")
+    require(nMor == nBefore - morStats.rowsDeleted,
+      s"live rows after the delete: $nMor != $nBefore - ${morStats.rowsDeleted}")
 
     // rollup maintenance across the delete: changelog vs full recompute
     val aggPath = "/tmp/graft/snapprobe/agg"
@@ -279,12 +271,10 @@ object SnapshotScaleProbe {
       f"replay_s=$tCatchUp%.1f (balanced union; cost ∝ the commits' churn)")
     println(f"[snapshot-probe] commit_protocol: stage_s=${tRate._1}%.2f " +
       f"commit_s=${tRate._2}%.2f per small append (scheduler-bound fixed cost)")
-    println(f"[snapshot-probe] cow_delete_s=$tCowDel%.1f cow_files_rewritten=$cowRewritten " +
-      f"cow_bytes_written_mb=${cowBytes / 1e6}%.1f")
     println(f"[snapshot-probe] mor_delete_s=$tMorDel%.1f mor_files_with_dv=${morStats.filesWithDv} " +
       f"mor_bytes_written_mb=${morBytes / 1e6}%.1f")
-    println(f"[snapshot-probe] read_after_cow_s=$tCowRead%.2f read_after_mor_s=$tMorRead%.2f " +
-      f"rows_live=$nCow")
+    println(f"[snapshot-probe] read_before_delete_s=$tReadBefore%.2f read_after_mor_s=$tMorRead%.2f " +
+      f"rows_live=$nMor")
     println(f"[snapshot-probe] scattered: agg_refresh_mode=${r.mode} " +
       f"changelog_s=$tChangelog%.1f full_recompute_s=$tFull%.1f " +
       f"(worst case: every file vector-bearing - maintenance reads ~table bytes)")

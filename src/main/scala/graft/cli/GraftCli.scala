@@ -826,17 +826,10 @@ object GraftCli {
               s"range ($fromV,$toV] contains a non-append commit - full re-read required")
             1
         }
-      // snapshot-delete <table> "<sql predicate>" — copy-on-write: only
-      // files whose manifest stats intersect the predicate are rewritten
-      case "snapshot-delete" :: table :: predicate :: Nil =>
-        val (v, rewritten, untouched) = graft.operators.Snapshots.deleteWhere(
-          spark, table, org.apache.spark.sql.functions.expr(predicate))
-        println(s"version=$v files_rewritten=$rewritten files_untouched=$untouched")
-        0
-      // snapshot-delete-mor <table> "<sql predicate>" — merge-on-read:
+      // snapshot-delete <table> "<sql predicate>" — merge-on-read:
       // rewrites NO data file; matching rows land in a position-delete
       // dataset every read applies (compaction absorbs the vectors)
-      case "snapshot-delete-mor" :: table :: predicate :: Nil =>
+      case "snapshot-delete" :: table :: predicate :: Nil =>
         val st = graft.operators.Snapshots.deleteWhereMor(
           spark, table, org.apache.spark.sql.functions.expr(predicate))
         println(s"version=${st.version} rows_deleted=${st.rowsDeleted} " +
@@ -895,13 +888,6 @@ object GraftCli {
       case "snapshot-count" :: table :: Nil =>
         println(s"rows=${graft.operators.Snapshots.fastCount(spark, table)}")
         0
-      // snapshot-compact-small <table> <smallBytes> — fold only small and
-      // vector-bearing files; healthy files carry by reference
-      case "snapshot-compact-small" :: table :: smallBytes :: Nil =>
-        val (v, folded, carried) = graft.operators.Snapshots.compactSmallFiles(
-          spark, table, smallBytes.toLong)
-        println(s"version=$v files_folded=$folded files_carried=$carried")
-        0
       // snapshot-merge <table> <parquetDir> <keyCols,comma-sep> — keyed
       // merge-on-read upsert: matched rows gain vector positions, the source
       // lands as one file group; no data file rewrites
@@ -912,21 +898,22 @@ object GraftCli {
           s"files_with_dv=${m.filesWithDv} files_untouched=${m.filesUntouched} " +
           s"rows_updated=${m.rowsUpdated} rows_inserted=${m.rowsInserted}")
         0
+      // snapshot-compact <table> [smallBytes] [--limit=recordsPerFile] —
+      // fold files under smallBytes (default: all) and every vector-bearing
+      // file; healthy files carry by reference
       case "snapshot-compact" :: rest0 =>
         val (settings, positional) = Settings.fromArgs(rest0)
         positional match {
-          case table :: rest if rest.size <= 1 =>
-            val cluster = rest.headOption.toSeq.flatMap(_.split(","))
-              .map(org.apache.spark.sql.functions.col)
-            val v = graft.operators.Snapshots.compact(spark, table,
-              targetRecordsPerFile = settings.limit.map(_.toLong).getOrElse(1000000L),
-              clusterBy = cluster)
-            println(s"compacted=$table version=$v" +
-              (if (cluster.nonEmpty) s" clustered_by=${rest.head}" else ""))
+          case table :: rest if rest.size <= 1 &&
+              rest.forall(a => scala.util.Try(a.toLong).isSuccess) =>
+            val (v, folded, carried) = graft.operators.Snapshots.compact(spark, table,
+              smallBytes = rest.headOption.map(_.toLong).getOrElse(Long.MaxValue),
+              targetRecordsPerFile = settings.limit.map(_.toLong).getOrElse(1000000L))
+            println(s"version=$v files_folded=$folded files_carried=$carried")
             0
           case _ =>
             System.err.println(
-              "usage: snapshot-compact <table> [clusterCol,...] [--limit=recordsPerFile]")
+              "usage: snapshot-compact <table> [smallBytes] [--limit=recordsPerFile]")
             2
         }
       // text-index-refresh <table> <indexPath> <cursor> [textCol] [idCol] —
@@ -964,10 +951,10 @@ object GraftCli {
         val (settings, positional) = Settings.fromArgs(rest0)
         positional match {
           case table :: spec :: Nil =>
-            val v = graft.operators.Snapshots.compact(spark, table,
+            val (v, folded, _) = graft.operators.Snapshots.compact(spark, table,
               targetRecordsPerFile = settings.limit.map(_.toLong).getOrElse(1000000L),
               clusterBySpec = spec)
-            println(s"clustered=$table version=$v spec=$spec")
+            println(s"clustered=$table version=$v spec=$spec files_folded=$folded")
             0
           case _ =>
             System.err.println(
@@ -1052,7 +1039,6 @@ object GraftCli {
             |  snapshot-history <table>
             |  snapshot-diff <table> <fromVersion> <toVersion>
             |  snapshot-delete <table> "<sql predicate>"
-            |  snapshot-delete-mor <table> "<sql predicate>"
             |  snapshot-changes <table> <fromVersion> <toVersion>
             |  snapshot-delete-keys <table> <parquetDir> <keyCols,comma-sep>
             |  snapshot-clone <srcTable> <dstTable>
@@ -1060,9 +1046,8 @@ object GraftCli {
             |  snapshot-sql <table> <viewName> "<query>"
             |  warc-ingest <warcGlob> <table>
             |  snapshot-count <table>
-            |  snapshot-compact-small <table> <smallBytes>
             |  snapshot-merge <table> <parquetDir> <keyCol,...>
-            |  snapshot-compact <table> [clusterCol,...] [--limit=recordsPerFile]
+            |  snapshot-compact <table> [smallBytes] [--limit=recordsPerFile]
             |  snapshot-cluster <table> <spec> [--limit=recordsPerFile]
             |  snapshot-restore <table> <version>
             |  text-index-refresh <table> <indexPath> <cursor> [textCol] [idCol]

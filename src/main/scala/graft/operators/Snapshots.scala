@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Snapshot-versioned parquet tables: a manifest-log commit protocol giving
-  * the lake ACID appends, copy-on-write deletes, time travel, incremental
+  * the lake ACID appends, merge-on-read deletes, time travel, incremental
   * (CDC) reads, manifest-side file skipping, and snapshot-aware compaction
   * + retention — the table-format discipline (Iceberg/Delta-style, from the
   * published designs) that a 100 TB corpus needs and a bare parquet
@@ -312,7 +312,7 @@ object Snapshots {
   private def swapCurrent(table: String, expectedParent: Long, v: Long): Unit =
     store(table).swapPointer(table, expectedParent, v)
 
-  /** Commit a non-append (COW delete, MOR delete/merge, replace) whose base
+  /** Commit a non-append (MOR delete/merge, replace) whose base
     * may have MOVED since the op planned its rewrite — the conflict rule
     * that lets a nightly `maintain()` coexist with a streaming append sink:
     *
@@ -417,7 +417,6 @@ object Snapshots {
     */
   private[graft] var preCommitHook: () => Unit = () => ()
 
-  /** Numeric top-level columns — the default stats set. */
   /** Default stats set: numeric + string top-level columns (string bounds
     * are truncated at write; pass explicit `statsCols` to exclude long
     * text columns from stats collection).
@@ -466,7 +465,7 @@ object Snapshots {
     // a file whose footer lacks valid stats for a column (NaN suppression,
     // an all-null chunk beside a missing one) contributes NO bound — the
     // file is then never pruned on that column, which is SOUND, just
-    // weaker. Exotic stats types (decimals) take the scan path unchanged.
+    // weaker. Exotic stats types (decimals) take the scan path below.
     val footerSafe = requested.forall { c =>
       df.schema(c).dataType match {
         case ByteType | ShortType | IntegerType | LongType | FloatType |
@@ -474,7 +473,7 @@ object Snapshots {
         case _ => false
       }
     }
-    if (footerSafe && sys.env.getOrElse("SPARK_GRAFT_FOOTER_STATS", "true").toBoolean)
+    if (footerSafe)
       return footerFileEntries(spark, table, rel, v, stats.toSet, strStats.toSet,
         df.schema)
 
@@ -858,8 +857,8 @@ object Snapshots {
     * `cluster_by`): `"c1,c2"` = range-cluster by those columns,
     * `"z:x,y:bits"` = z-order the two numeric columns. Set by a
     * [[compact]]/[[append]] passing `clusterBy`; inherited by every
-    * subsequent commit, so [[maintain]]/[[compactSmallFiles]] re-cluster
-    * folds and appends lay out their delta without re-stating it.
+    * subsequent commit, so [[compact]] folds (and so [[maintain]])
+    * re-cluster and appends lay out their delta without re-stating it.
     */
   def clusterSpec(
       spark: SparkSession, table: String, version: Option[Long] = None): Option[String] = {
@@ -1215,7 +1214,7 @@ object Snapshots {
     * (extracted from long/decimal predicates or key sets) can each be off
     * by up to 1 ulp of rounding for values beyond 2^53, and an UNWIDENED
     * compare could then skip a file that actually holds a matching row —
-    * an unsound skip (for [[deleteWhere]], a row that should die would
+    * an unsound skip (for [[deleteWhereMor]], a row that should die would
     * survive). Widening only ever keeps extra files: pruning stays an
     * optimization, never a semantic filter.
     */
@@ -1394,55 +1393,6 @@ object Snapshots {
     } finally files.unpersist(): Unit
   }
 
-  /** Copy-on-write delete: files whose stats box can't contain a matching
-    * row are CARRIED FORWARD BY REFERENCE (zero I/O); only candidate files
-    * are rewritten without the matching rows. Returns (new version,
-    * files rewritten, files carried untouched). Rows deleted = old minus
-    * new manifest row totals.
-    */
-  def deleteWhere(
-      spark: SparkSession,
-      table: String,
-      cond: Column,
-      statsCols: Seq[String] = null,
-      maxRecordsPerFile: Long = 1000000L): (Long, Long, Long) = {
-    val parent = requireVersion(table)
-    val v = parent + 1
-    val files = fileRows(spark, table, parent).cache()
-    val schema = tableSchema(spark, table, Some(parent))
-    try {
-      val box = predicateBox(cond)
-      val strBox = predicateStrBox(cond)
-      val candidates = files.filter(boxPred(box, strBox)).cache()
-      val untouchedCount = files.count() - candidates.count()
-      val untouched = files.join(candidates.select("path"), Seq("path"), "left_anti")
-      val survivors = {
-        val cand = readFiles(spark, table, candidates, schema)
-        // SQL DELETE semantics: only rows where the predicate is TRUE die.
-        // A NULL-evaluating predicate (null column in a comparison) keeps
-        // the row — bare filter(!cond) would drop it (!NULL is NULL), and
-        // the MOR path (which filters cond to find victims) would diverge.
-        if (cand.columns.isEmpty) cand else cand.filter(!coalesce(cond, lit(false)))
-      }
-      val stats = Option(statsCols).getOrElse(
-        if (survivors.columns.isEmpty) Nil else defaultStatsCols(survivors))
-      val entries =
-        if (survivors.columns.isEmpty)
-          asManifestRows(untouched.limit(0))
-            .select(fileColNames.head, fileColNames.tail: _*)
-        else
-          writeFileGroup(spark, table, v, survivors, stats, maxRecordsPerFile)
-            .select(fileColNames.head, fileColNames.tail: _*)
-      val vc = commitRebase(spark, table, parent, "delete",
-        untouched.select(fileColNames.head, fileColNames.tail: _*), entries,
-        Some(boxPred(box, strBox)), txn = None,
-        schemaJson = schema.map(_.json)).get
-      val rewritten = candidates.count()
-      candidates.unpersist()
-      (vc, rewritten, untouchedCount)
-    } finally { files.unpersist(); () }
-  }
-
   /** Outcome of a keyed or merge-on-read op ([[deleteWhereMor]],
     * [[deleteKeysMor]], [[mergeMor]], [[merge]], [[mergeIdempotent]],
     * [[applyCdcIdempotent]]): the new version, the files that gained a (new
@@ -1467,9 +1417,9 @@ object Snapshots {
     *
     *  - **Write cost ∝ rows deleted.** Stats-pruned candidates are scanned
     *    once (predicate pushed to parquet); only matching (file, pos)
-    *    pairs are written. [[deleteWhere]] (copy-on-write) instead
-    *    rewrites every candidate FILE — right when deletes cluster, wrong
-    *    when they scatter across the whole table.
+    *    pairs are written, never a candidate FILE — a copy-on-write
+    *    rewrite is right only when deletes cluster, wrong when they
+    *    scatter across the whole table.
     *  - **Read cost**: one anti-join against a deleted-fraction-sized
     *    side. [[compact]] absorbs the vectors back into clean files when
     *    the fraction grows (reads apply DVs, rewrites reference none).
@@ -1481,8 +1431,8 @@ object Snapshots {
     *    stays exact: each version's file rows name each file's vector AS
     *    OF that version.
     *  - **Fully-deleted files stay referenced** (dv_rows == rows; the
-    *    anti-join drops everything) until a [[compact]]/[[deleteWhere]]
-    *    rewrite retires them; [[expire]] GCs DV datasets no retained
+    *    anti-join drops everything) until a [[compact]] fold retires
+    *    them; [[expire]] GCs DV datasets no retained
     *    version references.
     *
     * Recorded as op `delete` — a non-append — so incremental consumers
@@ -1855,8 +1805,8 @@ object Snapshots {
     *    [[diffAppended]]).
     *  - `delete`/`merge`/`overwrite`: the file-set diff vs the parent —
     *    removed files' live rows `exceptAll` added files' rows are the
-    *    deletes, the reverse are the inserts (a COW delete bounds
-    *    removed+added to the touched files; a merge-on-read delete or merge
+    *    deletes, the reverse are the inserts (an overwrite or restore
+    *    swaps file sets; a merge-on-read delete or merge
     *    removes no file, so its deletes are read as its DELTA of
     *    deletion-vector positions joined back to the rows they name, and a
     *    merge's inserts are its appended file group).
@@ -1924,7 +1874,7 @@ object Snapshots {
           val curr = fileRows(spark, table, v)
           val schemaPrev = schemaAt(v - 1)
           // (a) file-set diff: removed files' LIVE rows (their v-1 vectors
-          // applied) vs added files' rows — the COW churn, multiset-diffed
+          // applied) vs added files' rows — a file-set swap, multiset-diffed
           val removed = prev.join(curr.select("path"), Seq("path"), "left_anti")
           val added = curr.join(prev.select("path"), Seq("path"), "left_anti")
           val oldLive = readFiles(spark, table, removed, schemaPrev)
@@ -2195,54 +2145,76 @@ object Snapshots {
       .orderBy(col("version").desc)
   }
 
-  /** Snapshot-aware compaction: rewrite the CURRENT file set into
-    * ~`targetRecordsPerFile`-row files as a `replace` commit. Row-for-row
-    * identical; old versions stay readable (time travel across a compaction
-    * works) until [[expire]] reclaims them. The lake-level
-    * [[Lake.compact]] rewrites in place; THIS one preserves history.
+  /** Snapshot-aware compaction, the one file rewriter: fold every file
+    * smaller than `smallBytes` (default: every file) plus every file that
+    * carries a deletion vector, vectors applied, into ~`targetRecordsPerFile`
+    * -row files as a `replace` commit; every other file carries forward BY
+    * REFERENCE. Row-preserving on LIVE rows, so the changelog emits
+    * nothing, and old versions stay readable (time travel across a fold
+    * works) until [[expire]] reclaims them. With a `smallBytes` threshold
+    * this is the `OPTIMIZE` a 100 TB table can afford: cost ∝ the
+    * small-file and vector debt (typically streaming-commit residue),
+    * never the table. The lake-level [[Lake.compact]] rewrites in place;
+    * THIS one preserves history.
     *
-    * With `clusterBy` keys the rewrite is a CLUSTERED layout — one range
-    * exchange (`repartitionByRange`) + per-file sort, never a global
-    * single-task sort — so every new file covers a contiguous key range
-    * and the manifest's min/max boxes turn a key predicate into a sharp
-    * file skip ([[scanPlan]]): the `OPTIMIZE ... ZORDER/ORDER BY`
-    * discipline on this table format (pass `Lake.zkey(x, y, bits)` as the
-    * key for two-dimensional locality).
+    * The fold is laid out by `clusterBySpec` (`"c1,c2"` or `"z:x,y:bits"`,
+    * see [[clusterSpec]]), which the commit records so appends and later
+    * folds keep it, or else by the table's recorded spec: one range
+    * exchange + per-file sort, never a global single-task sort, so every
+    * new file covers a contiguous key range and a key predicate turns into
+    * a sharp manifest-side skip ([[scanPlan]]).
+    *
+    * ONE collect of the version's file rows plans the fold; its live row
+    * count (rows − vector-marked rows) comes from the manifest. Returns
+    * (version, filesFolded, filesCarried). A no-op (version unchanged, 0
+    * folded) only when nothing would change: no file to fold, or a single
+    * vector-free file of the table's own (not a shallow clone's reference
+    * to its source) already within `targetRecordsPerFile` and no new spec
+    * to record.
     */
   def compact(
       spark: SparkSession,
       table: String,
+      smallBytes: Long = Long.MaxValue,
       targetRecordsPerFile: Long = 1000000L,
-      statsCols: Seq[String] = null,
-      clusterBy: Seq[Column] = Nil,
-      clusterBySpec: String = null): Long = {
+      clusterBySpec: String = null): (Long, Long, Long) = {
     val parent = requireVersion(table)
-    val v = parent + 1
-    val df = read(spark, table)
-    val rows = df.count()
-    val nFiles = math.max(1L, (rows + targetRecordsPerFile - 1) / targetRecordsPerFile)
-    val stats = Option(statsCols).getOrElse(defaultStatsCols(df))
-    // layout priority: an explicit RECORDED spec (persists — appends and
-    // maintenance re-cluster by it from now on) > ad-hoc Columns (one-shot)
-    // > the already-recorded discipline > plain rebalance
+    val schema = tableSchema(spark, table, Some(parent))
+    val recorded = clusterSpec(spark, table, Some(parent))
     val spec = Option(clusterBySpec).filter(_.nonEmpty)
-      .orElse(if (clusterBy.nonEmpty) None else clusterSpec(spark, table, Some(parent)))
-    val laidOut = (spec, clusterBy) match {
-      case (Some(sp), _) => clusterLayout(df, sp, nFiles.toInt)
-      case (None, cs) if cs.nonEmpty =>
-        df.repartitionByRange(nFiles.toInt, cs: _*).sortWithinPartitions(cs: _*)
-      case _ => df.repartition(nFiles.toInt)
+    val files = fileRows(spark, table, parent)
+    val foldable =
+      coalesce(col("bytes") < lit(smallBytes) || coalesce(col("dv_rows"), lit(0L)) > 0L, lit(false))
+    val (folded, carried) = files.select(col("path"), col("dv_path"),
+      col("rows") - coalesce(col("dv_rows"), lit(0L)), foldable).collect()
+      .partition(_.getBoolean(3))
+    val fold = folded.map(r => (r.getString(0), r.getString(1)))
+    val liveRows = folded.map(_.getLong(2)).sum
+    // an absolute path is a shallow clone's reference to its source's file:
+    // folding it is the clone's deep copy, so it is never left in place
+    if (fold.isEmpty || (fold.length == 1 && fold.head._2 == null &&
+        !fold.head._1.startsWith("/") &&
+        liveRows <= targetRecordsPerFile && spec.forall(recorded.contains)))
+      return (parent, 0L, carried.length.toLong + fold.length)
+    val v = parent + 1
+    val content = dropMeta(readPathsMeta(spark, table, fold.toSeq, schema)) // vectors applied
+    val nFiles = math.max(1L, (liveRows + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
+    val laidOut = spec.orElse(recorded) match {
+      case Some(sp) => clusterLayout(content, sp, nFiles)
+      case None => if (nFiles == 1) content.coalesce(1) else content.repartition(nFiles)
     }
-    val entries = writeFileGroup(
-      spark, table, v, laidOut, stats, targetRecordsPerFile)
-      .select(fileColNames.head, fileColNames.tail: _*)
+    val entries =
+      if (liveRows == 0L) files.limit(0).select(fileColNames.head, fileColNames.tail: _*)
+      else writeFileGroup(spark, table, v, laidOut, defaultStatsCols(content),
+        targetRecordsPerFile)
+        .select(fileColNames.head, fileColNames.tail: _*)
     // a replace is row-preserving on the files it planned against, so it
     // commutes with ANY concurrent append (no conflict predicate): the
-    // appended files carry forward and every commit lands
-    commitRebase(spark, table, parent, "replace",
-      entries.limit(0), entries, conflicts = None, txn = None,
-      schemaJson = tableSchema(spark, table, Some(parent)).map(_.json),
-      clusterBy = Option(clusterBySpec).filter(_.nonEmpty)).get
+    // appended files carry forward and just wait for the next fold
+    val vc = commitRebase(spark, table, parent, "replace",
+      files.filter(!foldable).select(fileColNames.head, fileColNames.tail: _*), entries,
+      conflicts = None, txn = None, schemaJson = schema.map(_.json), clusterBy = spec).get
+    (vc, fold.length.toLong, carried.length.toLong)
   }
 
   /** Roll the table BACK to `version` as a NEW commit (op `restore`) — the
@@ -2310,8 +2282,9 @@ object Snapshots {
     * absolutized; no data copied) — the Delta `CLONE TABLE` discipline
     * for dev/test branching and safe experiments against a production
     * corpus. The clone then evolves independently: appends/deletes/merges
-    * write into ITS data dir; a COW rewrite of a shared file writes a
-    * private copy and the source stays untouched; [[expire]] on the clone
+    * write into ITS data dir (a delete marks a shared file with a vector
+    * of the clone's own, a fold rewrites it as a private copy) and the
+    * source stays untouched; [[expire]] on the clone
     * sweeps only the clone's own data root, so shared source files are
     * never reclaimed by the clone. CAVEAT (same as Delta/Iceberg):
     * expiring the SOURCE can reclaim files a clone still references —
@@ -2379,65 +2352,6 @@ object Snapshots {
     else Some((r.getDouble(0), r.getDouble(1), r.getLong(3) == 0L))
   }
 
-  /** Incremental compaction: fold ONLY the files smaller than
-    * `smallBytes` — plus any vector-bearing file, absorbing its deletion
-    * vector — into fresh right-sized files as a `replace` commit; every
-    * healthy file carries forward BY REFERENCE. The `OPTIMIZE` a 100 TB
-    * table can actually afford: cost ∝ the small-file debt (typically
-    * streaming-commit residue), never the table. Row-preserving on LIVE
-    * rows, so the changelog correctly emits nothing. Returns
-    * (version, filesFolded, filesCarried); a table with fewer than 2
-    * foldable files and no vectors to absorb is left untouched (version
-    * unchanged, 0 folded).
-    */
-  def compactSmallFiles(
-      spark: SparkSession,
-      table: String,
-      smallBytes: Long,
-      targetRecordsPerFile: Long = 1000000L,
-      statsCols: Seq[String] = null): (Long, Long, Long) = {
-    val parent = requireVersion(table)
-    val v = parent + 1
-    val files = fileRows(spark, table, parent).cache()
-    val schema = tableSchema(spark, table, Some(parent))
-    try {
-      val foldable = files.filter(
-        col("bytes") < lit(smallBytes) || coalesce(col("dv_rows"), lit(0L)) > 0L).cache()
-      val nFold = foldable.count()
-      val hasDv = foldable.filter(coalesce(col("dv_rows"), lit(0L)) > 0L).count() > 0L
-      if (nFold < 2 && !hasDv) { foldable.unpersist(); return (parent, 0L, files.count()) }
-      val carried = files.join(foldable.select("path"), Seq("path"), "left_anti")
-      val content = readFiles(spark, table, foldable, schema) // vectors applied
-      val liveRows = foldable
-        .agg(coalesce(sum(col("rows") - coalesce(col("dv_rows"), lit(0L))), lit(0L)))
-        .head().getLong(0)
-      val nFiles = math.max(1L, (liveRows + targetRecordsPerFile - 1) / targetRecordsPerFile)
-      val stats = Option(statsCols).getOrElse(
-        if (content.columns.isEmpty) Nil else defaultStatsCols(content))
-      // folds honor the table's recorded clustering discipline, so
-      // maintenance RESTORES tight min/max boxes over streaming-append debt
-      val laidOut = clusterSpec(spark, table, Some(parent)) match {
-        case Some(sp) => clusterLayout(content, sp, nFiles.toInt)
-        case None => content.repartition(nFiles.toInt)
-      }
-      val entries =
-        if (content.columns.isEmpty || liveRows == 0L)
-          asManifestRows(files.limit(0)).select(fileColNames.head, fileColNames.tail: _*)
-        else writeFileGroup(spark, table, v, laidOut,
-          stats, targetRecordsPerFile)
-          .select(fileColNames.head, fileColNames.tail: _*)
-      // row-preserving replace: commutes with concurrent appends (their
-      // small files just wait for the next maintenance round)
-      val vc = commitRebase(spark, table, parent, "replace",
-        carried.select(fileColNames.head, fileColNames.tail: _*), entries,
-        conflicts = None, txn = None,
-        schemaJson = schema.map(_.json)).get
-      val nCarried = files.count() - nFold
-      foldable.unpersist()
-      (vc, nFold, nCarried)
-    } finally { files.unpersist(); () }
-  }
-
   /** One-call table maintenance: fold small-file debt (absorbing deletion
     * vectors) then reclaim history past `keepLast` — the routine a
     * scheduler runs nightly against every table a streaming sink feeds.
@@ -2450,8 +2364,7 @@ object Snapshots {
       targetRecordsPerFile: Long = 1000000L,
       keepLast: Int = 7,
       orphanGraceMs: Long = 3600000L): (Long, Long, Long) = {
-    val (_, folded, _) =
-      compactSmallFiles(spark, table, smallBytes, targetRecordsPerFile)
+    val (_, folded, _) = compact(spark, table, smallBytes, targetRecordsPerFile)
     val (manifests, files) = expire(spark, table, keepLast, orphanGraceMs)
     (folded, manifests, files)
   }

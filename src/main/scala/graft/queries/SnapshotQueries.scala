@@ -10,7 +10,7 @@ import graft.operators.{IncrementalAgg, Snapshots}
   * aggregates ([[graft.operators.IncrementalAgg]]): every entry drives the
   * REAL commit protocol on scratch disk (create → append/delete/compact →
   * read) and reduces to integers a DuckDB oracle recomputes directly from
-  * `documents` — time travel, CDC diffs, copy-on-write skipping, and
+  * `documents` — time travel, CDC diffs, merge-on-read deletes, and
   * manifest-stat file pruning all land in the driver's hash gate.
   */
 object SnapshotQueries {
@@ -39,12 +39,12 @@ object SnapshotQueries {
 
   val all: Map[String, Q] = Map(
 
-    // Time travel + copy-on-write delete. v1 = even docs, v2 = +odd docs,
-    // v3 = deleteWhere(n_chars < 150). Pins the row count at v1 and v2
-    // (v2 read AFTER the delete — immutable-file isolation means time
-    // travel still sees the deleted rows) and the post-delete aggregate.
-    // COW file-skipping structure is pinned by SnapshotSpec; here the
-    // oracle pins the version semantics.
+    // Time travel + delete. v1 = even docs, v2 = +odd docs,
+    // v3 = deleteWhereMor(n_chars < 150). Pins the row count at v1 and v2
+    // (v2 read AFTER the delete — immutable files and per-version vector
+    // references mean time travel still sees the deleted rows) and the
+    // post-delete aggregate. The delete's file structure is pinned by
+    // SnapshotSpec; here the oracle pins the version semantics.
     "k_snapshot_time_travel" -> Q(
       (s, d) => {
         val t = fresh(d, "snap_tbl")
@@ -52,7 +52,7 @@ object SnapshotQueries {
         val docs = documents(s, d).select(col("doc_id"), col("lang"), col("n_chars"))
         Snapshots.append(s, t, docs.filter(col("doc_id") % 2 === 0))
         Snapshots.append(s, t, docs.filter(col("doc_id") % 2 === 1))
-        val (_, _, _) = Snapshots.deleteWhere(s, t, col("n_chars") < 150)
+        Snapshots.deleteWhereMor(s, t, col("n_chars") < 150): Unit
         val nV1 = Snapshots.read(s, t, Some(1L)).count()
         val nV2 = Snapshots.read(s, t, Some(2L)).count()
         val cur = Snapshots.read(s, t)
@@ -145,7 +145,7 @@ object SnapshotQueries {
         (0 until 4).foreach { i =>
           Snapshots.append(s, t, docs.filter(col("doc_id") % 4 === i).coalesce(1))
         }
-        Snapshots.compact(s, t, targetRecordsPerFile = 10000000L)
+        Snapshots.compact(s, t, targetRecordsPerFile = 10000000L): Unit
         val (droppedManifests, _) = Snapshots.expire(s, t, keepLast = 1)
         val filesAfter = graft.operators.Lake.dataFileCount(s, s"$t/data")
         Snapshots.read(s, t).agg(
@@ -416,7 +416,7 @@ object SnapshotQueries {
         Snapshots.append(s, t, docs.filter(col("doc_id") % 2 === 0))
         Snapshots.append(s, t, docs.filter(col("doc_id") % 2 === 1))
         Snapshots.deleteWhereMor(s, t, col("n_chars") < 150)
-        Snapshots.compact(s, t)
+        Snapshots.compact(s, t): Unit
         Snapshots.rowChanges(s, t, 0L, 4L)
           .groupBy(col("_change_type").as("change_type"))
           .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
@@ -549,7 +549,7 @@ object SnapshotQueries {
           .filter(col("version") === 1L).head().getAs[Long]("n_bytes")
         Snapshots.deleteWhereMor(s, t, col("doc_id") % 20 === 2)
         val (v, folded, carried) =
-          Snapshots.compactSmallFiles(s, t, smallBytes = bigBytes / 2,
+          Snapshots.compact(s, t, smallBytes = bigBytes / 2,
             targetRecordsPerFile = 10000000L)
         val filesAfter = Snapshots.history(s, t)
           .filter(col("version") === v).head().getAs[Long]("n_files")
@@ -937,9 +937,11 @@ object SnapshotQueries {
     ),
 
     // SQL DELETE null semantics: a predicate that evaluates to NULL keeps
-    // the row, on BOTH the copy-on-write and merge-on-read paths - the
-    // oracle recomputes the survivors with explicit IS NULL arithmetic, so
-    // a !cond filter that silently drops null rows fails the hash.
+    // the row, both in the deletion vectors a merge-on-read delete writes
+    // ('mor') and in the rewritten, vector-free files a compaction of them
+    // lands ('cow') - the oracle recomputes the survivors with explicit
+    // IS NULL arithmetic, so a filter that silently drops null rows fails
+    // the hash.
     "k_snapshot_delete_null" -> Q(
       (s, d) => {
         val docs = documents(s, d).select(col("doc_id"), col("lang"),
@@ -953,7 +955,8 @@ object SnapshotQueries {
         }
         val cow = build("snap_nulldel_cow")
         val mor = build("snap_nulldel_mor")
-        Snapshots.deleteWhere(s, cow, col("score") > 200): Unit
+        Snapshots.deleteWhereMor(s, cow, col("score") > 200): Unit
+        Snapshots.compact(s, cow): Unit
         Snapshots.deleteWhereMor(s, mor, col("score") > 200): Unit
         def agg(t: String, p: String) = Snapshots.read(s, t)
           .agg(lit(p).as("path"), count(lit(1)).as("n"),
@@ -1042,7 +1045,7 @@ object SnapshotQueries {
           Snapshots.scanPlan(s, t, col("doc_id") >= l && col("doc_id") < h)
         val before = plan(lo, hi)
         val target = (n + 7) / 8
-        Snapshots.compact(s, t, targetRecordsPerFile = target, clusterBySpec = "doc_id")
+        Snapshots.compact(s, t, targetRecordsPerFile = target, clusterBySpec = "doc_id"): Unit
         val after = plan(lo, hi)
         // streaming-shaped debt: 4 interleaved re-appends (ids shifted by
         // n), each clustered within itself but scattered across files...
@@ -1052,8 +1055,7 @@ object SnapshotQueries {
               .withColumn("doc_id", col("doc_id") + n).coalesce(1))
         }
         // ...then ONE maintenance fold re-clusters everything by the spec
-        Snapshots.compactSmallFiles(s, t,
-          smallBytes = Long.MaxValue, targetRecordsPerFile = target): Unit
+        Snapshots.compact(s, t, targetRecordsPerFile = target): Unit
         val ap = plan(lo + n, hi + n)
         val cur = plan(lo, hi)
         cur.df.agg(

@@ -25,11 +25,9 @@ import scala.util.Try
   * succeed — preserving the observable invariant (state ⟺ store
   * consistency, failed docs retried, SURVEY §7 "atomicity semantics shift").
   */
-final class PipelineState(val path: String, val format: String = "parquet") extends Serializable {
+final class PipelineState(val path: String) extends Serializable {
 
   import PipelineState._
-
-  require(format == "parquet" || format == "json", "format must be parquet or json")
 
   private def fs(spark: SparkSession) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -41,11 +39,21 @@ final class PipelineState(val path: String, val format: String = "parquet") exte
     * by a cheap probe count — parquet answers it from footer metadata — so
     * the empty-ledger fallback still applies here rather than blowing up an
     * arbitrary downstream action. The stored format is sniffed from the part
-    * files, so a parquet-default ledger still reads legacy JSON states.
+    * files, so legacy JSON ledgers still read.
+    *
+    * A save that crashed between deleting the old ledger and renaming the
+    * new one into place leaves only `<path>.tmp`. When that write completed
+    * (its `_SUCCESS` marker is there) it IS the latest ledger, so it is
+    * promoted to `<path>` first; loading empty instead would reprocess the
+    * whole corpus. An incomplete `.tmp` is a crashed write and stays
+    * ignored (the next save clears it).
     */
   def load(spark: SparkSession): DataFrame = {
     val f = fs(spark)
-    if (!f.exists(new Path(path))) empty(spark)
+    val dst = new Path(path)
+    val tmp = new Path(path + ".tmp")
+    if (!f.exists(dst) && f.exists(new Path(tmp, "_SUCCESS"))) f.rename(tmp, dst): Unit
+    if (!f.exists(dst)) empty(spark)
     else {
       // the path is rewritten in place by save(): drop any cached file
       // listing/data for it before re-reading
@@ -71,7 +79,8 @@ final class PipelineState(val path: String, val format: String = "parquet") exte
       found
     }.getOrElse(false)
 
-  /** Atomic commit: write to `<path>.tmp`, then swap (reference `state.py:72-75`).
+  /** Atomic commit: write to `<path>.tmp`, then swap (reference `state.py:72-75`);
+    * a crash mid-swap is recovered by [[load]].
     * The write stays distributed — one file per task per status, docId-sorted
     * so point lookups prune parquet row groups; no `coalesce(1)` funnel.
     */
@@ -80,11 +89,10 @@ final class PipelineState(val path: String, val format: String = "parquet") exte
     val tmp = new Path(path + ".tmp")
     val dst = new Path(path)
     if (f.exists(tmp)) f.delete(tmp, true)
-    val w = state.select(stateSchema.fieldNames.map(col): _*)
+    state.select(stateSchema.fieldNames.map(col): _*)
       .sortWithinPartitions(col("status"), col("docId"))
       .write.mode(SaveMode.Overwrite)
-    if (format == "json") w.json(tmp.toString)
-    else w.partitionBy("status").parquet(tmp.toString)
+      .partitionBy("status").parquet(tmp.toString)
     if (f.exists(dst)) f.delete(dst, true)
     f.rename(tmp, dst)
     spark.catalog.refreshByPath(path)

@@ -9,7 +9,7 @@ import graft.SparkSpec
 
 /** Laws for the manifest-log snapshot table ([[Snapshots]]) and the
   * diff-driven materialized aggregates ([[IncrementalAgg]]): commit
-  * atomicity, time travel, snapshot isolation, copy-on-write carry-forward,
+  * atomicity, time travel, snapshot isolation, by-reference carry-forward,
   * manifest-side pruning soundness, retention GC, and the
   * incremental-equals-recompute law.
   */
@@ -45,7 +45,7 @@ class SnapshotSpec extends SparkSpec {
     Snapshots.append(spark, t, docs(10))
     val pinned = Snapshots.read(spark, t, Some(1))
     Snapshots.append(spark, t, docs(10, idFrom = 10))
-    Snapshots.deleteWhere(spark, t, col("doc_id") < 5)
+    Snapshots.deleteWhereMor(spark, t, col("doc_id") < 5)
     Snapshots.compact(spark, t)
     assert(ids(pinned) == (0L until 10L).toSet,
       "pinned frame must keep reading exactly its version's immutable files")
@@ -115,28 +115,26 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshots.appendIdempotent(spark, t, docs(10, idFrom = 10), "app", 1L).isEmpty)
   }
 
-  test("copy-on-write delete rewrites only stats-candidate files") {
-    val t = tmpDir("snap-cow")
+  test("a predicate delete marks vectors only in stats-candidate files") {
+    val t = tmpDir("snap-cand")
     Snapshots.create(spark, t)
     // three appends = three disjoint doc_id ranges = three file groups
     Snapshots.append(spark, t, docs(10).coalesce(1))
     Snapshots.append(spark, t, docs(10, idFrom = 10).coalesce(1))
     Snapshots.append(spark, t, docs(10, idFrom = 20).coalesce(1))
     val before = Snapshots.history(spark, t).head().getAs[Long]("n_files")
-    val (v, rewritten, untouched) =
-      Snapshots.deleteWhere(spark, t, col("doc_id") >= 20)
-    assert(v == 4)
-    assert(rewritten == 1 && untouched == before - 1,
-      s"only the [20,30) file may be rewritten: rewritten=$rewritten untouched=$untouched")
+    val st = Snapshots.deleteWhereMor(spark, t, col("doc_id") >= 20)
+    assert(st.version == 4 && st.rowsDeleted == 10)
+    assert(st.filesWithDv == 1 && st.filesUntouched == before - 1,
+      s"only the [20,30) file may gain a vector: $st")
+    assert(fileEntries(4, t).count(r => r.getAs[String]("dv_path") != null) == 1)
     assert(ids(Snapshots.read(spark, t)) == (0L until 20L).toSet)
     // time travel still sees the deleted rows
     assert(ids(Snapshots.read(spark, t, Some(3))) == (0L until 30L).toSet)
-    // carried-forward entries are the SAME files (paths unchanged)
-    val p3 = Snapshots.read(spark, t, Some(3)).filter(col("doc_id") < 20)
-      .select(input_file_name()).distinct().as[String].collect().toSet
-    val p4 = Snapshots.read(spark, t, Some(4)).filter(col("doc_id") < 20)
-      .select(input_file_name()).distinct().as[String].collect().toSet
-    assert(p3 == p4, "untouched files must be carried forward by reference")
+    // every entry is the SAME file (paths unchanged): the untouched files
+    // carry forward by reference and the candidate is marked, not rewritten
+    assert(Snapshots.dataFiles(spark, t, 3) == Snapshots.dataFiles(spark, t, 4),
+      "untouched files must be carried forward by reference")
   }
 
   test("schema evolution: new columns null-fill old files; schema travels with the version") {
@@ -222,7 +220,7 @@ class SnapshotSpec extends SparkSpec {
     assert(ids(Snapshots.readChangesSince(spark, t, cur).df) == (20L until 23L).toSet)
     Snapshots.commitCursor(cur, Snapshots.currentVersion(t).get)
     // a delete breaks insert-only lineage -> detected, full reprocess
-    Snapshots.deleteWhere(spark, t, col("doc_id") < 5)
+    Snapshots.deleteWhereMor(spark, t, col("doc_id") < 5)
     val r4 = Snapshots.readChangesSince(spark, t, cur)
     assert(r4.mode == "full" && ids(r4.df) == (5L until 23L).toSet)
   }
@@ -399,7 +397,7 @@ class SnapshotSpec extends SparkSpec {
     val d = Snapshots.diffAppended(spark, t, 1, 3).get
     assert(ids(d) == (10L until 30L).toSet)
     assert(Snapshots.diffAppended(spark, t, 3, 3).get.count() == 0)
-    Snapshots.deleteWhere(spark, t, col("doc_id") === 0)
+    Snapshots.deleteWhereMor(spark, t, col("doc_id") === 0)
     assert(Snapshots.diffAppended(spark, t, 3, 4).isEmpty,
       "a delete in the range must force the fallback signal")
   }
@@ -410,7 +408,8 @@ class SnapshotSpec extends SparkSpec {
     (0 until 5).foreach(i => Snapshots.append(spark, t, docs(10, idFrom = i * 10).coalesce(1)))
     val before = Snapshots.read(spark, t)
       .agg(count(lit(1)), sum(col("n_chars"))).head()
-    val v = Snapshots.compact(spark, t, targetRecordsPerFile = 1000)
+    val (v, folded, carried) = Snapshots.compact(spark, t, targetRecordsPerFile = 1000)
+    assert(folded == 5 && carried == 0, s"every file folds by default: $folded/$carried")
     assert(Snapshots.history(spark, t).head().getAs[Long]("n_files") == 1)
     val after = Snapshots.read(spark, t).agg(count(lit(1)), sum(col("n_chars"))).head()
     assert(before == after, "compaction must be row-for-row identical")
@@ -436,7 +435,7 @@ class SnapshotSpec extends SparkSpec {
     val before = Snapshots.scanPlan(spark, t, col("doc_id") >= 10 && col("doc_id") < 20)
     assert(before.filesScanned == before.filesTotal,
       "interleaved layout: no file can be skipped")
-    Snapshots.compact(spark, t, targetRecordsPerFile = 25, clusterBy = Seq(col("doc_id")))
+    Snapshots.compact(spark, t, targetRecordsPerFile = 25, clusterBySpec = "doc_id"): Unit
     val after = Snapshots.scanPlan(spark, t, col("doc_id") >= 10 && col("doc_id") < 20)
     assert(after.filesTotal >= 4, s"compaction target keeps ~4 files: ${after.filesTotal}")
     assert(after.filesScanned <= 2,
@@ -469,7 +468,7 @@ class SnapshotSpec extends SparkSpec {
 
     // a delete breaks insert-only lineage -> maintained from the CHANGELOG
     // (signed partials, cost ∝ churn), still exact
-    Snapshots.deleteWhere(spark, t, col("doc_id") % 5 === 0)
+    Snapshots.deleteWhereMor(spark, t, col("doc_id") % 5 === 0)
     val r3 = IncrementalAgg.refresh(spark, t, a, Seq("source"), Seq("n_chars"))
     assert(r3.mode == "changelog" && r3.tableVersion == 4)
     assert(asMap(IncrementalAgg.read(spark, a)) == asMap(recompute()))
@@ -583,13 +582,13 @@ class SnapshotSpec extends SparkSpec {
       ((0L until 30L).filterNot(_ % 3 == 1) ++ (100L until 105L)).toSet)
   }
 
-  test("rowChanges: per-commit changelog across append, MOR delete, COW delete, merge, compact") {
+  test("rowChanges: per-commit changelog across appends, two deletes, merge, compact") {
     val t = tmpDir("snap-cdf")
     Snapshots.create(spark, t)
     Snapshots.append(spark, t, docs(10).coalesce(1)) // v1
     Snapshots.append(spark, t, docs(10, idFrom = 10).coalesce(1)) // v2
     Snapshots.deleteWhereMor(spark, t, col("doc_id") % 3 === 0) // v3
-    Snapshots.deleteWhere(spark, t, col("doc_id") >= 15) // v4 (COW)
+    Snapshots.deleteWhereMor(spark, t, col("doc_id") >= 15) // v4: merges the vector
     val src = docs(3).withColumn("n_chars", lit(9999L))
     Snapshots.merge(spark, t, src, Seq("doc_id")) // v5: 0 re-inserts, 1+2 update
     Snapshots.compact(spark, t) // v6
@@ -605,7 +604,7 @@ class SnapshotSpec extends SparkSpec {
     val c3 = ch(2, 3)
     assert(idsBy(c3, "delete") == (0L until 20L).filter(_ % 3 == 0).toSet)
     assert(idsBy(c3, "insert").isEmpty)
-    // COW delete: already-vector-deleted rows (15, 18) must NOT re-delete
+    // second delete: already-vector-deleted rows (15, 18) must NOT re-delete
     val c4 = ch(3, 4)
     assert(idsBy(c4, "delete") == Set(16L, 17L, 19L), s"got ${idsBy(c4, "delete")}")
     // merge: update = delete old image + insert new image; fresh key inserts
@@ -704,7 +703,7 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshots.fastMinMax(spark, t, "no_such_col").isEmpty)
   }
 
-  test("compactSmallFiles folds only small and vector-bearing files; healthy files carry") {
+  test("compact folds only small and vector-bearing files; healthy files carry") {
     val t = tmpDir("snap-smallc")
     Snapshots.create(spark, t)
     Snapshots.append(spark, t, docs(2000).coalesce(1)) // the one healthy big file
@@ -715,7 +714,7 @@ class SnapshotSpec extends SparkSpec {
       .filter(col("version") === 1L).head().getAs[Long]("n_bytes")
     // vector the big file too: absorbed by the fold even though it's large
     Snapshots.deleteWhereMor(spark, t, col("doc_id") < 10)
-    val (v, folded, carriedN) = Snapshots.compactSmallFiles(spark, t, smallBytes = bigBytes / 2)
+    val (v, folded, carriedN) = Snapshots.compact(spark, t, smallBytes = bigBytes / 2)
     assert(folded == 5 && carriedN == 0,
       s"4 small + 1 vector-bearing fold, none carried: folded=$folded carried=$carriedN")
     assert(ids(Snapshots.read(spark, t)) ==
@@ -723,7 +722,7 @@ class SnapshotSpec extends SparkSpec {
     assert(fileEntries(v, t).forall(r => Option(r.getAs[String]("dv_path")).isEmpty),
       "the fold absorbs deletion vectors")
     // second pass: one healthy file, nothing foldable -> untouched, version unchanged
-    val (v2, folded2, carried2) = Snapshots.compactSmallFiles(spark, t, smallBytes = 10L)
+    val (v2, folded2, carried2) = Snapshots.compact(spark, t, smallBytes = 10L)
     assert(v2 == v && folded2 == 0 && carried2 >= 1)
     // a mixed table folds smalls and carries the big file BY REFERENCE
     val t2 = tmpDir("snap-smallc2")
@@ -735,7 +734,7 @@ class SnapshotSpec extends SparkSpec {
     val big2 = Snapshots.history(spark, t2)
       .filter(col("version") === 1L).head().getAs[Long]("n_bytes")
     val pathsBefore = fileEntries(4, t2).map(_.getAs[String]("path")).toSet
-    val (v3, folded3, carried3) = Snapshots.compactSmallFiles(spark, t2, smallBytes = big2 / 2)
+    val (v3, folded3, carried3) = Snapshots.compact(spark, t2, smallBytes = big2 / 2)
     assert(folded3 == 3 && carried3 == 1)
     val after = fileEntries(v3, t2).map(_.getAs[String]("path")).toSet
     assert(after.intersect(pathsBefore).size == 1, "the healthy file is the SAME path")
@@ -1085,7 +1084,7 @@ class SnapshotSpec extends SparkSpec {
       "clone reads the source's files in place, vectors applied")
     // clone-side mutations never touch the source
     Snapshots.append(spark, dst, docs(5, idFrom = 100))
-    Snapshots.deleteWhere(spark, dst, col("doc_id") >= 15 && col("doc_id") < 20)
+    Snapshots.deleteWhereMor(spark, dst, col("doc_id") >= 15 && col("doc_id") < 20)
     Snapshots.merge(spark, dst,
       docs(3, idFrom = 2).withColumn("n_chars", lit(4242L)), Seq("doc_id"))
     assert(ids(Snapshots.read(spark, dst)) ==
@@ -1102,6 +1101,24 @@ class SnapshotSpec extends SparkSpec {
     val absLeft = fileEntries(Snapshots.currentVersion(dst).get, dst)
       .count(_.getAs[String]("path").startsWith("/"))
     assert(absLeft == 0, "post-compact the clone references only its own files")
+  }
+
+  test("compact deep-copies a clone of a one-file, vector-free table") {
+    val src = tmpDir("snap-clone1-src")
+    val dst = tmpDir("snap-clone1-dst") + "/t"
+    Snapshots.create(spark, src)
+    Snapshots.append(spark, src, docs(20).coalesce(1))
+    Snapshots.shallowClone(spark, src, dst)
+    // one fitting, vector-free file, but the source's: not a no-op
+    val (v, folded, carried) = Snapshots.compact(spark, dst)
+    assert((v, folded, carried) == ((1L, 1L, 0L)))
+    val absLeft = fileEntries(v, dst).count(_.getAs[String]("path").startsWith("/"))
+    assert(absLeft == 0, "post-compact the clone references only its own files")
+    // retiring the source's files no longer reaches the clone
+    Snapshots.append(spark, src, docs(5, idFrom = 100).coalesce(1))
+    Snapshots.compact(spark, src)
+    Snapshots.expire(spark, src, keepLast = 1)
+    assert(ids(Snapshots.read(spark, dst)) == (0L until 20L).toSet)
   }
 
   test("row-changelog cursor stays incremental across deletes; resets only on overwrite") {
@@ -1148,13 +1165,15 @@ class SnapshotSpec extends SparkSpec {
         (3000 + i * 10).toLong until (3005 + i * 10).toLong)).toSet)
   }
 
-  test("copy-on-write delete applies vectors; merge skips vector-deleted rows") {
-    val t = tmpDir("snap-mor-cow")
+  test("a fold applies merged vectors; merge skips vector-deleted rows") {
+    val t = tmpDir("snap-mor-fold")
     Snapshots.create(spark, t)
     Snapshots.append(spark, t, docs(20).coalesce(1))
     Snapshots.deleteWhereMor(spark, t, col("doc_id") < 5)
-    // COW delete rewrites the file: the rewrite must apply the vector
-    Snapshots.deleteWhere(spark, t, col("doc_id") >= 18)
+    Snapshots.deleteWhereMor(spark, t, col("doc_id") >= 18)
+    // the fold rewrites the file: the rewrite must apply the merged vector
+    val (_, folded, _) = Snapshots.compact(spark, t)
+    assert(folded == 1)
     assert(ids(Snapshots.read(spark, t)) == (5L until 18L).toSet)
     assert(fileEntries(Snapshots.currentVersion(t).get, t)
       .forall(r => Option(r.getAs[String]("dv_path")).isEmpty))
@@ -1171,18 +1190,22 @@ class SnapshotSpec extends SparkSpec {
     assert(r.count() == 20 && r.filter(col("n_chars") === 7777L).count() == 8)
   }
 
-  test("deleteWhere keeps NULL-evaluating rows (SQL DELETE semantics); COW == MOR") {
+  test("a predicate delete keeps NULL-evaluating rows (SQL DELETE semantics), folded or not") {
     val data = Seq((1L, Some(10L)), (2L, None), (3L, Some(99L)), (4L, None))
       .toDF("doc_id", "score")
-    val t = tmpDir("snap-nulldel-cow")
-    val t2 = tmpDir("snap-nulldel-mor")
-    Seq(t, t2).foreach { p => Snapshots.create(spark, p); Snapshots.append(spark, p, data) }
-    Snapshots.deleteWhere(spark, t, col("score") > 50)
-    Snapshots.deleteWhereMor(spark, t2, col("score") > 50)
+    val t = tmpDir("snap-nulldel-mor")
+    Snapshots.create(spark, t)
+    Snapshots.append(spark, t, data)
+    val st = Snapshots.deleteWhereMor(spark, t, col("score") > 50)
+    assert(st.rowsDeleted == 1, s"only the row whose predicate is TRUE dies: $st")
     assert(ids(Snapshots.read(spark, t)) == Set(1L, 2L, 4L),
       "rows where the predicate evaluates to NULL must survive a DELETE")
-    assert(ids(Snapshots.read(spark, t)) == ids(Snapshots.read(spark, t2)),
-      "copy-on-write and merge-on-read deletes must agree on null semantics")
+    // the fold's rewritten, vector-free files agree with the vectors
+    Snapshots.compact(spark, t): Unit
+    assert(fileEntries(Snapshots.currentVersion(t).get, t)
+      .forall(r => Option(r.getAs[String]("dv_path")).isEmpty))
+    assert(ids(Snapshots.read(spark, t)) == Set(1L, 2L, 4L),
+      "a fold of the delete must keep the NULL-evaluating rows too")
   }
 
   test("pruning and keyed ops stay sound for long keys beyond double precision") {
@@ -1198,9 +1221,9 @@ class SnapshotSpec extends SparkSpec {
     val m = Snapshots.merge(spark, t,
       Seq((probe, 1L)).toDF("doc_id", "flag"), Seq("doc_id"))
     assert(m.rowsUpdated == 1, s"merge by a beyond-2^53 key must find its row: $m")
-    val (_, deleted, _) = Snapshots.deleteWhere(spark, t, col("doc_id") === (big + 1L))
-    assert(deleted >= 1 && Snapshots.read(spark, t).count() == 2,
-      "deleteWhere must rewrite the file holding the rounded key")
+    val st = Snapshots.deleteWhereMor(spark, t, col("doc_id") === (big + 1L))
+    assert(st.rowsDeleted == 1 && st.filesWithDv == 1 && Snapshots.read(spark, t).count() == 2,
+      s"the delete must mark the row in the file holding the rounded key: $st")
   }
 
   test("a merge commits over concurrent disjoint appends: every commit lands") {
@@ -1238,13 +1261,14 @@ class SnapshotSpec extends SparkSpec {
       if (once.compareAndSet(false, true))
         Snapshots.append(spark, t, docs(5, idFrom = 3).coalesce(1)): Unit
     try intercept[java.util.ConcurrentModificationException] {
-      Snapshots.deleteWhere(spark, t, col("doc_id") < 5)
+      Snapshots.deleteWhereMor(spark, t, col("doc_id") < 5)
     } finally Snapshots.preCommitHook = () => ()
     assert(Snapshots.currentVersion(t).contains(2L),
       "the conflicting delete must not commit; the append stands")
     assert(Snapshots.read(spark, t).count() == 15)
     // re-run against the refreshed base: sees BOTH files' matching rows
-    Snapshots.deleteWhere(spark, t, col("doc_id") < 5)
+    val rerun = Snapshots.deleteWhereMor(spark, t, col("doc_id") < 5)
+    assert(rerun.rowsDeleted == 7 && rerun.filesWithDv == 2, s"0-4 and 3-4: $rerun")
     assert(ids(Snapshots.read(spark, t)) == (5L until 10L).toSet)
 
     // an intervening NON-append never commutes, even when disjoint
@@ -1253,7 +1277,7 @@ class SnapshotSpec extends SparkSpec {
       if (once2.compareAndSet(false, true))
         Snapshots.deleteWhereMor(spark, t, col("doc_id") === 9L): Unit
     try intercept[java.util.ConcurrentModificationException] {
-      Snapshots.deleteWhere(spark, t, col("doc_id") === 5L)
+      Snapshots.deleteWhereMor(spark, t, col("doc_id") === 5L)
     } finally Snapshots.preCommitHook = () => ()
     assert(ids(Snapshots.read(spark, t)) == (5L until 9L).toSet)
   }
@@ -1267,7 +1291,7 @@ class SnapshotSpec extends SparkSpec {
       if (once.compareAndSet(false, true))
         Snapshots.append(spark, t, docs(5, idFrom = 500).coalesce(1)): Unit
     val (v, folded, _) =
-      try Snapshots.compactSmallFiles(spark, t, smallBytes = Long.MaxValue)
+      try Snapshots.compact(spark, t)
       finally Snapshots.preCommitHook = () => ()
     assert(v == 5L && folded == 3L, s"replace lands after the racing append: v=$v folded=$folded")
     assert(ids(Snapshots.read(spark, t)) ==
@@ -1275,7 +1299,7 @@ class SnapshotSpec extends SparkSpec {
         (500L until 505L)).toSet,
       "the racing append's rows survive the replace")
     // the appended small file just waits for the next maintenance round
-    val (_, folded2, _) = Snapshots.compactSmallFiles(spark, t, smallBytes = Long.MaxValue)
+    val (_, folded2, _) = Snapshots.compact(spark, t)
     assert(folded2 == 2L, s"compacted output + the raced-in file fold next round: $folded2")
   }
 
@@ -1329,8 +1353,7 @@ class SnapshotSpec extends SparkSpec {
       s"clustered append delta must prune: ${ap.filesScanned}/${ap.filesTotal}")
     assert(ids(ap.df) == (1010L until 1020L).toSet)
     // maintenance folds re-cluster by the recorded spec
-    val (_, folded, _) = Snapshots.compactSmallFiles(
-      spark, t, smallBytes = Long.MaxValue, targetRecordsPerFile = 25)
+    val (_, folded, _) = Snapshots.compact(spark, t, targetRecordsPerFile = 25)
     assert(folded >= 2)
     val m = plan(30, 40)
     assert(m.filesScanned <= 2, s"post-fold: ${m.filesScanned}/${m.filesTotal}")
@@ -1368,7 +1391,8 @@ class SnapshotSpec extends SparkSpec {
     // restore is idempotent at the current version
     assert(Snapshots.restore(spark, t, 4L) == 4L)
     // a version whose files expire reclaimed fails fast, pointer unmoved
-    Snapshots.compact(spark, t): Unit // v5 rewrites; v1 files become unreferenced...
+    // v5 splits the one file; v1 files become unreferenced...
+    Snapshots.compact(spark, t, targetRecordsPerFile = 5): Unit
     // dry run FIRST: reports the exact reclaim without touching anything
     val (dmDry, dfDry) = Snapshots.expire(spark, t, keepLast = 1, dryRun = true)
     assert(dmDry > 0 && dfDry > 0, s"dry run must report the pending reclaim: $dmDry/$dfDry")

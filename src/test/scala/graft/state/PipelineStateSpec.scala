@@ -112,9 +112,32 @@ class PipelineStateSpec extends SparkSpec {
     assert(byStatus == Map("d1" -> "processed", "d2" -> "processed", "d3" -> "failed"))
     // legacy JSON ledgers are still readable (format sniffed from part files)
     val jsonPath = tmpDir("state8j") + "/ledger.json"
-    val jsonLedger = new PipelineState(jsonPath, format = "json")
-    jsonLedger.save(spark, s2)
+    s2.write.json(jsonPath)
     assert(new PipelineState(jsonPath).load(spark).count() == 3)
+  }
+
+  test("a save that crashed between delete and rename loads its complete .tmp") {
+    val path = tmpDir("state9") + "/ledger"
+    val ledger = new PipelineState(path)
+    val s1 = ledger.markProcessed(spark, PipelineState.empty(spark), changed(("d1", "h1")))
+    ledger.save(spark, s1)
+    val s2 = ledger.markProcessed(spark, ledger.load(spark), changed(("d2", "h2")))
+    ledger.save(spark, s2)
+    // the crash window of save(): the new ledger is complete under .tmp
+    // (its _SUCCESS marker landed) and the old one is already deleted
+    val dst = java.nio.file.Paths.get(path)
+    val tmp = java.nio.file.Paths.get(path + ".tmp")
+    java.nio.file.Files.move(dst, tmp)
+    assert(java.nio.file.Files.exists(tmp.resolve("_SUCCESS")))
+    val loaded = ledger.load(spark).select("docId").as[String].collect().sorted
+    assert(loaded.toSeq == Seq("d1", "d2"), "the complete .tmp ledger must load, not an empty one")
+    assert(java.nio.file.Files.exists(dst) && !java.nio.file.Files.exists(tmp),
+      "the complete .tmp is promoted into place")
+    // an INCOMPLETE .tmp (no _SUCCESS: the write itself crashed) stays ignored
+    java.nio.file.Files.move(dst, tmp)
+    java.nio.file.Files.delete(tmp.resolve("_SUCCESS"))
+    assert(ledger.load(spark).count() == 0)
+    assert(!java.nio.file.Files.exists(dst))
   }
 
   test("J1 stays correct on the shuffle path (ledger past the broadcast ceiling)") {

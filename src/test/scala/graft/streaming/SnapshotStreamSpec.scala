@@ -96,7 +96,7 @@ class SnapshotStreamSpec extends SparkSpec {
       b => got.synchronized { got ++= b.select("doc_id").as[Long].collect() })
     assert(got.toSet == (0L until 20L).toSet, "one batch covered both append deltas")
     // a delete in the unconsumed range must fail the append-mode stream
-    Snapshots.deleteWhere(spark, t, col("doc_id") < 2): Unit
+    Snapshots.deleteWhereMor(spark, t, col("doc_id") < 2): Unit
     Snapshots.append(spark, t, docs(2, idFrom = 50).coalesce(1)): Unit
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       drain(SnapshotStream.reader(spark, t), ckpt)(_ => ())

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # End-to-end smoke of the snapshot-table CLI surface against real testdata:
 # create -> append -> merge-on-read delete -> manifest count -> changelog ->
+# compaction fold (absorbs the vector) ->
 # shallow clone -> keyed merge (merge-on-read: one vector, no rewrite) ->
 # maintain -> SQL over the planner-integrated view (and a
 # -D conf override reaching the CLI session) ->
@@ -44,9 +45,18 @@ PY
 
 G snapshot-create "$T"
 G snapshot-append "$T" "$W/docs.parquet"
-G snapshot-delete-mor "$T" "n_chars < 150"
+DL=$(G snapshot-delete "$T" "n_chars < 150")
+[[ "$DL" =~ (^|$'\n')version=2\ rows_deleted=[1-9][0-9]*\ files_with_dv=[1-9][0-9]*\  ]] \
+  || { echo "snapshot-delete: no version line with rows_deleted= and files_with_dv=: $DL"; exit 1; }
 G snapshot-count "$T"
 G snapshot-changes "$T" 0 2
+# every file under 1 MB or carrying a vector folds: the delete's vector is absorbed
+CM=$(G snapshot-compact "$T" 1000000)
+[[ "$CM" =~ (^|$'\n')version=3\ files_folded=[1-9][0-9]*\ files_carried=0($|$'\n') ]] \
+  || { echo "snapshot-compact: no version line with files_folded=: $CM"; exit 1; }
+# a non-numeric smallBytes (the old key-column form) is a usage error, exit 2
+RC=0; G snapshot-compact "$T" doc_id > /dev/null || RC=$?
+[[ $RC == 2 ]] || { echo "snapshot-compact <table> doc_id: exit $RC, want 2"; exit 1; }
 G snapshot-clone "$T" "$W/clone"
 # keyed merge: the matched rows gain one vector in the low file, the source
 # lands as one file group, and every pre-merge data file stays referenced
